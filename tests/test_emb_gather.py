@@ -13,6 +13,7 @@ import pandas as pd
 import pytest
 
 from tests.harness import normalize
+from upflow_spark import memo
 from upflow_spark.pipeline import similarity
 from upflow_spark.registry import QUERIES
 
@@ -26,7 +27,7 @@ def gather_vs_broadcast(spark, sf_dir):
     results: dict[str, dict[str, pd.DataFrame]] = {}
     orig = similarity.EMB_BROADCAST_MAX_BYTES
     try:
-        similarity._emb_cache.clear()
+        memo.clear()
         similarity.EMB_BROADCAST_MAX_BYTES = 1  # force every pack onto joins
         for key in ANN_KEYS:
             results.setdefault(key, {})["gather"] = normalize(
@@ -34,7 +35,7 @@ def gather_vs_broadcast(spark, sf_dir):
             )
     finally:
         similarity.EMB_BROADCAST_MAX_BYTES = orig
-        similarity._emb_cache.clear()
+        memo.clear()
     for key in ANN_KEYS:
         results[key]["broadcast"] = normalize(QUERIES[key](spark, sf_dir).toPandas())
     return results

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 from tests.harness import normalize
+from upflow_spark import memo
 from upflow_spark.pipeline import dedup
 from upflow_spark.registry import QUERIES
 
@@ -22,7 +23,7 @@ def grid_vs_broadcast(spark, sf_dir):
     results: dict[str, dict[str, pd.DataFrame]] = {}
     orig = dedup.GEMM_BROADCAST_MAX_BYTES
     try:
-        dedup._corpus_cache.clear()
+        memo.clear()
         dedup.GEMM_BROADCAST_MAX_BYTES = 1  # force every pack onto the grid
         for key in GEMM_KEYS:
             results.setdefault(key, {})["grid"] = normalize(
@@ -30,7 +31,7 @@ def grid_vs_broadcast(spark, sf_dir):
             )
     finally:
         dedup.GEMM_BROADCAST_MAX_BYTES = orig
-        dedup._corpus_cache.clear()
+        memo.clear()
     for key in GEMM_KEYS:
         results[key]["broadcast"] = normalize(QUERIES[key](spark, sf_dir).toPandas())
     return results

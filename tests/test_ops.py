@@ -763,9 +763,9 @@ def test_update_mode_emits_incremental_updates(spark):
         r["event_type"]: r["n_events"]
         for r in QUERIES["stream_update_mode"](spark, SF).collect()
     }
-    from upflow_spark.streaming.streams import update_mode_replica_path
+    from upflow_spark.memo import fixture_dir
 
-    dst = update_mode_replica_path(SF)
+    dst = fixture_dir(SF, "events", "upflow_stream_multi")
     schema = StructType(
         [StructField("event_id", LongType()), StructField("event_type", StringType())]
     )

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import pytest
 
+from upflow_spark import memo
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -101,7 +103,7 @@ def test_cc_star_fallback_equals_local_kernel(spark):
     from upflow_spark.registry import QUERIES
 
     want = sorted(map(tuple, QUERIES["dedup_semantic_cc"](spark, SF).collect()))
-    C._SEM_LABEL_CACHE.clear()  # labels are memoized per app+fixture
+    memo.clear()  # labels are memoized per app+fixture
     cap = C.CC_LOCAL_MAX_EDGES
     C.CC_LOCAL_MAX_EDGES = 0  # force the distributed star rounds
     try:
@@ -110,7 +112,7 @@ def test_cc_star_fallback_equals_local_kernel(spark):
         )
     finally:
         C.CC_LOCAL_MAX_EDGES = cap
-        C._SEM_LABEL_CACHE.clear()
+        memo.clear()
     assert got == want
 
 
@@ -123,9 +125,9 @@ def test_bpe_train_fallback_equals_local_kernel(spark):
     from upflow_spark.pipeline import bpe as B
     from upflow_spark.registry import QUERIES
 
-    B._bpe_learned_cache.clear()
+    memo.clear()
     want = sorted(map(tuple, QUERIES["tokenize_bpe_train"](spark, SF).collect()))
-    B._bpe_learned_cache.clear()
+    memo.clear()
     cap = B.BPE_TRAIN_LOCAL_MAX
     B.BPE_TRAIN_LOCAL_MAX = 0  # force the distributed round loop
     try:
@@ -134,7 +136,7 @@ def test_bpe_train_fallback_equals_local_kernel(spark):
         )
     finally:
         B.BPE_TRAIN_LOCAL_MAX = cap
-        B._bpe_learned_cache.clear()
+        memo.clear()
     assert got == want and len(got) == 16
 
 
@@ -146,9 +148,9 @@ def test_bpe_apply_fallback_equals_local_kernel(spark):
     from upflow_spark.pipeline import bpe as B
     from upflow_spark.registry import QUERIES
 
-    B._bpe_state_cache.clear()
+    memo.clear()
     want = sorted(map(tuple, QUERIES["tokenize_bpe_apply"](spark, SF).collect()))
-    B._bpe_state_cache.clear()
+    memo.clear()
     cap = B.BPE_APPLY_LOCAL_MAX
     B.BPE_APPLY_LOCAL_MAX = 0  # force the distributed window loop
     try:
@@ -157,7 +159,7 @@ def test_bpe_apply_fallback_equals_local_kernel(spark):
         )
     finally:
         B.BPE_APPLY_LOCAL_MAX = cap
-        B._bpe_state_cache.clear()
+        memo.clear()
     assert got == want
 
 

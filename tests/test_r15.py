@@ -7,14 +7,9 @@ from __future__ import annotations
 
 import inspect
 
+from upflow_spark import memo
+
 SF = "/root/testdata/sf0.001"
-
-
-def _clear_unigram_memos():
-    from upflow_spark.pipeline import unigram as U
-
-    U._uni_vocab_cache.clear()
-    U._uni_counts_cache.clear()
 
 
 def test_unigram_trainer_kernel_equals_distributed_loop(spark):
@@ -25,14 +20,14 @@ def test_unigram_trainer_kernel_equals_distributed_loop(spark):
     from upflow_spark.pipeline import unigram as U
     from upflow_spark.registry import QUERIES
 
-    _clear_unigram_memos()
+    memo.clear()
     want_top = sorted(
         map(tuple, QUERIES["tokenize_unigram_train"](spark, SF).collect())
     )
     want_vocab = sorted(
         map(tuple, QUERIES["tokenize_unigram_vocab_ids"](spark, SF).collect())
     )
-    _clear_unigram_memos()
+    memo.clear()
     cap = U.UNI_TRAIN_LOCAL_MAX
     U.UNI_TRAIN_LOCAL_MAX = 0  # force the distributed EM loop
     try:
@@ -47,7 +42,7 @@ def test_unigram_trainer_kernel_equals_distributed_loop(spark):
         )
     finally:
         U.UNI_TRAIN_LOCAL_MAX = cap
-        _clear_unigram_memos()
+        memo.clear()
     assert got_top == want_top
     assert got_vocab == want_vocab
 
@@ -109,7 +104,7 @@ def test_packed_corpus_fallback_equals_bounded_vocab(spark):
     from upflow_spark.registry import QUERIES
 
     def run():
-        D._corpus_cache.clear()
+        memo.clear()
         return sorted(
             map(tuple, QUERIES["dedup_containment"](spark, SF).collect())
         )
@@ -121,7 +116,7 @@ def test_packed_corpus_fallback_equals_bounded_vocab(spark):
         got = run()
     finally:
         D.VOCAB_BROADCAST_MAX_TERMS = cap
-        D._corpus_cache.clear()
+        memo.clear()
     assert got == want
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from upflow_spark.memo import memo, path_of
 from upflow_spark.session import ensure_conf
 
 TABLES = (
@@ -39,44 +40,18 @@ TABLES = (
 )
 
 
-def path_of(sf_dir: str, name: str) -> str:
-    return f"{sf_dir.rstrip('/')}/{name}.parquet"
-
-
-# (appId, sf_dir, table, file identity) -> DataFrame. Re-resolving a scan
-# costs ~80 ms per call on local[32] (read.parquet file listing + schema
-# + the events ts-normalization py4j chatter) — pure fixed overhead paid
-# by EVERY query invocation. A catalog resolves a table once and hands the
-# same immutable relation to every query; this memo is that catalog.
-# DataFrames are immutable plans, so reuse cannot change results; Catalyst
-# still prunes columns/pushes filters per consuming query. Keyed on file
-# identity so fixture regeneration invalidates, and on applicationId so a
-# restarted session never sees another JVM's plan (evicted on insert).
-_LOAD_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table, normalizing events.ts to timestamp_ntz µs."""
-    import os
+    """Load one fixture table, normalizing events.ts to timestamp_ntz µs.
 
+    Memoized: re-resolving a scan costs ~80 ms per call (file listing,
+    schema, the events ts-normalization py4j chatter), paid by every query.
+    A catalog resolves a table once and hands the same immutable relation to
+    every query; the memo is that catalog. Catalyst still prunes columns and
+    pushes filters per consuming query."""
     ensure_conf(spark)
-    try:
-        st = os.stat(path_of(sf_dir, name))
-        ident: tuple | None = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        # directory-style parquet or exotic path: fall through uncached
-        ident = None
-    if ident is not None:
-        key = (spark.sparkContext.applicationId, sf_dir, name, ident)
-        cached = _LOAD_CACHE.get(key)
-        if cached is not None:
-            return cached
-        for stale in [k for k in _LOAD_CACHE if k[0] != key[0] or k[1:3] == key[1:3]]:
-            del _LOAD_CACHE[stale]
-    df = _load_uncached(spark, sf_dir, name)
-    if ident is not None:
-        _LOAD_CACHE[key] = df
-    return df
+    return memo(
+        spark, sf_dir, name, f"load/{name}", lambda: _load_uncached(spark, sf_dir, name)
+    )
 
 
 def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

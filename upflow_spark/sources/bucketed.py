@@ -17,41 +17,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import memo
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 from upflow_spark.session import ensure_conf
 
 N_BUCKETS = 8
-_warehouse_ready: set[tuple[str, str]] = set()
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write orders+lineitem bucketed by orderkey once per (session, sf)."""
+    """Write orders+lineitem bucketed by orderkey once per session+fixture."""
     ensure_conf(spark)
-    key = (id(spark), sf_dir)
+    return memo(
+        spark, sf_dir, ("orders", "lineitem"), "bucketed_tables",
+        lambda: _write_bucketed(spark, sf_dir),
+    )
+
+
+def _write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     o_name, l_name = "upflow_orders_bkt", "upflow_lineitem_bkt"
-    if key not in _warehouse_ready:
-        spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-        loc = tempfile.mkdtemp(prefix="upflow_bkt_")
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-        li = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        )
-        (
-            o.write.mode("overwrite")
-            .option("path", f"{loc}/orders")
-            .bucketBy(N_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(o_name)
-        )
-        (
-            li.write.mode("overwrite")
-            .option("path", f"{loc}/lineitem")
-            .bucketBy(N_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(l_name)
-        )
-        _warehouse_ready.add(key)
+    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+    loc = tempfile.mkdtemp(prefix="upflow_bkt_")
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    (
+        o.write.mode("overwrite")
+        .option("path", f"{loc}/orders")
+        .bucketBy(N_BUCKETS, "o_orderkey")
+        .sortBy("o_orderkey")
+        .saveAsTable(o_name)
+    )
+    (
+        li.write.mode("overwrite")
+        .option("path", f"{loc}/lineitem")
+        .bucketBy(N_BUCKETS, "l_orderkey")
+        .sortBy("l_orderkey")
+        .saveAsTable(l_name)
+    )
     return o_name, l_name
 
 

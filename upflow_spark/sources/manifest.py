@@ -17,12 +17,12 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import fixture_dir, memo
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 
@@ -37,12 +37,8 @@ def _work_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     (no cross-session write race) + fixture identity (regeneration gets a
     fresh dir); every write below uses mode("overwrite"), so re-invocations
     reuse the same path instead of multiplying it."""
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    name = (
-        f"upflow_{kind}_{spark.sparkContext.applicationId}_"
-        f"{st.st_mtime_ns}_{st.st_size}"
-    )
-    path = os.path.join(tempfile.gettempdir(), name)
+    app = spark.sparkContext.applicationId
+    path = fixture_dir(sf_dir, "orders", f"upflow_{kind}_{app}")
     if path not in _WORK_DIRS:
         _WORK_DIRS.add(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
@@ -543,22 +539,19 @@ def scan_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_snapshot_layouts: dict = {}
-
-
 def _snapshot_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    return memo(
+        spark, sf_dir, "orders", "snapshot_layout",
+        lambda: _build_snapshot_layout(spark, sf_dir),
+    )
+
+
+def _build_snapshot_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per session+fixture — the writes are overwrite-idempotent
     but cost ~6 jobs) the v1/v2 copy-on-write snapshot layout + versioned
     manifest shared by scan_snapshot_asof and scan_snapshot_incremental_read.
     Returns (data_dir, manifest_path)."""
     import os
-
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if memo_key in _snapshot_layouts:
-        return _snapshot_layouts[memo_key]
-    for stale in [k for k in _snapshot_layouts if k != memo_key]:
-        _snapshot_layouts.pop(stale)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -652,7 +645,6 @@ def _snapshot_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
     man_path = base + "/manifest"
     manifest.write.mode("overwrite").parquet(man_path)
-    _snapshot_layouts[memo_key] = (data_dir, man_path)
     return data_dir, man_path
 
 
@@ -891,19 +883,16 @@ def scan_delete_vectors_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_mor_delete_paths: dict = {}
-
-
 def _mor_deletes(spark: SparkSession, sf_dir: str) -> str:
+    return memo(
+        spark, sf_dir, "orders", "mor_deletes",
+        lambda: _build_mor_deletes(spark, sf_dir),
+    )
+
+
+def _build_mor_deletes(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+fixture) the two position-delete commits as
     commit-partitioned parquet beside the snapshot layout's gen-1 data."""
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if memo_key in _mor_delete_paths:
-        return _mor_delete_paths[memo_key]
-    for stale in [k for k in _mor_delete_paths if k != memo_key]:
-        _mor_delete_paths.pop(stale)
-
     o = load(spark, sf_dir, "orders").select("o_orderkey")
     mx = int(o.agg(F.max("o_orderkey")).collect()[0][0])
     step = (mx + N_BUCKETS) // N_BUCKETS
@@ -920,7 +909,6 @@ def _mor_deletes(spark: SparkSession, sf_dir: str) -> str:
     ).select("o_orderkey", bucket, F.lit(2).alias("cmt"))
     path = _work_dir(spark, sf_dir, "snapshot") + "/deletes"
     d1.unionByName(d2).write.mode("overwrite").partitionBy("cmt").parquet(path)
-    _mor_delete_paths[memo_key] = path
     return path
 
 
@@ -1165,20 +1153,17 @@ def scan_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return row1.unionByName(row2)
 
 
-_pe_layouts: dict = {}
-
-
 def _pe_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    return memo(
+        spark, sf_dir, "orders", "partition_evolution_layout",
+        lambda: _build_pe_layout(spark, sf_dir),
+    )
+
+
+def _build_pe_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write (once per session+fixture) the two partition-spec generations:
     older orders under spec v1 = (y), newer under spec v2 = (y, mo); one
     file per partition (repartition on the partition columns)."""
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if memo_key in _pe_layouts:
-        return _pe_layouts[memo_key]
-    for stale in [k for k in _pe_layouts if k != memo_key]:
-        _pe_layouts.pop(stale)
-
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderdate",
@@ -1195,7 +1180,6 @@ def _pe_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     o.filter(F.col("o_orderkey") > mid).repartition("y", "mo").write.mode(
         "overwrite"
     ).partitionBy("y", "mo").parquet(d2)
-    _pe_layouts[memo_key] = (d1, d2)
     return d1, d2
 
 
@@ -1404,20 +1388,18 @@ def scan_time_travel_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-_rollback_manifests: dict = {}
+def _rollback_manifest(spark: SparkSession, sf_dir: str, man_path: str) -> str:
+    return memo(
+        spark, sf_dir, "orders", "rollback_manifest",
+        lambda: _build_rollback_manifest(spark, sf_dir, man_path),
+    )
 
 
-def _rollback_manifest(
+def _build_rollback_manifest(
     spark: SparkSession, sf_dir: str, man_path: str
 ) -> str:
     """Append-only rollback: write (once per session+fixture) a manifest
     file carrying v1's entries re-stamped as version 3."""
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if memo_key in _rollback_manifests:
-        return _rollback_manifests[memo_key]
-    for stale in [k for k in _rollback_manifests if k != memo_key]:
-        _rollback_manifests.pop(stale)
     man = spark.read.parquet(man_path)
     path = _work_dir(spark, sf_dir, "snapshot") + "/manifest_rollback"
     (
@@ -1429,17 +1411,20 @@ def _rollback_manifest(
         .write.mode("overwrite")
         .parquet(path)
     )
-    _rollback_manifests[memo_key] = path
     return path
 
 
 # ---------------------------------------------------------------------------
 # Cross-table atomic snapshot commit (VERDICT r11 item 6)
 
-_multisnap_layouts: dict = {}
-
-
 def _multisnap_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    return memo(
+        spark, sf_dir, ("orders", "lineitem"), "multisnap_layout",
+        lambda: _build_multisnap_layout(spark, sf_dir),
+    )
+
+
+def _build_multisnap_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per session+fixture) the TWO-RELATION versioned layout:
     orders and lineitem co-bucketed on the order key with the same bucket
     width, one shared manifest table (version, rel, gen, bucket). Commit 2
@@ -1448,13 +1433,6 @@ def _multisnap_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     rewrites only the touched buckets of each relation into gen-2 files and
     lands both relations' manifest entries in ONE write, so no reader can
     observe the order gone while its lineitems survive."""
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if memo_key in _multisnap_layouts:
-        return _multisnap_layouts[memo_key]
-    for stale in [k for k in _multisnap_layouts if k != memo_key]:
-        _multisnap_layouts.pop(stale)
-
     base = _work_dir(spark, sf_dir, "multisnap")
     data_dir = base + "/data"
     man_path = base + "/manifest"
@@ -1526,7 +1504,6 @@ def _multisnap_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .unionByName(g2.select(F.lit(2).alias("version"), "rel", "gen", "bucket"))
     )
     manifest.write.mode("overwrite").parquet(man_path)
-    _multisnap_layouts[memo_key] = (data_dir, man_path)
     return data_dir, man_path
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import memo
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 
@@ -112,21 +113,16 @@ def scan_nested_struct_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_nested_layouts: dict = {}
-
-
 def _nested_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+fixture) the struct-columned orders twin."""
-    import os
+    return memo(
+        spark, sf_dir, "orders", "nested_layout", lambda: _write_nested(spark, sf_dir)
+    )
 
+
+def _write_nested(spark: SparkSession, sf_dir: str) -> str:
     from upflow_spark.sources.manifest import _work_dir
 
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
-    if memo_key in _nested_layouts:
-        return _nested_layouts[memo_key]
-    for stale in [k for k in _nested_layouts if k != memo_key]:
-        _nested_layouts.pop(stale)
     o = load(spark, sf_dir, "orders")
     path = _work_dir(spark, sf_dir, "nested") + "/orders_nested"
     o.select(
@@ -141,5 +137,4 @@ def _nested_layout(spark: SparkSession, sf_dir: str) -> str:
             F.col("o_orderdate").alias("odate"),
         ).alias("fin"),
     ).write.mode("overwrite").parquet(path)
-    _nested_layouts[memo_key] = path
     return path

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from upflow_spark.io import load, path_of
+from upflow_spark.memo import fixture_dir
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 from upflow_spark.session import ensure_conf
@@ -463,24 +464,6 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(key, prev)
 
 
-def update_mode_replica_path(sf_dir: str) -> str:
-    """Cache path for stream_update_mode's 4-file events replica.
-
-    Keyed on sf basename + source file identity (mtime_ns + size): fixture
-    regeneration between rounds used to leave a stale replica keyed only on
-    the basename, silently replaying old events (ADVICE r5). Shared with
-    tests so they probe the same replica the key built.
-    """
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"upflow_stream_multi_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{st.st_mtime_ns}_{st.st_size}",
-    )
-
-
 @query(
     "stream_update_mode",
     oracle="""
@@ -508,7 +491,7 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    dst = update_mode_replica_path(sf_dir)
+    dst = fixture_dir(sf_dir, "events", "upflow_stream_multi")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         (
             load(spark, sf_dir, "events")
@@ -533,18 +516,31 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emitted.groupBy("event_type").agg(F.max("n_events").alias("n_events"))
 
 
-def docs_wave_replica_path(sf_dir: str) -> str:
-    """Cache path for stream_dedup_incremental's 4-wave documents replica
-    (same source-identity keying as update_mode_replica_path, so fixture
-    regeneration invalidates it)."""
-    import os
+def _pin_wave_order(dst: str) -> None:
+    """Restamp a range-partitioned replica's part files so a file-stream
+    replay reads them in wave order.
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"upflow_docs_waves_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{st.st_mtime_ns}_{st.st_size}",
-    )
+    FileStreamSource orders micro-batches by file mtime, and one parquet
+    job stamps every part file with the SAME mtime — the tie-break is
+    listing order, i.e. arbitrary, and a wave classified before its
+    predecessors flips results both ways (observed at sf0.1). Range
+    partitions are ascending, so part-file NAME order == wave order:
+    restamp mtimes 2 s apart in that order. Callers run this on EVERY call,
+    not only when the replica is created: a crash between the parquet
+    job's _SUCCESS and os.utime would otherwise leave a permanently cached
+    replica with tied mtimes. Stamps are all in the PAST (base = now - 2n)
+    so no file is ever dated in the future. Only ever applied to a replica
+    this package wrote, never to a source fixture."""
+    import os
+    import time
+
+    parts = sorted(p for p in os.listdir(dst) if p.startswith("part-"))
+    mtimes = [os.stat(os.path.join(dst, p)).st_mtime for p in parts]
+    if any(b <= a for a, b in zip(mtimes, mtimes[1:])):
+        base = time.time() - 2.0 * len(parts)
+        for i, p in enumerate(parts):
+            t = base + 2.0 * i
+            os.utime(os.path.join(dst, p), (t, t))
 
 
 @query(
@@ -600,7 +596,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from upflow_spark.io import load
 
     ensure_conf(spark)
-    dst = docs_wave_replica_path(sf_dir)
+    dst = fixture_dir(sf_dir, "documents", "upflow_docs_waves")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         (
             load(spark, sf_dir, "documents")
@@ -614,28 +610,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(dst)
         )
-    # FileStreamSource orders micro-batches by file mtime, and one parquet
-    # job stamps every part file with the SAME mtime — the tie-break is
-    # listing order, i.e. arbitrary, and a wave classified before its
-    # predecessors flips near_dup/new both ways (observed at sf0.1). Range
-    # partitions are ascending, so part-file NAME order == wave order:
-    # restamp mtimes 2 s apart in that order to pin the replay sequence.
-    # The check-and-restamp runs on EVERY call, not only when the replica
-    # is created (r8 ADVICE): a crash between the parquet job's _SUCCESS
-    # and os.utime would otherwise leave a permanently cached replica with
-    # tied mtimes and nondeterministic replay. Stamps are all in the PAST
-    # (base = now - 2n) so no file is ever dated in the future. The
-    # mutation target is this repo-owned /tmp replica ONLY — never the
-    # read-only source fixture under sf_dir.
-    import time as _time
-
-    parts = sorted(p for p in os.listdir(dst) if p.startswith("part-"))
-    mtimes = [os.stat(os.path.join(dst, p)).st_mtime for p in parts]
-    if any(b <= a for a, b in zip(mtimes, mtimes[1:])):
-        base = _time.time() - 2.0 * len(parts)
-        for i, p in enumerate(parts):
-            t = base + 2.0 * i
-            os.utime(os.path.join(dst, p), (t, t))
+    _pin_wave_order(dst)
 
     work = tempfile.mkdtemp(prefix="upflow_incdedup_")
     idx_dir = os.path.join(work, "digest_index")
@@ -713,19 +688,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
-def emb_wave_replica_path(sf_dir: str) -> str:
-    """Cache path for stream_emb_index_ingest's 4-wave embeddings replica
-    (source-identity keyed, as docs_wave_replica_path)."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"upflow_emb_waves_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{st.st_mtime_ns}_{st.st_size}",
-    )
-
-
 def _ensure_emb_wave_replica(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per fixture identity) the 4-wave embeddings replica and
     pin its part-file mtimes to wave order (the text twin's restamp — one
@@ -734,9 +696,8 @@ def _ensure_emb_wave_replica(spark: SparkSession, sf_dir: str) -> str:
     stream_pq_index_append; replica is repo-owned under /tmp, never the
     fixture."""
     import os
-    import time as _time
 
-    dst = emb_wave_replica_path(sf_dir)
+    dst = fixture_dir(sf_dir, "embeddings", "upflow_emb_waves")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         (
             load(spark, sf_dir, "embeddings")
@@ -750,13 +711,7 @@ def _ensure_emb_wave_replica(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(dst)
         )
-    parts = sorted(p for p in os.listdir(dst) if p.startswith("part-"))
-    mtimes = [os.stat(os.path.join(dst, p)).st_mtime for p in parts]
-    if any(b <= a for a, b in zip(mtimes, mtimes[1:])):
-        base = _time.time() - 2.0 * len(parts)
-        for i, p in enumerate(parts):
-            t = base + 2.0 * i
-            os.utime(os.path.join(dst, p), (t, t))
+    _pin_wave_order(dst)
     return dst
 
 
@@ -1518,19 +1473,6 @@ FROM st{v}""")
     return head + "," + ",".join(states) + "\n" + "\nUNION ALL\n".join(rows)
 
 
-def snapcdc_wave_replica_path(sf_dir: str) -> str:
-    """Cache path for the 3-wave changelog replica (fixture-identity keyed,
-    as docs_wave_replica_path)."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"upflow_snapcdc_waves_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{st.st_mtime_ns}_{st.st_size}",
-    )
-
-
 @query("stream_snapshot_cdc_apply", oracle=_snapcdc_oracle())
 def stream_snapshot_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING WRITER for the versioned-snapshot chain — the missing
@@ -1560,12 +1502,11 @@ def stream_snapshot_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays a constant-cost AS-OF read.
     """
     import os
-    import time as _time
 
     from upflow_spark.sources.manifest import N_BUCKETS, SNAP_CHANGE_FRACTION
 
     ensure_conf(spark)
-    dst = snapcdc_wave_replica_path(sf_dir)
+    dst = fixture_dir(sf_dir, "orders", "upflow_snapcdc_waves")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
         mx = int(o.agg(F.max("o_orderkey")).collect()[0][0])
@@ -1606,13 +1547,7 @@ def stream_snapshot_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(dst)
     # pin replay order to wave order (see stream_dedup_incremental)
-    parts = sorted(p for p in os.listdir(dst) if p.startswith("part-"))
-    mtimes = [os.stat(os.path.join(dst, p)).st_mtime for p in parts]
-    if any(b <= a for a, b in zip(mtimes, mtimes[1:])):
-        base_t = _time.time() - 2.0 * len(parts)
-        for i, p in enumerate(parts):
-            t = base_t + 2.0 * i
-            os.utime(os.path.join(dst, p), (t, t))
+    _pin_wave_order(dst)
 
     # reuse one per-(session, fixture) dir with atexit cleanup instead of a
     # fresh data-sized mkdtemp per invocation (ADVICE r11 — bench sweeps
@@ -1753,19 +1688,6 @@ RX_CRASH_WAVE = 2
 _restart_log: list = []
 
 
-def restartx_wave_replica_path(sf_dir: str) -> str:
-    """Cache path for the 4-wave restart-proof replica (fixture-identity
-    keyed, as snapcdc_wave_replica_path)."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"upflow_restartx_waves_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{st.st_mtime_ns}_{st.st_size}",
-    )
-
-
 @query(
     "stream_restart_exactly_once",
     oracle=f"""
@@ -1799,10 +1721,9 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute, never duplicates.
     """
     import os
-    import time as _time
 
     ensure_conf(spark)
-    dst = restartx_wave_replica_path(sf_dir)
+    dst = fixture_dir(sf_dir, "orders", "upflow_restartx_waves")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
         o.select(
@@ -1813,13 +1734,7 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst
         )
     # pin replay order to wave order (FileStreamSource mtime tie-break)
-    parts = sorted(p for p in os.listdir(dst) if p.startswith("part-"))
-    mtimes = [os.stat(os.path.join(dst, p)).st_mtime for p in parts]
-    if any(b <= a for a, b in zip(mtimes, mtimes[1:])):
-        base_t = _time.time() - 2.0 * len(parts)
-        for i, p in enumerate(parts):
-            t = base_t + 2.0 * i
-            os.utime(os.path.join(dst, p), (t, t))
+    _pin_wave_order(dst)
 
     from upflow_spark.sources.manifest import _work_dir
 
