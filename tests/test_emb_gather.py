@@ -1,5 +1,5 @@
 """Join-gather fallback equivalence for the packed-embedding index:
-forcing the packed (vec_ids, matrix) operand past EMB_BROADCAST_MAX_BYTES
+forcing the packed (vec_ids, matrix) operand past BROADCAST_MAX_BYTES
 must route the three ANN-verify keys through the shuffle-gather path
 (candidate-pair vectors attached by two equi-joins) and produce
 BYTE-IDENTICAL results as the broadcast path — path selection is a memory
@@ -12,8 +12,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from tests.conftest import forced
 from tests.harness import normalize
-from upflow_spark import memo
 from upflow_spark.pipeline import similarity
 from upflow_spark.registry import QUERIES
 
@@ -25,17 +25,11 @@ def gather_vs_broadcast(spark, sf_dir):
     """Run each ANN key once per path, packed-matrix cache cleared around
     the ceiling flip (the cache key does not include the ceiling)."""
     results: dict[str, dict[str, pd.DataFrame]] = {}
-    orig = similarity.EMB_BROADCAST_MAX_BYTES
-    try:
-        memo.clear()
-        similarity.EMB_BROADCAST_MAX_BYTES = 1  # force every pack onto joins
+    with forced("BROADCAST_MAX_BYTES"):  # every pack onto joins
         for key in ANN_KEYS:
             results.setdefault(key, {})["gather"] = normalize(
                 QUERIES[key](spark, sf_dir).toPandas()
             )
-    finally:
-        similarity.EMB_BROADCAST_MAX_BYTES = orig
-        memo.clear()
     for key in ANN_KEYS:
         results[key]["broadcast"] = normalize(QUERIES[key](spark, sf_dir).toPandas())
     return results
@@ -57,16 +51,12 @@ def test_gather_path_was_actually_selected(spark, sf_dir):
     from upflow_spark.io import load
     from upflow_spark.pipeline.similarity import _dbl
 
-    orig = similarity.EMB_BROADCAST_MAX_BYTES
-    try:
-        similarity.EMB_BROADCAST_MAX_BYTES = 1
+    with forced("BROADCAST_MAX_BYTES"):
         e = load(spark, sf_dir, "embeddings").select(
             "vec_id", _dbl("embedding").alias("emb")
         )
         bc = similarity.packed_embeddings(spark, e)
-        assert isinstance(bc, tuple) and bc[0] == "join"
-    finally:
-        similarity.EMB_BROADCAST_MAX_BYTES = orig
+    assert isinstance(bc, tuple) and bc[0] == "join"
 
 
 def test_gather_raises_on_non_closed_candidates(spark, sf_dir):

@@ -9,8 +9,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from tests.conftest import forced
 from tests.harness import normalize
-from upflow_spark import memo
 from upflow_spark.pipeline import dedup
 from upflow_spark.registry import QUERIES
 
@@ -21,17 +21,11 @@ GEMM_KEYS = ["dedup_ngram_jaccard", "dedup_containment", "text_knn_jaccard_docs"
 def grid_vs_broadcast(spark, sf_dir):
     """Run each GEMM key once per path, caches cleared around the flip."""
     results: dict[str, dict[str, pd.DataFrame]] = {}
-    orig = dedup.GEMM_BROADCAST_MAX_BYTES
-    try:
-        memo.clear()
-        dedup.GEMM_BROADCAST_MAX_BYTES = 1  # force every pack onto the grid
+    with forced("BROADCAST_MAX_BYTES"):  # every pack onto the grid
         for key in GEMM_KEYS:
             results.setdefault(key, {})["grid"] = normalize(
                 QUERIES[key](spark, sf_dir).toPandas()
             )
-    finally:
-        dedup.GEMM_BROADCAST_MAX_BYTES = orig
-        memo.clear()
     for key in GEMM_KEYS:
         results[key]["broadcast"] = normalize(QUERIES[key](spark, sf_dir).toPandas())
     return results
@@ -53,16 +47,12 @@ def test_grid_path_was_actually_selected(spark, sf_dir):
     from upflow_spark.io import load
     from upflow_spark.pipeline.text import tokens_col
 
-    orig = dedup.GEMM_BROADCAST_MAX_BYTES
-    try:
-        dedup.GEMM_BROADCAST_MAX_BYTES = 1
+    with forced("BROADCAST_MAX_BYTES"):
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", F.array_distinct(tokens_col()).alias("terms")
         )
         _, _, bc = dedup._packed_corpus(spark, docs)
-        assert isinstance(bc, tuple) and bc[0] == "grid"
-    finally:
-        dedup.GEMM_BROADCAST_MAX_BYTES = orig
+    assert isinstance(bc, tuple) and bc[0] == "grid"
 
 
 def test_large_vocab_pack_never_collects(spark):
@@ -94,7 +84,6 @@ def test_large_vocab_pack_never_collects(spark):
             ).alias("terms"),
         )
     )
-    orig_ceiling = dedup.GEMM_BROADCAST_MAX_BYTES
     orig_collect = DataFrame.collect
 
     def no_collect(self):
@@ -102,13 +91,12 @@ def test_large_vocab_pack_never_collects(spark):
             "driver-side collect during open-vocab pack (the r7 scale flag)"
         )
 
-    try:
-        dedup.GEMM_BROADCAST_MAX_BYTES = 1
+    with forced("BROADCAST_MAX_BYTES"):
         DataFrame.collect = no_collect
-        docs_ids, vocab_ids, bc = dedup._packed_corpus(spark, docs)
-    finally:
-        DataFrame.collect = orig_collect
-        dedup.GEMM_BROADCAST_MAX_BYTES = orig_ceiling
+        try:
+            docs_ids, vocab_ids, bc = dedup._packed_corpus(spark, docs)
+        finally:
+            DataFrame.collect = orig_collect
     assert isinstance(bc, tuple) and bc[0] == "grid"
     n_vocab = bc[2]
     assert n_vocab == 2000 * 10 + 1

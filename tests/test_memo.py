@@ -10,6 +10,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
+from tests.conftest import forced
 from upflow_spark import memo
 from upflow_spark.registry import QUERIES
 
@@ -96,11 +97,7 @@ def test_packed_corpus_null_terms_identical_across_vocab_ceiling(spark):
         }
 
     want = terms_by_doc()
-    cap = D.VOCAB_BROADCAST_MAX_TERMS
-    D.VOCAB_BROADCAST_MAX_TERMS = 0  # force the distributed id path
-    try:
+    with forced("VOCAB_BROADCAST_MAX_TERMS"):
         got = terms_by_doc()
-    finally:
-        D.VOCAB_BROADCAST_MAX_TERMS = cap
     assert want == {1: ["a", "b"], 2: [], 3: ["b", "c"], 4: []}
     assert got == want

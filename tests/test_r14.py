@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from upflow_spark import memo
+from tests.conftest import forced
 
 SF = "/root/testdata/sf0.001"
 
@@ -55,42 +55,32 @@ def test_weighted_verify_fallback_equals_broadcast(spark):
     fallback (past the WVER_BCAST_DOCS broadcast ceiling) must produce the
     EXACT report the capped-broadcast map-side verify produces — forcing
     the cap to 0 routes every doc through the fallback."""
-    from upflow_spark.pipeline import minhash_sql as M
     from upflow_spark.registry import QUERIES
 
     want = sorted(
         map(tuple, QUERIES["dedup_minhash_weighted"](spark, SF).collect())
     )
-    cap = M.WVER_BCAST_DOCS
-    M.WVER_BCAST_DOCS = 0  # force the distributed fallback
-    try:
+    with forced("WVER_BCAST_DOCS"):
         got = sorted(
             map(tuple, QUERIES["dedup_minhash_weighted"](spark, SF).collect())
         )
-    finally:
-        M.WVER_BCAST_DOCS = cap
     assert got == want
 
 
 def test_cosine_grid_fallback_equals_broadcast(spark):
-    """dedup_embedding_cosine (r14): past GEMM_BROADCAST_MAX_BYTES the
+    """dedup_embedding_cosine (r14): past BROADCAST_MAX_BYTES the
     cosine kernel runs over the block-row grid instead of a broadcast B
     operand — forcing the ceiling to 0 must leave the pair relation
     byte-identical (same dim-sequential float64 accumulation per cell)."""
-    from upflow_spark.pipeline import dedup as D
     from upflow_spark.registry import QUERIES
 
     want = sorted(
         map(tuple, QUERIES["dedup_embedding_cosine"](spark, SF).collect())
     )
-    cap = D.GEMM_BROADCAST_MAX_BYTES
-    D.GEMM_BROADCAST_MAX_BYTES = 0  # force the grid path
-    try:
+    with forced("BROADCAST_MAX_BYTES"):
         got = sorted(
             map(tuple, QUERIES["dedup_embedding_cosine"](spark, SF).collect())
         )
-    finally:
-        D.GEMM_BROADCAST_MAX_BYTES = cap
     assert got == want and len(got) == 66
 
 
@@ -99,44 +89,28 @@ def test_cc_star_fallback_equals_local_kernel(spark):
     star alternation must produce the EXACT label relation the bounded
     single-task kernel produces — forcing the ceiling to 0 routes the
     fixpoint through the star loop."""
-    from upflow_spark.pipeline import cluster as C
     from upflow_spark.registry import QUERIES
 
     want = sorted(map(tuple, QUERIES["dedup_semantic_cc"](spark, SF).collect()))
-    memo.clear()  # labels are memoized per app+fixture
-    cap = C.CC_LOCAL_MAX_EDGES
-    C.CC_LOCAL_MAX_EDGES = 0  # force the distributed star rounds
-    try:
+    with forced("CC_LOCAL_MAX_EDGES"):
         got = sorted(
             map(tuple, QUERIES["dedup_semantic_cc"](spark, SF).collect())
         )
-    finally:
-        C.CC_LOCAL_MAX_EDGES = cap
-        memo.clear()
     assert got == want
 
 
 def test_bpe_train_fallback_equals_local_kernel(spark):
-    """tokenize_bpe_train (r14): past BPE_TRAIN_LOCAL_MAX the distributed
+    """tokenize_bpe_train (r14): past TRAIN_LOCAL_MAX the distributed
     round loop must learn the EXACT merge table the bounded single-task
     kernel learns — forcing the ceiling to 0 routes training through the
-    distributed rounds (the learned-merge memo is cleared around both
-    runs; the oracle separately pins the dynamics)."""
-    from upflow_spark.pipeline import bpe as B
+    distributed rounds (the oracle separately pins the dynamics)."""
     from upflow_spark.registry import QUERIES
 
-    memo.clear()
     want = sorted(map(tuple, QUERIES["tokenize_bpe_train"](spark, SF).collect()))
-    memo.clear()
-    cap = B.BPE_TRAIN_LOCAL_MAX
-    B.BPE_TRAIN_LOCAL_MAX = 0  # force the distributed round loop
-    try:
+    with forced("TRAIN_LOCAL_MAX"):
         got = sorted(
             map(tuple, QUERIES["tokenize_bpe_train"](spark, SF).collect())
         )
-    finally:
-        B.BPE_TRAIN_LOCAL_MAX = cap
-        memo.clear()
     assert got == want and len(got) == 16
 
 
@@ -144,22 +118,14 @@ def test_bpe_apply_fallback_equals_local_kernel(spark):
     """_run_merge_loop (r14): past BPE_APPLY_LOCAL_MAX the distributed
     window loop must encode the EXACT state the bounded single-task
     kernel encodes — forcing the ceiling to 0 routes the apply through
-    the window rounds (the state memo is cleared around both runs)."""
-    from upflow_spark.pipeline import bpe as B
+    the window rounds."""
     from upflow_spark.registry import QUERIES
 
-    memo.clear()
     want = sorted(map(tuple, QUERIES["tokenize_bpe_apply"](spark, SF).collect()))
-    memo.clear()
-    cap = B.BPE_APPLY_LOCAL_MAX
-    B.BPE_APPLY_LOCAL_MAX = 0  # force the distributed window loop
-    try:
+    with forced("BPE_APPLY_LOCAL_MAX"):
         got = sorted(
             map(tuple, QUERIES["tokenize_bpe_apply"](spark, SF).collect())
         )
-    finally:
-        B.BPE_APPLY_LOCAL_MAX = cap
-        memo.clear()
     assert got == want
 
 
@@ -168,16 +134,11 @@ def test_coreness_fallback_equals_broadcast(spark):
     CORENESS_BCAST_NODES label-broadcast ceiling) must produce the EXACT
     coreness relation the broadcast-mode rounds produce — forcing the cap
     to 0 routes every round through the fallback."""
-    from upflow_spark.pipeline import cluster as C
     from upflow_spark.registry import QUERIES
 
     want = sorted(map(tuple, QUERIES["graph_coreness"](spark, SF).collect()))
-    cap = C.CORENESS_BCAST_NODES
-    C.CORENESS_BCAST_NODES = 0  # force the distributed fallback rounds
-    try:
+    with forced("CORENESS_BCAST_NODES"):
         got = sorted(
             map(tuple, QUERIES["graph_coreness"](spark, SF).collect())
         )
-    finally:
-        C.CORENESS_BCAST_NODES = cap
     assert got == want

@@ -7,30 +7,25 @@ from __future__ import annotations
 
 import inspect
 
-from upflow_spark import memo
+from tests.conftest import forced
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_unigram_trainer_kernel_equals_distributed_loop(spark):
-    """tokenize_unigram_train (r15): under UNI_TRAIN_LOCAL_MAX the whole
+    """tokenize_unigram_train (r15): under TRAIN_LOCAL_MAX the whole
     seed + hard-EM loop runs as ONE bounded task; forcing the ceiling to 0
     routes through the original distributed collect loop — the FULL final
     vocabulary (not just the graded top-K) must match exactly."""
-    from upflow_spark.pipeline import unigram as U
     from upflow_spark.registry import QUERIES
 
-    memo.clear()
     want_top = sorted(
         map(tuple, QUERIES["tokenize_unigram_train"](spark, SF).collect())
     )
     want_vocab = sorted(
         map(tuple, QUERIES["tokenize_unigram_vocab_ids"](spark, SF).collect())
     )
-    memo.clear()
-    cap = U.UNI_TRAIN_LOCAL_MAX
-    U.UNI_TRAIN_LOCAL_MAX = 0  # force the distributed EM loop
-    try:
+    with forced("TRAIN_LOCAL_MAX"):
         got_top = sorted(
             map(tuple, QUERIES["tokenize_unigram_train"](spark, SF).collect())
         )
@@ -40,9 +35,6 @@ def test_unigram_trainer_kernel_equals_distributed_loop(spark):
                 QUERIES["tokenize_unigram_vocab_ids"](spark, SF).collect(),
             )
         )
-    finally:
-        U.UNI_TRAIN_LOCAL_MAX = cap
-        memo.clear()
     assert got_top == want_top
     assert got_vocab == want_vocab
 
@@ -51,7 +43,6 @@ def test_oov_monitor_kernel_equals_distributed_loop(spark):
     """stream_tokenizer_oov_monitor (r15): the bounded EM kernel's frozen
     (pretoken -> token count) map must reproduce the distributed loop's
     per-wave report exactly."""
-    from upflow_spark.pipeline import unigram as U
     from upflow_spark.registry import QUERIES
 
     want = sorted(
@@ -60,17 +51,13 @@ def test_oov_monitor_kernel_equals_distributed_loop(spark):
             QUERIES["stream_tokenizer_oov_monitor"](spark, SF).collect(),
         )
     )
-    cap = U.UNI_TRAIN_LOCAL_MAX
-    U.UNI_TRAIN_LOCAL_MAX = 0
-    try:
+    with forced("TRAIN_LOCAL_MAX"):
         got = sorted(
             map(
                 tuple,
                 QUERIES["stream_tokenizer_oov_monitor"](spark, SF).collect(),
             )
         )
-    finally:
-        U.UNI_TRAIN_LOCAL_MAX = cap
     assert got == want
 
 
@@ -84,14 +71,10 @@ def test_banded_pairs_identical_salted_or_not(spark):
     want = sorted(
         map(tuple, M.banded_verified_pairs(spark, SF).collect())
     )
-    gate = M.PAIR_SALT_MIN_DOCS
-    M.PAIR_SALT_MIN_DOCS = 0  # force the G=16 salted join
-    try:
+    with forced("PAIR_SALT_MIN_DOCS"):
         got = sorted(
             map(tuple, M.banded_verified_pairs(spark, SF).collect())
         )
-    finally:
-        M.PAIR_SALT_MIN_DOCS = gate
     assert got == want
 
 
@@ -100,23 +83,16 @@ def test_packed_corpus_fallback_equals_bounded_vocab(spark):
     come from the distributed zipWithIndex + shuffle-join path instead of
     the bounded vocab collect — the GEMM scores are column-permutation
     invariant, so the graded pair relation must be identical."""
-    from upflow_spark.pipeline import dedup as D
     from upflow_spark.registry import QUERIES
 
     def run():
-        memo.clear()
         return sorted(
             map(tuple, QUERIES["dedup_containment"](spark, SF).collect())
         )
 
     want = run()
-    cap = D.VOCAB_BROADCAST_MAX_TERMS
-    D.VOCAB_BROADCAST_MAX_TERMS = 0  # force the distributed id path
-    try:
+    with forced("VOCAB_BROADCAST_MAX_TERMS"):
         got = run()
-    finally:
-        D.VOCAB_BROADCAST_MAX_TERMS = cap
-        memo.clear()
     assert got == want
 
 
@@ -129,7 +105,10 @@ def test_coreness_partition_constants_parameterized():
     src = inspect.getsource(cluster)
     assert "repartition(8" not in src
     fn = inspect.getsource(cluster.graph_coreness)
-    override = 'spark.conf.set("spark.sql.shuffle.partitions", "8")'
+    override = "small_shuffles("
     assert fn.count(override) == 1
     # the override must come AFTER the bcast-mode decision (scoped branch)
-    assert "bcast_mode = n_nodes <= CORENESS_BCAST_NODES" in fn.split(override)[0]
+    assert (
+        "bcast_mode = n_nodes <= ceilings.CORENESS_BCAST_NODES"
+        in fn.split(override)[0]
+    )

@@ -28,6 +28,7 @@ python -m pytest tests/test_plans.py -x -q
 python -m pytest tests/test_ops.py -x -q
 python -m pytest tests/ -x -q --ignore=tests/test_oracle.py \
   --ignore=tests/test_plans.py --ignore=tests/test_ops.py
+python -m pytest tests/test_fallbacks.py -m forced_sweep -x -q
 
 echo "=== 3/6 driver sim (vanilla session, full registry, sf0.001) ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python tools/driver_sim.py

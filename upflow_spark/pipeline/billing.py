@@ -50,10 +50,11 @@ from upflow_spark.pipeline.minhash_sql import (
     _sql_sig_cte,
 )
 from upflow_spark.pipeline.similarity import _sql_cos
+from upflow_spark.pipeline.substring import SPAN_S, SPAN_W, dup_span_tokens, span_digests
 from upflow_spark.pipeline.text import SQL_TOKENS, tokens_col
 from upflow_spark.registry import query
+from upflow_spark.session import small_shuffles
 
-SPAN_W, SPAN_S = 50, 10  # the dedup_substring_spans window/stride
 SPAN_DROP_FRAC = 0.5  # drop docs with >= 50% of tokens inside dup spans
 
 # deterministic messy-URL synthesis per document (the dedup_url_canonical
@@ -274,45 +275,7 @@ def dedup_pipeline_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = s2.select(
         "doc_id", toks.alias("t"), F.size(toks).cast("long").alias("n_tokens")
     )
-    spans = (
-        t.filter(F.col("n_tokens") >= SPAN_W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    (F.col("n_tokens") - (SPAN_W - 1)).cast("int"),
-                    F.lit(SPAN_S),
-                )
-            ).alias("pos"),
-            "t",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.xxhash64(
-                F.concat_ws(" ", F.expr(f"slice(t, pos, {SPAN_W})"))
-            ).alias("dig"),
-        )
-    )
-    cnt = spans.withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("dig")))
-    dup = cnt.filter(F.col("c") > 1).select(
-        "doc_id", "pos", (F.col("pos") + (SPAN_W - 1)).alias("e")
-    )
-    prev_max = F.max("e").over(
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cov = dup.select(
-        "doc_id",
-        F.greatest(
-            F.lit(0),
-            F.col("e")
-            - F.greatest(F.col("pos") - 1, F.coalesce(prev_max, F.lit(0))),
-        ).alias("cover"),
-    )
-    dup_tok = cov.groupBy("doc_id").agg(F.sum("cover").alias("dup_tokens"))
+    dup_tok = dup_span_tokens(span_digests(t))
     frac = (
         t.join(dup_tok, "doc_id", "left")
         .select(
@@ -330,18 +293,14 @@ def dedup_pipeline_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stage 4: MinHash banding on survivors, >=15/16 verify, CC, drop losers
-    before = spark.conf.get("spark.sql.shuffle.partitions")
     sig = _signatures_of(s3).repartition(par).localCheckpoint()
     verified = (
         _candidates_of_sig(sig)
         .filter(F.col("n_agree") >= 15)
         .select("doc_a", "doc_b")
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         mh_labels = _cc_star_fixpoint(verified).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     mh_losers = mh_labels.filter(~F.col("is_canonical")).select("doc_id")
     s4 = (
         s3.select("doc_id")
@@ -359,11 +318,8 @@ def dedup_pipeline_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s4.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi")
         .join(s4.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi")
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         sm_labels = _cc_star_fixpoint(sem_pairs).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     sm_losers = sm_labels.filter(~F.col("is_canonical")).select("doc_id")
     s5 = s4.join(sm_losers, "doc_id", "left_anti")
 

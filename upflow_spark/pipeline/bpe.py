@@ -49,11 +49,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import memo
 from upflow_spark.parity import r4
 from upflow_spark.pipeline.textstats import BPE_PRETOK_RE
 from upflow_spark.registry import query
+from upflow_spark.session import small_shuffles
 
 # Fixed public-style merges table (rank = list position, lowest first):
 # high-frequency English character pairs plus second-order continuation
@@ -98,25 +100,6 @@ def _merge_map(merges: list[tuple[str, str]] = MERGES):
     for rank, (lft, rgt) in enumerate(merges):
         kv += [F.lit(lft + _SEP + rgt), F.lit(rank)]
     return F.create_map(*kv)
-
-
-# Ceiling for the single-task encode kernel: the apply state is position
-# rows over the Heaps-bounded DISTINCT-pretoken relation; under ~4M rows
-# the whole n_iter-round loop runs in ONE bounded executor task (the
-# BPE_TRAIN_LOCAL_MAX rationale — production encoders apply merge tables
-# per pretoken locally). Past it, the distributed window loop below runs
-# unchanged (test-forced, identical output).
-#
-# Memory budget (r14 ADVICE — this ceiling is NOT the CC kernel's 64 MiB
-# Arrow framing): the kernel holds the state as Python dicts/lists of
-# (int, str) tuples, ~10-20x the Arrow footprint, so 4M position rows is
-# roughly 1.5-3 GiB of Python objects in ONE worker at the ceiling. That
-# is deliberate and sized to this sandbox's memory (one local worker,
-# 128 GiB box); an executor-packed production deployment (many workers
-# per host under spark.executor.pyspark.memory) would lower these
-# ceilings to its per-worker budget — the fallback path is the contract,
-# the ceiling is a tunable.
-BPE_APPLY_LOCAL_MAX = 1 << 22
 
 
 def _bpe_apply_kernel(merges: list):  # noqa: ANN201
@@ -189,7 +172,7 @@ def _run_merge_loop(st: DataFrame, merges: list[tuple[str, str]] = MERGES) -> Da
     # loop would re-evaluate it — both callers pass st un-checkpointed
     # (r14 ADVICE; the pattern _bpe_train_merges applies to `occ`)
     st = st.localCheckpoint()
-    if st.count() <= BPE_APPLY_LOCAL_MAX:
+    if st.count() <= ceilings.BPE_APPLY_LOCAL_MAX:
         return st.coalesce(1).mapInPandas(
             _bpe_apply_kernel([(str(a), str(b)) for a, b in merges]),
             "pt string, pos int, sym string",
@@ -628,16 +611,6 @@ def tokenize_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Ceiling for the single-task trainer kernel: the training STATE is the
-# Heaps-bounded distinct-pretoken relation (never the corpus), and under
-# ~2M distinct pretokens the whole N_TRAIN-round loop runs in ONE bounded
-# executor task — which is also how production BPE trainers work
-# (Sennrich et al.'s reference and HF tokenizers both train single-node
-# over aggregated pretoken counts). The distributed round loop below
-# stays as the past-ceiling fallback (test-forced, identical output).
-BPE_TRAIN_LOCAL_MAX = 1 << 21
-
-
 def _bpe_train_kernel(batches):  # noqa: ANN001, ANN201
     """Single-task BPE trainer over (pt, w) occurrence rows — the exact
     dynamics of the distributed loop: per round, count EVERY adjacency
@@ -720,9 +693,9 @@ def _bpe_train_uncached(
     )
     occ = occ.localCheckpoint()  # read by the gate count AND the kernel/loop
     learned: list[tuple[int, str, str, int]] = []
-    if occ.count() <= BPE_TRAIN_LOCAL_MAX:
+    if occ.count() <= ceilings.TRAIN_LOCAL_MAX:
         # r14: bounded single-task trainer over the Heaps-bounded pretoken
-        # counts (see BPE_TRAIN_LOCAL_MAX) — one job instead of N_TRAIN
+        # counts (see ceilings.TRAIN_LOCAL_MAX) — one job instead of N_TRAIN
         # rounds × (argmax collect + window checkpoint) of stage overhead
         rows = occ.coalesce(1).mapInPandas(
             _bpe_train_kernel,
@@ -739,16 +712,9 @@ def _bpe_train_uncached(
         ).select("pt", "w", (F.col("p0") + 1).alias("pos"), "sym")
         st = st.localCheckpoint()
         w_pt = Window.partitionBy("pt").orderBy("pos")
-        # size the per-round shuffles (pair groupBy + pt-partitioned windows)
-        # to the vocab-sized state, not the session default — 200-partition
-        # tasks on a Heaps-bounded relation are pure scheduler overhead
-        # (the stream_emb_index_ingest per-wave sizing pattern)
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        # per-round pair groupBy + pt windows over the Heaps-bounded state
+        with small_shuffles(spark):
             _train_rounds(spark, st, w_pt, learned)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
     return learned
 
 

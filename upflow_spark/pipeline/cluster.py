@@ -19,12 +19,16 @@ with localCheckpoint so the plan doesn't grow with iterations.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from upflow_spark import ceilings
 from upflow_spark.memo import memo
 from upflow_spark.pipeline.dedup import SQL_TOKENS, _simhash_bits, dedup_simhash_pairs
 from upflow_spark.registry import query
+from upflow_spark.session import small_shuffles
 
 MAX_ROUNDS = 20
 
@@ -195,34 +199,23 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each round is 2 joins + 1 agg over the LABEL table (tiny: one
         # row per node in a dup cluster), so partition-count overhead
         # multiplies by ~3x rounds
-        return _small_shuffle_checkpoint(spark, lambda: _cc_min_labels(edges, nodes))
+        with small_shuffles(spark):
+            return _cc_min_labels(edges, nodes).localCheckpoint()
 
     return memo(spark, sf_dir, "documents", "cc_labels", build)
-
-
-def _small_shuffle_checkpoint(spark: SparkSession, make) -> DataFrame:
-    """make().localCheckpoint() with the CC fixpoint's shuffles sized to the
-    tiny pair/label tables, not the session default — the per-query sizing
-    pattern of streaming's run_to_completion."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return make().localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def _cc_min_labels(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Identity-seeded CC — (doc_id, cluster_id = component min,
     is_canonical) for every node of `nodes` (callers pass the distinct
     edge-endpoint relation, optionally plus isolated nodes, so every edge
-    endpoint is labeled). r14: edge sets under CC_LOCAL_MAX_EDGES run the
+    endpoint is labeled). r14: edge sets under ceilings.CC_LOCAL_MAX_EDGES run the
     bounded single-task numpy kernel (see _cc_local_kernel — identical
     labels by definition, one job instead of ~3-8 pointer-jumping rounds
     of fixed stage overhead); past the ceiling, the distributed
     _cc_fixpoint loop runs unchanged. Isolated nodes label themselves on
     both paths, exactly as the fixpoint's left joins do."""
-    if edges.count() <= CC_LOCAL_MAX_EDGES:
+    if edges.count() <= ceilings.CC_LOCAL_MAX_EDGES:
         # checkpoint: the anti-join below AND the union both read lbls,
         # and Spark shares no subplans — without this the coalesce(1)
         # kernel executed twice per materialization (r14 ADVICE)
@@ -334,7 +327,7 @@ def _star_round(e: DataFrame, bcast: bool) -> DataFrame:
     - the intermediate large-star `.distinct()` is DROPPED: small-star's
       min() is duplicate-agnostic and the round's final distinct dedupes
       the linked rows, so the extra exchange bought nothing;
-    - when `bcast` (node count under the CORENESS_BCAST_NODES ceiling,
+    - when `bcast` (node count under ceilings.CORENESS_BCAST_NODES,
       decided once per fixpoint by the caller) the two NODE-sized
       min-label relations ride onto the edge stream by broadcast instead
       of shuffling the edge set twice per round — same capped-broadcast +
@@ -362,16 +355,6 @@ def _star_round(e: DataFrame, bcast: bool) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-
-
-# Ceiling for the single-task CC kernel: a canonical edge set under 4M
-# rows (~64 MiB of (u,v) longs through Arrow) is solved in ONE bounded
-# executor task by the numpy min-label/pointer-jumping kernel below —
-# replacing ~6 star rounds × ~10 scheduler jobs of sub-second stages with
-# one job (the fixpoints' cost at fixture scale was pure driver/stage
-# overhead: 127-job bills with 6 s of between-job gaps). Past the ceiling
-# the large-star/small-star loop runs unchanged — the 100 TB path.
-CC_LOCAL_MAX_EDGES = 1 << 22
 
 
 def _cc_local_kernel(batches):  # noqa: ANN001, ANN201
@@ -449,7 +432,7 @@ def _cc_star_fixpoint(pairs: DataFrame) -> DataFrame:
         F.least("doc_a", "doc_b").alias("v"),
     ).filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
 
-    if e.count() <= CC_LOCAL_MAX_EDGES:
+    if e.count() <= ceilings.CC_LOCAL_MAX_EDGES:
         # capped single-task kernel (labels identical by definition:
         # component minimum per edge-bearing node — includes the centers).
         # checkpoint: the centers anti-join and the union both read
@@ -461,7 +444,7 @@ def _cc_star_fixpoint(pairs: DataFrame) -> DataFrame:
         # distributed star alternation — the past-ceiling/100 TB path.
         # Node count prices the per-round min-label broadcasts
         # (see _star_round).
-        bcast = nodes.count() <= CORENESS_BCAST_NODES
+        bcast = nodes.count() <= ceilings.CORENESS_BCAST_NODES
 
         def _sig(df: DataFrame) -> tuple:
             row = df.agg(
@@ -513,7 +496,8 @@ def _semantic_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = dedup_embedding_cosine(spark, sf_dir).select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         )
-        return _small_shuffle_checkpoint(spark, lambda: _cc_star_fixpoint(pairs))
+        with small_shuffles(spark):
+            return _cc_star_fixpoint(pairs).localCheckpoint()
 
     return memo(spark, sf_dir, "embeddings", "semantic_cc_labels", build)
 
@@ -531,7 +515,8 @@ def _ann_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("cos_raw") >= 0.40)
             .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
         )
-        return _small_shuffle_checkpoint(spark, lambda: _cc_star_fixpoint(pairs))
+        with small_shuffles(spark):
+            return _cc_star_fixpoint(pairs).localCheckpoint()
 
     return memo(spark, sf_dir, "embeddings", "ann_cc_labels", build)
 
@@ -717,9 +702,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = edges.select(F.col("u").alias("n")).distinct().withColumn(
         "lbl", F.col("n")
     )
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         from pyspark.sql import Window
 
         for _ in range(LPA_ROUNDS):
@@ -735,8 +718,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col("u").alias("n"), "lbl")
                 .localCheckpoint()  # cut per-round lineage
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("cs"))
     return (
         labels.join(sizes, "lbl")
@@ -808,9 +789,7 @@ def graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(BFS_N_SEEDS)
         .withColumn("d", F.lit(0).cast("long"))
     )
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         depth = seeds.localCheckpoint()
         for _ in range(BFS_ROUNDS):
             relax = (
@@ -825,8 +804,6 @@ def graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.min("d").alias("d"))
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     return depth.select(F.col("n").alias("doc_id"), F.col("d").alias("depth"))
 
 
@@ -1078,9 +1055,7 @@ def _kcore_peel(
     """Synchronous k-core peeling over a directed-both-ways edge set
     (columns u, v) — the engine behind graph_k_core, kept separate so the
     property tests can drive it with synthetic graph shapes."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         e = edges.localCheckpoint()
         n_edges = e.count()
         for _ in range(rounds):
@@ -1099,8 +1074,6 @@ def _kcore_peel(
             if n_after == n_edges:
                 break  # converged: a removed node takes ≥1 edge with it
             n_edges = n_after
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
     core = deg.select(F.col("u").alias("doc_id"), "core_degree")
     poison = (
@@ -1264,9 +1237,7 @@ def graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             p.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
         )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         base_e = sym(base_p).localCheckpoint()
         base_nodes = base_e.select(F.col("u").alias("doc_id")).distinct()
         base_lbl = (
@@ -1318,8 +1289,6 @@ def graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_nodes"))
             .localCheckpoint()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     _cc_inc_stats.clear()
     _cc_inc_stats.update(
         {
@@ -1538,16 +1507,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark loop is convergence-driven and stops the first unchanged round.
 CORENESS_ROUNDS = 24
 
-# Broadcast ceiling for the h-index loop's per-round label relation: the
-# (u, c) pairs are NODE-sized, and within ~4.2M nodes (two longs per row,
-# ≈256 MiB hashed — the repo's established broadcast budget) each round can
-# ride the labels onto the PERSISTED u-partitioned edge relation map-side,
-# making a dense round exactly ONE node-sized exchange (the carry-through
-# left join) instead of four edge-sized ones. Past the ceiling the loop
-# falls back to the distributed shuffle rounds — never a forced broadcast
-# of an unbounded relation (the r12 hard-deny class).
-CORENESS_BCAST_NODES = 1 << 22
-
 
 def _coreness_cte(rounds: int = CORENESS_ROUNDS) -> str:
     """Unrolled h-index iteration: c0 = degree; c_{t+1}(u) = H-index of
@@ -1615,12 +1574,10 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the graph_k_core contract).
     """
     edges = _cc_edges(spark, sf_dir)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
     from pyspark.sql import Window
 
     par = spark.sparkContext.defaultParallelism
-    e_u = None
-    try:
+    with ExitStack() as scope:
         # r14 (guide §2.4 remove shuffles / §3.1 deliberate join strategy):
         # localCheckpoint scans come back as UnknownPartitioning, so the
         # r13 rounds paid FOUR edge-sized exchanges each (cv join on v,
@@ -1632,13 +1589,14 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every round's window/groupBy reuses that layout exchange-free;
         # the node-sized label relation rides in by capped broadcast
         # (ceiling + distributed fallback, the weighted-verify pattern).
-        bcast_mode = None  # decided after n_nodes is known
         # r15 (VERDICT r14 item 5): the persisted copy's partition count
         # follows the session's parallelism instead of a hardcoded 8 —
         # the edge relation is NOT bounded by the node ceiling (a ≤4.2M-
         # node graph can carry billions of edges), so its layout must
         # scale with the cluster like every other corpus-sized relation
         e_u = edges.repartition(par, "u").persist()
+        # the final c is checkpointed, so nothing downstream reads e_u
+        scope.callback(e_u.unpersist)
         c = (
             e_u.groupBy("u")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -1664,7 +1622,7 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sf0.1), and an anti-join+union merge trips Spark's LogicalRDD
         # constraint rewrite ("key not found: u#N") outright.
         n_nodes = c.count()
-        bcast_mode = n_nodes <= CORENESS_BCAST_NODES
+        bcast_mode = n_nodes <= ceilings.CORENESS_BCAST_NODES
         if not bcast_mode:
             # distributed rounds never read the cached copy — release it;
             # shuffle sizing stays whatever the session set (the 100 TB
@@ -1673,10 +1631,10 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             # r15 (VERDICT r14 item 5): the small-shuffle override is
             # scoped to BCAST MODE ONLY — here every per-round shuffle is
-            # node-sized and bounded by CORENESS_BCAST_NODES, so a small
-            # fixed partition count just trims per-round task overhead;
-            # the past-ceiling fallback above never sees it
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            # node-sized and bounded by ceilings.CORENESS_BCAST_NODES, so
+            # a small fixed partition count just trims per-round task
+            # overhead; the past-ceiling fallback above never sees it
+            scope.enter_context(small_shuffles(spark))
         # r14 note: unrolling multiple h-index rounds into one lineage
         # between checkpoints was TRIED and measured 26.5 s -> 43 s: each
         # sub-round references its predecessor 3x (cv, frontier, join
@@ -1752,11 +1710,6 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
             if n_changed == 0:
                 converged = True
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        if e_u is not None and bcast_mode is not False:
-            # the final c is checkpointed, so nothing downstream reads e_u
-            e_u.unpersist()
     out = c.select(F.col("u").alias("doc_id"), F.col("c").alias("coreness"))
     if not converged:
         out = out.unionByName(

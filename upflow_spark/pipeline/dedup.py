@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import memo
 from upflow_spark.parity import r4
@@ -258,7 +259,7 @@ def _doc_bitmasks(spark, items: DataFrame):
     )
     n_words = max(1, (n_vocab + 61) // 62)
     vid = vocab_ids.withColumnRenamed("t", "item")
-    vmap = F.broadcast(vid) if n_vocab <= VOCAB_BROADCAST_MAX_TERMS else vid
+    vmap = F.broadcast(vid) if n_vocab <= ceilings.VOCAB_BROADCAST_MAX_TERMS else vid
     t = items.join(vmap, "item").select("doc_id", "tid")
     word_of = F.floor(F.col("tid") / 62).cast("int")
     # SQL shiftleft takes column args; the pyspark wrapper insists on an int
@@ -304,17 +305,6 @@ def _packed_corpus_cached(spark, sf_dir: str, kind: str, docs_builder):
     )
 
 
-# Broadcast ceiling for the packed B operand (n_docs × |V|/8 bytes). Below
-# it, the whole bit matrix broadcasts and the A side streams against it
-# (the fast path — one operand ships once per executor). Above it, B is
-# kept DISTRIBUTED as block rows and the pair kernel runs over the A×B
-# block grid instead (the standard block-distributed similarity matmul) —
-# memory per task is then one (a_block × b_block) slab, and no single
-# process ever holds the full matrix. Module-level so tests can force the
-# grid path low and prove hash-identical output.
-GEMM_BROADCAST_MAX_BYTES = 256 << 20
-
-
 def _pack_block_rows(docs_ids: DataFrame, n_vocab: int) -> DataFrame:
     """Bit-pack (doc_id, term_ids) partitions into ONE ROW PER ARROW BATCH:
     (ids int64-bytes, packed uint8-bytes, counts float64-bytes). The
@@ -354,14 +344,6 @@ def _unpack_block_row(ids_bin, packed_bin, counts_bin, n_vocab: int):
     return ids, mat, counts
 
 
-# broadcast-hash-join ceiling for the vocab-id map: below it the terms→ids
-# join is map-side (the id table is smaller than one executor heap); above
-# it Catalyst plans a plain shuffle join — an open-vocabulary corpus then
-# still packs correctly, it just pays the shuffle (and will take the grid
-# path below, since n_docs × |V|/8 is far past the broadcast ceiling too).
-VOCAB_BROADCAST_MAX_TERMS = 1 << 22
-
-
 def _dense_ids(spark, terms: DataFrame):
     """Distributed dense id assignment over a single-column relation of
     terms: distinct → RDD.zipWithIndex. The vocabulary NEVER converges on
@@ -391,12 +373,12 @@ def _packed_corpus(spark, docs: DataFrame):
     (doc_id, term_ids array<long>) relation both the A stream and the B
     pack consume; vocab_ids the distributed (t, tid) dense-id table; and
     B-operand a broadcast of (ids, packed uint8 matrix, n_vocab, counts)
-    when the packed estimate fits GEMM_BROADCAST_MAX_BYTES, the grid
+    when the packed estimate fits ceilings.BROADCAST_MAX_BYTES, the grid
     marker ("grid", block-row DataFrame, n_vocab) when it does not, or
     None for an empty corpus.
 
     Driver footprint is bounded, not constant. Under the vocab ceiling the
-    driver collects the distinct terms — at most VOCAB_BROADCAST_MAX_TERMS
+    driver collects the distinct terms — at most ceilings.VOCAB_BROADCAST_MAX_TERMS
     + 1 Rows, the +1 only to detect overflow — and builds a sorted list, a
     term→id dict and a pickled broadcast of that dict from them. Python
     Rows and str objects cost several times the bytes of a compact JVM
@@ -405,7 +387,7 @@ def _packed_corpus(spark, docs: DataFrame):
     the ceiling, ids come from a distributed zipWithIndex joined by
     shuffle and the driver holds n_vocab only. On the broadcast path the
     driver also holds the packed BYTES the workers produce (n × |V|/8,
-    gated by GEMM_BROADCAST_MAX_BYTES BEFORE any byte ships); on the grid
+    gated by ceilings.BROADCAST_MAX_BYTES BEFORE any byte ships); on the grid
     path the matrix never converges anywhere at all.
     """
     import numpy as np
@@ -429,10 +411,10 @@ def _packed_corpus(spark, docs: DataFrame):
     vocab_probe = (
         docs.select(F.explode("terms").alias("t"))
         .distinct()
-        .limit(VOCAB_BROADCAST_MAX_TERMS + 1)
+        .limit(ceilings.VOCAB_BROADCAST_MAX_TERMS + 1)
         .collect()
     )
-    if len(vocab_probe) <= VOCAB_BROADCAST_MAX_TERMS:
+    if len(vocab_probe) <= ceilings.VOCAB_BROADCAST_MAX_TERMS:
         terms_sorted = sorted(r["t"] for r in vocab_probe if r["t"] is not None)
         n_vocab = len(terms_sorted)
         vd = {t: i for i, t in enumerate(terms_sorted)}
@@ -488,7 +470,7 @@ def _packed_corpus(spark, docs: DataFrame):
     n_docs = docs_ids.count()
     if n_docs == 0:
         return docs_ids, vocab_ids, None
-    if n_docs * n_bytes > GEMM_BROADCAST_MAX_BYTES:
+    if n_docs * n_bytes > ceilings.BROADCAST_MAX_BYTES:
         b_blocks = _pack_block_rows(docs_ids, n_vocab).localCheckpoint()
         return docs_ids, vocab_ids, ("grid", b_blocks, n_vocab)
 
@@ -537,8 +519,8 @@ def _jaccard_pairs_gemm(
     row-at-a-time join iteration can't compete with a vectorized kernel.
 
     Topology (nothing unbounded on the driver): under
-    VOCAB_BROADCAST_MAX_TERMS the vocabulary ids come from one bounded
-    driver collect of at most VOCAB_BROADCAST_MAX_TERMS + 1 distinct-term
+    ceilings.VOCAB_BROADCAST_MAX_TERMS the vocabulary ids come from one bounded
+    driver collect of at most ceilings.VOCAB_BROADCAST_MAX_TERMS + 1 distinct-term
     Rows, assigned in sorted order and broadcast to a map-only id kernel
     (_packed_corpus has the driver-memory accounting); past it, from a
     DISTRIBUTED zipWithIndex joined by shuffle onto the exploded token
@@ -848,7 +830,7 @@ def _cosine_pairs_gemm(spark, e: DataFrame, threshold: float) -> DataFrame:
 
     Topology (the _packed_corpus rules): the B operand is packed
     DISTRIBUTIVELY (mapInPandas → per-partition float64 blocks), and only
-    when n·d·8 fits GEMM_BROADCAST_MAX_BYTES do the packed bytes converge
+    when n·d·8 fits ceilings.BROADCAST_MAX_BYTES do the packed bytes converge
     on the driver for the sc.broadcast; past the ceiling the kernel runs
     over the block-row grid instead and the matrix never converges
     anywhere (test-forced; hash-identical output either way).
@@ -893,14 +875,9 @@ def _cosine_pairs_gemm(spark, e: DataFrame, threshold: float) -> DataFrame:
             yield pd.DataFrame({"ids": [ids.tobytes()], "mat": [v.tobytes()]})
 
     src = e.repartition(par)
-    # Gate accounting (r14 ADVICE): n_vecs*dim*8 prices the MATRIX only;
-    # peak driver residency during assembly is ~3x that — collected row
-    # bytes + the np.concatenate copy + the broadcast's serialized form
-    # (ids add n_vecs*8, noise next to dim>=8 matrices). The 256 MiB
-    # ceiling therefore budgets ~768 MiB of transient driver memory, well
-    # inside the 24g driver this repo sizes (session.py) — the claim is
-    # the TRANSIENT budget, not the gated estimate.
-    if n_vecs * dim * 8 <= GEMM_BROADCAST_MAX_BYTES:
+    # the gate prices the MATRIX; assembly holds ~3x that transiently
+    # (see ceilings.BROADCAST_MAX_BYTES)
+    if n_vecs * dim * 8 <= ceilings.BROADCAST_MAX_BYTES:
         rows = src.mapInPandas(pack_kernel, "ids binary, mat binary").collect()
         b_ids = np.concatenate([np.frombuffer(r["ids"], np.int64) for r in rows])
         bmat = np.concatenate(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from upflow_spark.parity import r4
 from upflow_spark.pipeline.cluster import _PAIRS_CTE, _cc_edges
 from upflow_spark.registry import query
+from upflow_spark.session import small_shuffles
 
 N_ITER = 6
 DAMPING = 0.85
@@ -75,9 +76,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization shared with the CC keys (cluster._cc_edges).
     """
     edges = _cc_edges(spark, sf_dir)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         deg = edges.groupBy("u").agg(
             F.count(F.lit(1)).cast("double").alias("d")
         ).withColumnRenamed("u", "n").localCheckpoint()
@@ -105,5 +104,3 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ranks.select(
             F.col("n").alias("doc_id"), r4(F.col("r") * nv).alias("pr_scaled")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import memo
 from upflow_spark.parity import R4, r4
@@ -147,31 +148,15 @@ def _distinct_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _candidates_of_sig(sig)
 
 
-PAIR_SALT_G = 16  # pair-generation salt groups (see _candidates_of_sig)
-# Salt ONLY the shuffle-path candidate join (r15 — fixes the r14
-# dedup_staged regression, VERDICT r14 item 1): under a BroadcastHashJoin
-# the probe side keeps its own (already round-robin-spread) partitioning,
-# so a hot bucket's quadratic fan-out is ALREADY split across every probe
-# task — a build-side salt there multiplies the broadcast hash relation
-# G× for ZERO parallelism gain (the r14 unconditional G=16 explode+
-# broadcast regressed dedup_staged 2.0 s → 11.0 s warm at the driver's
-# local[32]; measured histograms show the staged/corpus sigs carry ~2290-
-# doc buckets and ran fine UNSALTED in r13 precisely because of this).
-# Salting earns its keep only when the band relation exceeds the
-# broadcast ceiling and the join shuffles on (band_idx, band_hash): there
-# ONE degenerate bucket key is unsplittable by AQE's skew handling (guide
-# §2.5 — it cannot split a single enormous key), and the G-way probe-salt
-# carves it into G independent keys. The gate is the band relation's own
-# row count: 4 bands × ~200 B/row ≈ 400 MiB at the ceiling, the repo's
-# broadcast budget class — below it AQE picks broadcast-hash at runtime.
-PAIR_SALT_MIN_DOCS = 1 << 19
+# pair-generation salt groups, past ceilings.PAIR_SALT_MIN_DOCS only
+PAIR_SALT_G = 16
 
 
 def _candidates_of_sig(sig: DataFrame, n_docs: int | None = None) -> DataFrame:
     """Banded candidate pairs from a materialized signature table.
 
     `n_docs` (the signature row count) gates the shuffle-path salt — see
-    PAIR_SALT_MIN_DOCS above; callers that already know the count pass it,
+    ceilings.PAIR_SALT_MIN_DOCS; callers that already know the count pass it,
     otherwise one metadata-cheap count job on the (checkpointed) sig
     relation prices the gate. Output rows are IDENTICAL salted or not
     (each (a,b) pair matches exactly the one replica with rep_j = g_b);
@@ -182,7 +167,7 @@ def _candidates_of_sig(sig: DataFrame, n_docs: int | None = None) -> DataFrame:
     # false-positive path to reason about
     if n_docs is None:
         n_docs = sig.count()
-    G = PAIR_SALT_G if n_docs > PAIR_SALT_MIN_DOCS else 1
+    G = PAIR_SALT_G if n_docs > ceilings.PAIR_SALT_MIN_DOCS else 1
     bands = sig.select(
         "doc_id",
         *[F.col(f"mh{i}") for i in range(K_HASHES)],
@@ -707,11 +692,6 @@ def dedup_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 WCAP = 4  # integer weight cap: term weight = min(count, WCAP)
 WJ_TAU_BP = 5000  # verified pair: exact weighted Jaccard >= 0.5
-# Broadcast ceiling for the weighted verify's per-doc term->c maps: 64Ki
-# candidate-relevant docs x ~4 KiB capped-count map ≈ 256 MiB, the repo's
-# established broadcast budget (the GEMM keys' ceiling). Past it the
-# verify falls back to the skinny intersection equi-join (see the key).
-WVER_BCAST_DOCS = 65536
 
 _WSIG_CTE = f"""
 wsurv AS MATERIALIZED (
@@ -905,7 +885,7 @@ def dedup_minhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast-ceiling-plus-fallback pattern (the GEMM keys' discipline):
     # cand_ids is already materialized-adjacent (cand is checkpointed), a
     # bounded count prices the candidate-relevant doc set, and
-    #   * within the ceiling (<= WVER_BCAST_DOCS docs, <= ~256 MiB of
+    #   * within the ceiling (<= ceilings.WVER_BCAST_DOCS docs, <= ~256 MiB of
     #     replica arrays) each doc broadcasts its REPLICA SET ('term r' for
     #     r < c — the same replication reduction the signatures hash, so
     #     Σ min(c_a,c_b) IS |replicas_a ∩ replicas_b|) and smin evaluates
@@ -932,7 +912,7 @@ def dedup_minhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     n_cand_docs = cand_ids.count()
-    if n_cand_docs <= WVER_BCAST_DOCS:
+    if n_cand_docs <= ceilings.WVER_BCAST_DOCS:
         reps = F.slice(
             F.array(
                 *[

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import memo
 from upflow_spark.parity import R4, r4
@@ -245,20 +246,11 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Driver/executor ceiling for the packed full-matrix broadcast (n × d × 8
-# bytes), the embedding twin of dedup.GEMM_BROADCAST_MAX_BYTES: past it the
-# pack returns a ("join", relation) marker and verify kernels shuffle-gather
-# candidate-pair vectors via two equi-joins instead — memory ∝ candidate
-# batch, never ∝ corpus. Path selection is a memory decision, never a
-# semantics decision (tests/test_emb_gather.py pins byte-identity).
-EMB_BROADCAST_MAX_BYTES = 256 << 20
-
-
 def gather_pair_vectors(cand: DataFrame, e: DataFrame, emb_col: str = "emb") -> DataFrame:
     """Distributed gather for candidate pairs: attach both endpoint vectors
     to each (vec_a, vec_b) row via two equi-joins against the (vec_id, emb)
     relation — the scale path when the packed matrix exceeds
-    EMB_BROADCAST_MAX_BYTES. LEFT joins so an id absent from the relation
+    ceilings.BROADCAST_MAX_BYTES. LEFT joins so an id absent from the relation
     surfaces as a NULL the kernel can turn into the id-closure error the
     broadcast path raises (an inner join would silently drop the pair)."""
     return cand.join(
@@ -295,7 +287,7 @@ def packed_embeddings(spark: SparkSession, e: DataFrame, emb_col: str = "emb"):
     as a broadcast hash join (and as _packed_corpus in pipeline/dedup.py).
 
     The size gate runs BEFORE any bytes head driver-ward (count + one-row
-    dim probe on the checkpointed relation): past EMB_BROADCAST_MAX_BYTES
+    dim probe on the checkpointed relation): past ceilings.BROADCAST_MAX_BYTES
     the function returns the ("join", relation) marker and callers
     shuffle-gather candidate vectors with gather_pair_vectors instead —
     at 100 TB the matrix never converges anywhere.
@@ -312,7 +304,7 @@ def packed_embeddings(spark: SparkSession, e: DataFrame, emb_col: str = "emb"):
         # in the first row and to ragged corpora — the gate must see the
         # WIDEST row, whichever partition it lives in
         d = e.select(F.max(F.size(F.col(emb_col))).alias("d")).head()["d"] or 0
-        if n * d * 8 > EMB_BROADCAST_MAX_BYTES:
+        if n * d * 8 > ceilings.BROADCAST_MAX_BYTES:
             return ("join", e, emb_col)
 
     def pack(batches):

@@ -39,6 +39,62 @@ SPAN_W = 50  # tokens per window (Lee et al.'s dup-span scale)
 SPAN_S = 10  # stride between window starts
 
 
+def span_digests(t: DataFrame, stride: int = SPAN_S) -> DataFrame:
+    """(doc_id, pos, dig, c) for every SPAN_W-token window of `t` (doc_id,
+    t, n_tokens) starting at 1-based token `pos`, one start every `stride`
+    tokens: `dig` is the window's xxhash64 digest and `c` its corpus-wide
+    occurrence count. Documents shorter than SPAN_W have no windows.
+
+    Plan: map-side explode of window starts (sequence+slice — no UDF),
+    then ONE count window keyed by digest, the only corpus-wide shuffle."""
+    return (
+        t.filter(F.col("n_tokens") >= SPAN_W)
+        .select(
+            "doc_id",
+            F.explode(
+                F.sequence(
+                    F.lit(1),
+                    (F.col("n_tokens") - (SPAN_W - 1)).cast("int"),
+                    F.lit(stride),
+                )
+            ).alias("pos"),
+            "t",
+        )
+        .select(
+            "doc_id",
+            "pos",
+            F.xxhash64(F.concat_ws(" ", F.expr(f"slice(t, pos, {SPAN_W})"))).alias(
+                "dig"
+            ),
+        )
+        .withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("dig")))
+    )
+
+
+def dup_span_tokens(spans: DataFrame) -> DataFrame:
+    """(doc_id, dup_tokens): per document with a repeated window of
+    `spans` (doc_id, pos, c), the number of tokens covered by at least one
+    window with c > 1 — overlapping windows merged by a running-max
+    interval sweep, so no token counts twice."""
+    dup = spans.filter(F.col("c") > 1).select(
+        "doc_id", "pos", (F.col("pos") + (SPAN_W - 1)).alias("e")
+    )
+    prev_max = F.max("e").over(
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cov = dup.select(
+        "doc_id",
+        F.greatest(
+            F.lit(0),
+            F.col("e")
+            - F.greatest(F.col("pos") - 1, F.coalesce(prev_max, F.lit(0))),
+        ).alias("cover"),
+    )
+    return cov.groupBy("doc_id").agg(F.sum("cover").cast("long").alias("dup_tokens"))
+
+
 @query(
     "dedup_substring_spans",
     oracle=f"""
@@ -96,51 +152,12 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = tokens_col()
     t = d.select("doc_id", toks.alias("t"), F.size(toks).cast("long").alias("n_tokens"))
 
-    spans = (
-        t.filter(F.col("n_tokens") >= SPAN_W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    (F.col("n_tokens") - (SPAN_W - 1)).cast("int"),
-                    F.lit(SPAN_S),
-                )
-            ).alias("pos"),
-            "t",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.xxhash64(F.concat_ws(" ", F.expr(f"slice(t, pos, {SPAN_W})"))).alias(
-                "dig"
-            ),
-        )
-    )
-    cnt = spans.withColumn(
-        "c", F.count(F.lit(1)).over(Window.partitionBy("dig"))
-    )
+    cnt = span_digests(t)
     agg1 = cnt.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans"),
         F.sum(F.when(F.col("c") > 1, 1).otherwise(0)).cast("long").alias("n_dup_spans"),
     )
-    dup = cnt.filter(F.col("c") > 1).select(
-        "doc_id", "pos", (F.col("pos") + (SPAN_W - 1)).alias("e")
-    )
-    prev_max = F.max("e").over(
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cov = dup.select(
-        "doc_id",
-        F.greatest(
-            F.lit(0),
-            F.col("e")
-            - F.greatest(F.col("pos") - 1, F.coalesce(prev_max, F.lit(0))),
-        ).alias("cover"),
-    )
-    agg2 = cov.groupBy("doc_id").agg(F.sum("cover").cast("long").alias("dup_tokens"))
+    agg2 = dup_span_tokens(cnt)
 
     return (
         t.select("doc_id", "n_tokens")
@@ -228,37 +245,12 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select(
         "doc_id", toks.alias("t"), F.size(toks).cast("long").alias("n_tokens")
     )
-    spans = (
-        t.filter(F.col("n_tokens") >= SPAN_W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    (F.col("n_tokens") - (SPAN_W - 1)).cast("int"),
-                    F.lit(SPAN_S),
-                )
-            ).alias("pos"),
-            "t",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.xxhash64(F.concat_ws(" ", F.expr(f"slice(t, pos, {SPAN_W})"))).alias(
-                "dig"
-            ),
-        )
-    )
-    wd = Window.partitionBy("dig")
     # first occurrence ranks by the lexicographic (doc_id, pos) STRUCT —
     # an arithmetic doc_id*1e6+pos encoding would alias/overflow once a
     # document exceeds 1M token positions (r7 ADVICE); struct min cannot
     okey = F.struct("doc_id", "pos")
-    marked = spans.select(
-        "doc_id",
-        "pos",
-        F.count(F.lit(1)).over(wd).alias("c"),
-        F.min(okey).over(wd).alias("kk"),
+    marked = span_digests(t).withColumn(
+        "kk", F.min(okey).over(Window.partitionBy("dig"))
     )
     rem = marked.filter((F.col("c") > 1) & (okey != F.col("kk"))).select(
         "doc_id",
@@ -367,64 +359,21 @@ def dedup_substring_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", toks.alias("t"), F.size(toks).cast("long").alias("n_tokens")
     )
 
-    def windows(src: DataFrame, stride: int) -> DataFrame:
-        return (
-            src.filter(F.col("n_tokens") >= SPAN_W)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(
-                        F.lit(1),
-                        (F.col("n_tokens") - (SPAN_W - 1)).cast("int"),
-                        F.lit(stride),
-                    )
-                ).alias("pos"),
-                "t",
-            )
-            .select(
-                "doc_id",
-                "pos",
-                F.xxhash64(
-                    F.concat_ws(" ", F.expr(f"slice(t, pos, {SPAN_W})"))
-                ).alias("dig"),
-            )
-        )
-
-    wd = Window.partitionBy("dig")
     flagged = (
-        windows(t, SPAN_S)
-        .withColumn("c", F.count(F.lit(1)).over(wd))
+        span_digests(t)
         .filter(F.col("c") > 1)
         .select("doc_id")
         .distinct()
     )
     ft = t.join(F.broadcast(flagged), "doc_id")
-    c1 = windows(ft, 1).withColumn("c", F.count(F.lit(1)).over(wd))
+    c1 = span_digests(ft, 1)
     agg1 = c1.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows"),
         F.sum(F.when(F.col("c") > 1, 1).otherwise(0))
         .cast("long")
         .alias("n_dup_windows"),
     )
-    dup = c1.filter(F.col("c") > 1).select(
-        "doc_id", "pos", (F.col("pos") + (SPAN_W - 1)).alias("e")
-    )
-    prev_max = F.max("e").over(
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cov = dup.select(
-        "doc_id",
-        F.greatest(
-            F.lit(0),
-            F.col("e")
-            - F.greatest(F.col("pos") - 1, F.coalesce(prev_max, F.lit(0))),
-        ).alias("cover"),
-    )
-    agg2 = cov.groupBy("doc_id").agg(
-        F.sum("cover").cast("long").alias("dup_tokens_exact")
-    )
+    agg2 = dup_span_tokens(c1)
     return (
         ft.select("doc_id", "n_tokens")
         .join(agg1, "doc_id", "left_outer")
@@ -436,11 +385,11 @@ def dedup_substring_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_dup_windows"), F.lit(0))
             .cast("long")
             .alias("n_dup_windows"),
-            F.coalesce(F.col("dup_tokens_exact"), F.lit(0))
+            F.coalesce(F.col("dup_tokens"), F.lit(0))
             .cast("long")
             .alias("dup_tokens_exact"),
             r4(
-                F.coalesce(F.col("dup_tokens_exact"), F.lit(0)).cast("double")
+                F.coalesce(F.col("dup_tokens"), F.lit(0)).cast("double")
                 / F.col("n_tokens")
             ).alias("dup_frac_exact"),
         )

@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import fixture_dir, memo
 from upflow_spark.pipeline.textstats import BPE_PRETOK_RE
@@ -264,19 +265,10 @@ def _uni_estep(spark: SparkSession, pts: DataFrame, cdict: dict) -> DataFrame:
     )
 
 
-# Ceiling for the single-task EM kernel: the trainer state is the
-# Heaps-bounded weighted DISTINCT-pretoken relation plus the candidate
-# counts dict; under 2M pretokens (the BPE_TRAIN_LOCAL_MAX budget — a few
-# GiB of Python objects in the one worker this sandbox runs) the whole
-# seed + {UNI_ROUNDS}-round hard-EM loop runs in ONE bounded executor
-# task instead of 1 + 2*rounds serial collect jobs whose per-job overhead
-# dominated at fixture scale. Past the ceiling the distributed loop below
-# runs unchanged (test-forced, identical output — every count is an
-# integer sum, order-free across partitions, and the per-pretoken DP is
-# the shared _viterbi_tokens).
-UNI_TRAIN_LOCAL_MAX = 1 << 21
-
-
+# Under ceilings.TRAIN_LOCAL_MAX pretokens the whole seed + hard-EM loop
+# runs in ONE task (_uni_em_local); past it the distributed loop runs
+# unchanged. Identical output: every count is an integer sum, order-free
+# across partitions, and the per-pretoken DP is the shared _viterbi_tokens.
 def _uni_em_local(pairs: list, rounds: int) -> dict:
     """Seed + `rounds` hard-EM rounds over [(pt, w)] — the exact loop the
     distributed path runs (integer sums; shared _viterbi_tokens DP)."""
@@ -335,7 +327,7 @@ def _uni_counts(spark: SparkSession, sf_dir: str) -> dict:
         # EM loop is ONE bounded task (one job instead of 1 + 2*rounds
         # serial collects); the distributed loop is the past-ceiling
         # path, test-forced for output equality
-        if pts.count() <= UNI_TRAIN_LOCAL_MAX:
+        if pts.count() <= ceilings.TRAIN_LOCAL_MAX:
             return {
                 r["k"]: int(r["v"])
                 for r in pts.select("pt", "w")
@@ -568,7 +560,7 @@ def stream_tokenizer_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in ONE bounded task that directly emits the (pretoken -> token
     # count) map (seed + EM + final segmentation), replacing 4 serial
     # collect jobs; the distributed loop is the past-ceiling fallback
-    if pts.count() <= UNI_TRAIN_LOCAL_MAX:
+    if pts.count() <= ceilings.TRAIN_LOCAL_MAX:
         ntok = {
             r["k"]: int(r["v"])
             for r in pts.select("pt", "w")

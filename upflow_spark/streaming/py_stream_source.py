@@ -19,6 +19,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import LongType, StructField, StructType
 
 from upflow_spark.registry import query
+from upflow_spark.session import small_shuffles
 
 _TOTAL = 10_000
 _BATCH = 2_500
@@ -84,12 +85,8 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("raw").alias("raw_sum"),
     )
     ckpt = tempfile.mkdtemp(prefix="upflow_pystream_ckpt_")
-    # state-store partition count is pinned at query start (same sizing
-    # rationale as streams.run_to_completion): 50 device keys across 4
-    # micro-batches do not need 32 state partitions' per-batch overhead
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # 50 device keys across 4 micro-batches: a small state store
+    with small_shuffles(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName("upflow_pystream_result")
@@ -104,6 +101,4 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # offset/checkpoint machinery.
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     return spark.table("upflow_pystream_result")

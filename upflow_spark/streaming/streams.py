@@ -36,7 +36,7 @@ from upflow_spark.io import load, path_of
 from upflow_spark.memo import fixture_dir
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
-from upflow_spark.session import ensure_conf
+from upflow_spark.session import ensure_conf, small_shuffles
 
 # Explicit schema (required by the streaming file source). The fixture's ts
 # layout varies by generation (FIXTURES.md landmine): legacy drops are INT64
@@ -95,21 +95,17 @@ def run_to_completion(
 ) -> DataFrame:
     """Drain an availableNow query into a memory sink; return the result.
 
-    State-store partition count == shuffle partitions AT QUERY START and is
-    then pinned into the checkpoint. 32 partitions x 2-sided join state is
-    pure per-microbatch overhead at fixture scale (measured: stream-stream
-    join 8.0s -> 2.7s at 8 partitions, identical rows; simple window aggs
-    are another ~8% faster at 4 — measured r4 on stream_tumbling). Real
-    deployments size this to state volume / executor count the same way —
-    per query, not per session — so the temporary override below IS the
-    scale pattern.
+    The query's state store gets `state_partitions` partitions (see
+    :func:`~upflow_spark.session.small_shuffles`). 32 partitions x 2-sided
+    join state is pure per-microbatch overhead at fixture scale (measured:
+    stream-stream join 8.0s -> 2.7s at 8 partitions, identical rows; simple
+    window aggs are another ~8% faster at 4 — measured r4 on
+    stream_tumbling).
     """
     spark = stream_df.sparkSession
     name = f"upflow_stream_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix="upflow_ckpt_")
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with small_shuffles(spark, state_partitions):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -119,8 +115,6 @@ def run_to_completion(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     return spark.table(name)
 
 
@@ -1006,12 +1000,8 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(idx_dir, f"wave={int(w)}")
             )
 
-    # size the per-wave joins to the wave (hundreds of rows), not the
-    # session default — the _cc_labels per-query sizing pattern; each wave
-    # is 2 joins + a distinct, so 200-partition tasks are pure overhead
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # each wave is 2 joins + a distinct over hundreds of rows
+    with small_shuffles(spark):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1022,8 +1012,6 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     out = spark.read.parquet(out_dir)
     # constant-size graded output: per-wave ingest report (the judge-facing
     # shape of the minhash/ANN summary keys)
@@ -1377,9 +1365,7 @@ def stream_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(rep_dir, f"wave={int(w)}")
             )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with small_shuffles(spark):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1390,8 +1376,6 @@ def stream_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     return spark.read.parquet(rep_dir).select(
         "wave",
         "n_vectors",
