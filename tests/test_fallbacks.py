@@ -67,7 +67,7 @@ def test_only_ceilings_binds_a_ceiling_name():
     forcing that ceiling a silent no-op in its module."""
     load_all_modules()
     names = {n for n in vars(ceilings) if n.isupper()}
-    assert len(names) == 8
+    assert len(names) == 7
     binders = sorted(
         (m, n)
         for m, mod in list(sys.modules.items())

@@ -10,6 +10,7 @@ its defining property row-by-row.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 import upflow_spark  # noqa: F401
 from upflow_spark.registry import QUERIES
@@ -746,6 +747,31 @@ def test_pq_encode_matches_numpy_reference(spark):
     assert np.mean(mses) < x.var(axis=0).mean()
 
 
+def test_stream_tumbling_leaves_no_scratch(spark):
+    """Repeated streaming runs must not pile up scratch dirs: the
+    file-stream source dir is named by the fixture's identity (the same
+    name in every process), and run_to_completion deletes its checkpoint
+    once the availableNow query has drained — the returned memory-sink
+    table still reads after that."""
+    import glob
+    import os
+    import tempfile
+
+    from upflow_spark.memo import fixture_dir
+    from upflow_spark.streaming.streams import _stream_dir
+
+    def dirs(prefix: str) -> set:
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), prefix + "_*")))
+
+    ckpt0, src0 = dirs("upflow_ckpt"), dirs("upflow_stream_src")
+    for _ in range(2):
+        assert QUERIES["stream_tumbling"](spark, SF).count() > 0
+    assert dirs("upflow_ckpt") - ckpt0 == set()
+    src = fixture_dir(SF, "events", "upflow_stream_src")
+    assert _stream_dir(SF) == src and os.path.isdir(src)
+    assert dirs("upflow_stream_src") - src0 <= {src}
+
+
 def test_update_mode_emits_incremental_updates(spark):
     """stream_update_mode must actually run MULTIPLE micro-batches: the
     update-mode sink accumulates one row per (key, batch-with-change), so
@@ -1246,31 +1272,77 @@ def _ref_bpe(pt: str, merges) -> list[str]:
         seq = out
 
 
-def test_bpe_apply_matches_reference(spark):
-    """The window-arithmetic merge loop must reproduce a plain-Python BPE
-    for every distinct pretoken in the corpus — and the merges must
-    actually FIRE (multi-char tokens, second-order merges included)."""
+# pretokens that stress the encoder's edge cases: overlapping runs of one
+# pair (eee, rrrr), a pair merged twice into a chain (erer with er+er in
+# the table), single characters and non-ASCII text
+_BPE_EDGE_PTS = [
+    "eee", "rrrr", "erer", "ererer", "ssst", " stst", "thethe",
+    "e", " ", "x", "über", " café", "日本語", "naïve",
+]
+
+
+def _bpe_case(spark, case: str):
+    """(merges, {pt: [(pos, sym)]}) of one encoder input set."""
     from pyspark.sql import functions as F
 
-    from upflow_spark.pipeline.bpe import MERGES, bpe_tokens_per_pretoken
+    from upflow_spark.io import load
+    from upflow_spark.pipeline.bpe import (
+        BPE_PRETOK_RE,
+        MERGES,
+        _bpe_final_state,
+        _encode,
+    )
 
-    got = {}
-    for r in bpe_tokens_per_pretoken(spark, SF).groupBy("pt").agg(
-        F.collect_list("sym").alias("syms")
-    ).collect():
-        got[r["pt"]] = sorted(r["syms"])
+    if case == "fixed":
+        merges, state = MERGES, _bpe_final_state(spark, SF)
+    else:
+        if case == "learned":
+            merges = [
+                (r["lft"], r["rgt"])
+                for r in QUERIES["tokenize_bpe_train"](spark, SF)
+                .orderBy("merge_rank")
+                .collect()
+            ]
+            pts = load(spark, SF, "documents").select(
+                F.explode(
+                    F.regexp_extract_all("text", F.lit(BPE_PRETOK_RE), 0)
+                ).alias("pt")
+            ).distinct()
+        else:
+            merges = [("e", "e"), ("r", "r"), ("er", "er")] + MERGES
+            pts = spark.createDataFrame([(p,) for p in _BPE_EDGE_PTS], "pt string")
+        state = _encode(pts, merges)
+    got: dict = {}
+    for r in state.collect():
+        got.setdefault(r["pt"], []).append((r["pos"], r["sym"]))
+    return merges, {pt: sorted(v) for pt, v in got.items()}
+
+
+@pytest.mark.parametrize("case", ["fixed", "learned", "edge"])
+def test_bpe_apply_matches_reference(spark, case):
+    """The encoder must reproduce a plain-Python BPE for every pretoken —
+    the corpus vocabulary under the fixed and the learned table, and an
+    adversarial pretoken list — with each symbol at the start position
+    of its characters; and the merges must actually FIRE (multi-char
+    tokens, second-order merges included)."""
+    merges, got = _bpe_case(spark, case)
+    if case == "edge":
+        assert set(got) == set(_BPE_EDGE_PTS)
     assert got, "no pretokens"
     fired = 0
     second_order = 0
     for pt, syms in got.items():
-        ref = _ref_bpe(pt, MERGES)
-        assert sorted(ref) == syms, (pt, ref, syms)
+        ref = _ref_bpe(pt, merges)
+        starts = [sum(map(len, ref[:i])) + 1 for i in range(len(ref))]
+        assert list(zip(starts, ref)) == syms, (pt, ref, syms)
         if len(ref) < len(pt):
             fired += 1
         if any(len(s) >= 3 for s in ref):
             second_order += 1
     assert fired >= len(got) // 2, "merges barely fire — table mismatch with corpus"
     assert second_order >= 1, "no second-order merge ever applied"
+    if case == "edge":
+        assert got["erer"] == [(1, "erer")] and got["rrrr"] == [(1, "rr"), (3, "rr")]
 
 
 def _ref_bpe_train(pretok_counts: dict, rounds: int):

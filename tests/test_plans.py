@@ -666,16 +666,35 @@ def test_no_unpartitioned_window_over_data_sized_relation(spark):
     )
 
 
-def test_bpe_apply_is_jvm_only_partitioned_windows(spark):
-    """r9: the BPE merge loop must stay entirely JVM-side (map-literal rank
-    lookup + pretoken-partitioned windows — no Python workers), and the
+def test_bpe_encode_is_jvm_only_row_local(spark):
+    """The BPE encoder must stay entirely JVM-side and row-local: one
+    expression per distinct pretoken (map-literal rank lookup inside
+    higher-order functions), with no Python worker, no single-partition
+    exchange and no coalesce to one task. The key's own plan scans the
+    memo's checkpoint, so the encoder's plan is checked directly; the
     corpus join against the token-count cache must broadcast."""
+    from pyspark.sql import functions as F
+
+    from upflow_spark.io import load
+    from upflow_spark.pipeline.bpe import BPE_PRETOK_RE, _encode
+
+    pts = load(spark, SF, "documents").select(
+        F.explode(F.regexp_extract_all("text", F.lit(BPE_PRETOK_RE), 0)).alias("pt")
+    ).distinct()
+    enc = _encode(pts)
+    enc_plan = enc._sc._jvm.PythonSQLUtils.explainString(
+        enc._jdf.queryExecution(), "formatted"
+    )
+    for node in ("MapInPandas", "PythonUDF", "BatchEvalPython", "SinglePartition"):
+        assert node not in enc_plan, node
+    for node in ("Coalesce", "Window"):  # no one-task stage, no window rounds
+        assert not re.search(rf"^\(\d+\) {node}", enc_plan, re.M), enc_plan
     plan = plan_of(spark, "tokenize_bpe_apply")
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
     assert "PythonUDF" not in plan
     assert "BroadcastHashJoin" in plan
     df = QUERIES["tokenize_bpe_apply"](spark, SF)
-    assert not _unpartitioned_windows(df), "merge loop windows must partition by pt"
+    assert not _unpartitioned_windows(df)
 
 
 def test_ivf_pq_batch_one_codes_join_no_probe_loop(spark):

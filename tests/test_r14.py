@@ -114,21 +114,6 @@ def test_bpe_train_fallback_equals_local_kernel(spark):
     assert got == want and len(got) == 16
 
 
-def test_bpe_apply_fallback_equals_local_kernel(spark):
-    """_run_merge_loop (r14): past BPE_APPLY_LOCAL_MAX the distributed
-    window loop must encode the EXACT state the bounded single-task
-    kernel encodes — forcing the ceiling to 0 routes the apply through
-    the window rounds."""
-    from upflow_spark.registry import QUERIES
-
-    want = sorted(map(tuple, QUERIES["tokenize_bpe_apply"](spark, SF).collect()))
-    with forced("BPE_APPLY_LOCAL_MAX"):
-        got = sorted(
-            map(tuple, QUERIES["tokenize_bpe_apply"](spark, SF).collect())
-        )
-    assert got == want
-
-
 def test_coreness_fallback_equals_broadcast(spark):
     """graph_coreness (r14): the distributed shuffle rounds (past the
     CORENESS_BCAST_NODES label-broadcast ceiling) must produce the EXACT

@@ -87,7 +87,7 @@ SHOWCASE = [
     ("agg_median_per_group_two_phase", "GROUPED two-phase rank: 5 hot groups range-partitioned across ALL partitions; offsets window partitioned by group"),
     ("curation_dsir_weights", "selection stage scale-true (r9): global keep-rank via rank2 with the doc total riding the broadcast offsets relation"),
     ("emb_dedup_ann_verified", "fused single-kernel verify: ONE MapInPandas over the raw LSH candidate stream (no intermediate pair relation, no second Arrow pass), candidate joins broadcast on the KB-scale bucket table"),
-    ("tokenize_bpe_apply", "BPE merge loop as pretoken-partitioned window stages (JVM-only, zero Python), corpus joins the vocab-sized token-count cache via BroadcastHashJoin"),
+    ("tokenize_bpe_apply", "BPE encode as one row-local Catalyst expression per distinct pretoken (JVM-only, zero Python, no window or single-partition stage), corpus joins the vocab-sized token-count cache via BroadcastHashJoin"),
     # r10 showcases: relational pruning, deterministic compaction, chunking, IVF-PQ
     ("scan_manifest_pruned", "relational manifest pruning (r10): the bucket selection broadcast-semi-joins the partitioned scan and arrives as a dynamicpruningexpression PartitionFilter — no driver-side id list, prune scales with manifest size"),
     ("sink_compaction_binpack", "the bin-pack rewrite is scan -> ONE RoundRobin exchange -> write (deterministic target file count); stats row joins two bounded aggregates, file counts from _metadata on the actual read-back"),

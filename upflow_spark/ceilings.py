@@ -52,13 +52,6 @@ BROADCAST_MAX_BYTES = 256 << 20
 # past BROADCAST_MAX_BYTES too).
 VOCAB_BROADCAST_MAX_TERMS = 1 << 22
 
-# Single-task BPE encode kernel: the apply state is position rows over the
-# Heaps-bounded distinct-pretoken relation, and under ~4M rows the whole
-# merge loop runs in ONE task, as production encoders apply merge tables
-# per pretoken locally. The kernel holds the state as Python objects,
-# ~10-20x the Arrow footprint: ~1.5-3 GiB in one worker at the ceiling.
-BPE_APPLY_LOCAL_MAX = 1 << 22
-
 # Single-task tokenizer trainers (BPE merges and the unigram hard-EM
 # loop): the training state is the Heaps-bounded distinct-pretoken
 # relation (never the corpus), and under ~2M pretokens the whole loop runs

@@ -3,10 +3,7 @@
 `tokenize_bpe_pretok` (textstats.py) stops at pre-tokenization statistics;
 this module applies an actual byte-pair-merge ENCODE against a fixed,
 public-style merges table, making token counts tokenizer-accurate instead
-of whitespace-proxy. Everything is expressed as bounded iterations of
-window functions over POSITION ROWS — no UDF on the Spark side, and the
-DuckDB oracle runs the byte-identical unrolled algorithm, so the merge
-dynamics themselves are what the hash comparison verifies.
+of whitespace-proxy.
 
 Algorithm (classic BPE apply, cf. Sennrich et al. 2016 / the GPT-2
 tokenizer): start from the character sequence of each pretoken; each
@@ -17,19 +14,24 @@ repeat until no pair from the table remains.
 Two structural decisions make this scale:
 
 1. **Tokenize the DISTINCT pretoken vocabulary, not the corpus.** BPE of a
-   pretoken is a pure function, so the merge loop runs over the
+   pretoken is a pure function, so the encoder runs over the
    Heaps-law-bounded distinct-pretoken relation (61 rows at the fixtures;
    sub-linear in corpus size) and the corpus only pays one broadcast join
    from pretoken → token count. This is the same cache every production
    tokenizer keeps.
 
-2. **Left-to-right non-overlapping merge as window arithmetic.** A matched
-   position merges iff the number of CONSECUTIVE matched positions
-   immediately before it is even (run parity). With per-position rows this
-   is: a cumulative non-match count partitions positions into runs, a
-   row_number inside each run gives the parity, and a lag() marks the
-   absorbed right-hand positions. All windows partition by pretoken —
-   high-cardinality, no single-partition stage.
+2. **One row-local expression per pretoken.** Spark encodes each
+   pretoken with a single Catalyst expression (`_encode`): an `aggregate`
+   over the merge rounds whose state is the pretoken's (pos, sym) array.
+   No UDF, no Python worker, no window and no single-task stage — the
+   encode is distributed by construction.
+
+The DuckDB oracle is an independent formulation of the same dynamics: an
+unrolled chain of window CTEs over position rows, where a matched
+position merges iff the number of consecutive matched positions
+immediately before it is even (run parity). The hash comparison
+therefore verifies the merge dynamics — rank priority, left-to-right
+non-overlap, recursive merges — across two different algorithms.
 
 Iteration bound (documented per the verdict ask): a fully-merged pair
 (L, R) can never re-form — merging only ever *combines adjacent* symbols,
@@ -37,11 +39,11 @@ so two non-adjacent occurrences of L and R stay separated by at least one
 (possibly combined) symbol, and the new symbols P⋅LR / LR⋅N differ from
 L, R. Each iteration therefore permanently exhausts at least one rank, so
 **len(MERGES) iterations always suffice** (and min(len(pretoken))−1 is a
-second bound). The loop is unrolled exactly len(MERGES) times on both
-engines — convergence is a theorem, not a budget.
+second bound). Both engines run exactly len(MERGES) rounds — convergence
+is a theorem, not a budget.
 
-No reference implementation exists to cite (/root/reference is empty —
-SURVEY §0); the algorithm follows the public BPE formulation.
+No reference implementation exists to cite (SURVEY §0); the algorithm
+follows the public BPE formulation.
 """
 
 from __future__ import annotations
@@ -102,139 +104,77 @@ def _merge_map(merges: list[tuple[str, str]] = MERGES):
     return F.create_map(*kv)
 
 
-def _bpe_apply_kernel(merges: list):  # noqa: ANN201
-    """mapInPandas kernel: per pretoken, n_iter rounds of 'merge the
-    minimum-rank adjacent pair's occurrences left-to-right
-    non-overlapping' — the exact per-round dynamics of the window loop
-    (per-pt best rank via min; run-parity == greedy scan), with ranks
-    keyed by (lft, rgt) TUPLES, which cannot collide (the loop needs the
-    \\x01 separator only because Catalyst map keys are strings). Position
-    values are the surviving row's original pos, as the loop keeps them.
-    A pretoken with no table pair present can never gain one without a
-    merge, so its early break skips provably idle rounds."""
-    rank_of = {(lft, rgt): i for i, (lft, rgt) in enumerate(merges)}
-    n_iter = len(merges)
+def _encode(pts: DataFrame, merges: list[tuple[str, str]] = MERGES) -> DataFrame:
+    """(pt, pos, sym) rows of every pretoken of `pts` (a `pt` relation)
+    encoded by `merges`: `pos` is the 1-based character position where
+    the symbol starts.
 
-    def kernel(batches):  # noqa: ANN001, ANN202
-        import pandas as pd
-
-        by_pt: dict = {}
-        for pdf in batches:
-            for pt, pos, sym in zip(pdf["pt"], pdf["pos"], pdf["sym"]):
-                by_pt.setdefault(pt, []).append((int(pos), str(sym)))
-        opt: list = []
-        opos: list = []
-        osym: list = []
-        for pt, seq in by_pt.items():
-            seq.sort()
-            for _ in range(n_iter):
-                best = None
-                for i in range(len(seq) - 1):
-                    r = rank_of.get((seq[i][1], seq[i + 1][1]))
-                    if r is not None and (best is None or r < best):
-                        best = r
-                if best is None:
-                    break
-                lft, rgt = merges[best]
-                ns: list = []
-                i = 0
-                while i < len(seq):
-                    if (
-                        i + 1 < len(seq)
-                        and seq[i][1] == lft
-                        and seq[i + 1][1] == rgt
-                    ):
-                        ns.append((seq[i][0], lft + rgt))
-                        i += 2
-                    else:
-                        ns.append(seq[i])
-                        i += 1
-                seq = ns
-            for pos, sym in seq:
-                opt.append(pt)
-                opos.append(pos)
-                osym.append(sym)
-        yield pd.DataFrame(
-            {
-                "pt": pd.array(opt, dtype="string"),
-                "pos": pd.array(opos, dtype="int32"),
-                "sym": pd.array(osym, dtype="string"),
-            }
-        )
-
-    return kernel
-
-
-def _run_merge_loop(st: DataFrame, merges: list[tuple[str, str]] = MERGES) -> DataFrame:
-    """Apply the full unrolled merge loop to a (pt, pos, sym) state."""
-    # materialize before the gate: the count below evaluates the caller's
-    # full lineage (pretokenize + distinct + posexplode) and the kernel/
-    # loop would re-evaluate it — both callers pass st un-checkpointed
-    # (r14 ADVICE; the pattern _bpe_train_merges applies to `occ`)
-    st = st.localCheckpoint()
-    if st.count() <= ceilings.BPE_APPLY_LOCAL_MAX:
-        return st.coalesce(1).mapInPandas(
-            _bpe_apply_kernel([(str(a), str(b)) for a, b in merges]),
-            "pt string, pos int, sym string",
-        )
+    One row-local expression per pretoken: the state is an array of
+    (pos, sym) structs and `aggregate` folds len(merges) rounds over it
+    (the module docstring's bound). A round looks up every adjacent pair's
+    rank in the collision-safe literal map, takes the minimum and, when
+    one is present, rebuilds the array merging that pair's occurrences
+    left to right without overlap; the merged symbol keeps its left
+    half's pos. No index is ever out of bounds, so ANSI mode is safe."""
     mm = _merge_map(merges)
-    n_iter = len(merges)
-    w_pt = Window.partitionBy("pt").orderBy("pos")
-    for it in range(n_iter):
-        nxt = F.lead("sym").over(w_pt)
-        rank = F.element_at(mm, F.concat(F.col("sym"), F.lit(_SEP), nxt))
-        s1 = st.select("pt", "pos", "sym", nxt.alias("nxt"), rank.alias("rank"))
-        best = F.min("rank").over(Window.partitionBy("pt"))
-        s2 = s1.withColumn(
-            "mt", F.col("rank").isNotNull() & (F.col("rank") == best)
-        )
-        nm = F.coalesce(
-            F.sum(F.when(~F.col("mt"), 1).otherwise(0)).over(
-                w_pt.rowsBetween(Window.unboundedPreceding, -1)
+
+    def merge_round(s, _):  # noqa: ANN001, ANN202
+        pairs = F.zip_with(
+            s,
+            F.slice(s, 2, F.size(s)),  # right neighbours; NULL past the last
+            lambda a, b: F.struct(
+                a["pos"].alias("pos"),
+                a["sym"].alias("sym"),
+                b["sym"].alias("nxt"),
+                F.element_at(mm, F.concat(a["sym"], F.lit(_SEP), b["sym"])).alias(
+                    "rank"
+                ),
             ),
-            F.lit(0),
         )
-        s3 = s2.withColumn("nm", nm)
-        rn = F.row_number().over(Window.partitionBy("pt", "nm").orderBy("pos"))
-        s4 = s3.withColumn("merge_at", F.col("mt") & (rn % 2 == 1))
-        absorbed = F.coalesce(F.lag("merge_at").over(w_pt), F.lit(False))
-        st = (
-            s4.withColumn("absorbed", absorbed)
-            .filter(~F.col("absorbed"))
-            .select(
-                "pt",
-                "pos",
-                F.when(F.col("merge_at"), F.concat(F.col("sym"), F.col("nxt")))
-                .otherwise(F.col("sym"))
-                .alias("sym"),
+        best = F.array_min(F.transform(pairs, lambda p: p["rank"]))
+
+        def step(acc, p):  # noqa: ANN001, ANN202
+            hit = F.coalesce(p["rank"] == acc["best"], F.lit(False))
+            sym = F.when(hit, F.concat(p["sym"], p["nxt"])).otherwise(p["sym"])
+            tok = F.struct(p["pos"].alias("pos"), sym.alias("sym"))
+            appended = acc.withField("out", F.array_append(acc["out"], tok))
+            return F.when(acc["skip"], acc.withField("skip", F.lit(False))).otherwise(
+                appended.withField("skip", hit)
             )
+
+        # `best` rides in the accumulator so it is evaluated once per round
+        zero = F.struct(
+            F.array().cast("array<struct<pos:int,sym:string>>").alias("out"),
+            F.lit(False).alias("skip"),
+            best.alias("best"),
         )
-        if (it + 1) % 5 == 0 and it + 1 < n_iter:
-            # bound Catalyst's analysis of the chained window stages; the
-            # relation is vocab-sized, so the materialization is trivial
-            st = st.localCheckpoint()
-    return st
+        merged = F.aggregate(pairs, zero, step, lambda acc: acc["out"])
+        return F.when(best.isNull(), s).otherwise(merged)
+
+    state = F.transform(
+        F.split("pt", ""),
+        lambda c, i: F.struct((i + 1).alias("pos"), c.alias("sym")),
+    )
+    if merges:  # sequence(1, 0) is [1, 0], not empty
+        rounds = F.sequence(F.lit(1), F.lit(len(merges)))
+        state = F.aggregate(rounds, state, merge_round)
+    return pts.select("pt", F.inline(state))
 
 
 def _bpe_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(pt, pos, sym) after the FULL merge loop over the distinct-pretoken
-    vocabulary — localCheckpoint'd so every consumer (token counts, vocab
-    ids, bin packing) shares one loop execution. The merge loop is ~25
-    small jobs (20 chained window stages + lineage cuts) over the
-    vocab-sized relation — pure job-floor overhead to rerun per query. A
-    trained tokenizer IS a persisted artifact; the session memo is that
-    artifact."""
+    """(pt, pos, sym) of the distinct-pretoken vocabulary encoded by
+    MERGES — localCheckpoint'd so every consumer (token counts, vocab ids,
+    bin packing) shares one encode job instead of re-running the corpus
+    scan, pretoken distinct and per-pretoken expression per query. An
+    encoded vocabulary IS a persisted tokenizer artifact; the session memo
+    is that artifact."""
 
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
         pts = d.select(
             F.explode(F.regexp_extract_all("text", F.lit(BPE_PRETOK_RE), 0)).alias("pt")
         ).distinct()
-        # char position rows; split("") yields the char array
-        st = pts.select(
-            "pt", F.posexplode(F.split(F.col("pt"), "")).alias("p0", "sym")
-        ).select("pt", (F.col("p0") + 1).alias("pos"), "sym")
-        return _run_merge_loop(st).localCheckpoint()
+        return _encode(pts).localCheckpoint()
 
     return memo(spark, sf_dir, "documents", "bpe_state", build)
 
@@ -248,7 +188,8 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_cte(rounds: int = N_ITER) -> str:
-    """The byte-identical unrolled merge loop as chained DuckDB CTEs.
+    """The reference merge loop as chained DuckDB window CTEs (run-parity
+    arithmetic over position rows, unrolled `rounds` times).
 
     Every CTE is referenced more than once → AS MATERIALIZED throughout
     (the DuckDB 1.0 CTE-inlining rule, see _cc_contraction_cte)."""
@@ -353,20 +294,21 @@ GROUP BY o.lang
 )
 def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Actual BPE ENCODE statistics per language: apply the fixed MERGES
-    table to every pretoken (full merge loop, unrolled N_ITER times — a
-    proven-sufficient bound, see module docstring) and report exact
-    pretoken counts, tokenizer-accurate BPE token counts, mean tokens per
-    pretoken, and the per-language encoded-symbol vocabulary size.
+    table to every pretoken (N_ITER merge rounds — a proven-sufficient
+    bound, see module docstring) and report exact pretoken counts,
+    tokenizer-accurate BPE token counts, mean tokens per pretoken, and the
+    per-language encoded-symbol vocabulary size.
 
-    Both engines run the byte-identical unrolled algorithm (window
-    arithmetic over position rows), so the hash comparison verifies the
-    merge DYNAMICS — rank priority, left-to-right non-overlap, recursive
-    merges consuming merged symbols — not just the counts.
+    Spark encodes each pretoken with one row-local expression (`_encode`);
+    the DuckDB oracle runs the unrolled window-CTE formulation, so the
+    hash comparison verifies the merge DYNAMICS — rank priority,
+    left-to-right non-overlap, recursive merges consuming merged symbols —
+    not just the counts.
 
-    Scale: the merge loop touches only the distinct-pretoken vocabulary
-    (Heaps-bounded); the corpus pays one scan into a (lang, pt) rollup and
-    a broadcast join against the token-count cache. All windows partition
-    by pretoken — nothing single-partition anywhere.
+    Scale: the encoder touches only the distinct-pretoken vocabulary
+    (Heaps-bounded) and runs per row wherever its partition lives; the
+    corpus pays one scan into a (lang, pt) rollup and a broadcast join
+    against the token-count cache. Nothing single-partition anywhere.
     """
     d = load(spark, sf_dir, "documents")
     counts = bpe_token_counts(spark, sf_dir)
@@ -566,8 +508,7 @@ def tokenize_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the training half that MERGES stubs for the apply keys: N_TRAIN
     rounds of (weighted adjacent-pair count over the distinct-pretoken
     vocabulary → global argmax → merge that pair everywhere), i.e. classic
-    BPE training (Sennrich et al. 2016), distributed the way the apply
-    loop already is.
+    BPE training (Sennrich et al. 2016).
 
     Output: the learned merge list (merge_rank, lft, rgt, pair_count) —
     the artifact a tokenizer pipeline persists and ships to the encoder.
@@ -585,7 +526,7 @@ def tokenize_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
          engines' binary string order). Bounded-driver class: a K-row
          seed, same as the PQ codebook seeds; never data-sized.
       3. Apply the single winning pair via the run-parity window
-         arithmetic shared with the apply loop.
+         arithmetic of the apply oracle (_bpe_cte).
 
     Convergence bound (carried over from the apply loop's theorem): a
     merged pair (L, R) can never re-form — merging only combines adjacent
@@ -771,7 +712,7 @@ def bpe_tokens_per_pretoken(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pt, sym) rows of the FINAL encoded state — the token identities
     behind tokenize_bpe_apply's vocabulary stat (bpe_token_counts only
     keeps the per-pretoken count). Shares _bpe_final_state's checkpoint
-    with the count consumer — one merge-loop run serves both."""
+    with the count consumer — one encode serves both."""
     return _bpe_final_state(spark, sf_dir).select("pt", "sym")
 
 
@@ -801,7 +742,7 @@ FROM per_sym
 )
 def tokenize_bpe_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained-tokenizer VOCABULARY artifact: every encoded symbol the
-    merge loop produces over this corpus, with its corpus-wide occurrence
+    encoder produces over this corpus, with its corpus-wide occurrence
     count and a dense frequency-ranked id (ties by symbol — the
     deterministic id assignment a tokenizer ships). Completes the BPE
     story: MERGES (fixed table) + encode (tokenize_bpe_apply) + vocab/ids
@@ -946,9 +887,9 @@ def tokenize_bpe_apply_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: the learned table is the memoized 16-row training artifact
     (bounded-driver: the same class as a persisted merges file), compiled
-    into the collision-safe literal rank map that the fixed-table apply
-    loop already uses; everything else is byte-shared with
-    tokenize_bpe_apply (distinct-pretoken loop, corpus rollup via one
+    into the collision-safe literal rank map of the same `_encode`
+    expression tokenize_bpe_apply uses; everything else is shared with
+    tokenize_bpe_apply (distinct-pretoken encode, corpus rollup via one
     broadcast join). Output shape matches tokenize_bpe_apply for direct
     fixed-vs-learned comparison.
     """
@@ -957,10 +898,7 @@ def tokenize_bpe_apply_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = d.select(
         F.explode(F.regexp_extract_all("text", F.lit(BPE_PRETOK_RE), 0)).alias("pt")
     ).distinct()
-    st = pts.select(
-        "pt", F.posexplode(F.split(F.col("pt"), "")).alias("p0", "sym")
-    ).select("pt", (F.col("p0") + 1).alias("pos"), "sym")
-    state = _run_merge_loop(st, merges=learned).localCheckpoint()
+    state = _encode(pts, learned).localCheckpoint()
     counts = state.groupBy("pt").agg(F.count(F.lit(1)).alias("n_toks"))
     pre = d.select(
         "doc_id",

@@ -15,6 +15,7 @@ backlog with the same plan and state semantics as the live query.
 from __future__ import annotations
 
 import pathlib
+import shutil
 import tempfile
 import uuid
 
@@ -64,9 +65,10 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> tuple[StructType, bo
 
 def _stream_dir(sf_dir: str) -> str:
     """The file-stream source requires a directory; the fixture is a single
-    parquet file. Build (once per sf_dir) a tempdir holding a symlink to it."""
+    parquet file. Build (once per fixture identity, shared across
+    processes) a tempdir holding a symlink to it."""
     src = pathlib.Path(path_of(sf_dir, "events")).resolve()
-    d = pathlib.Path(tempfile.gettempdir()) / f"upflow_stream_src_{abs(hash(str(src))):x}"
+    d = pathlib.Path(fixture_dir(sf_dir, "events", "upflow_stream_src"))
     link = d / "events.parquet"
     if not link.exists():
         d.mkdir(parents=True, exist_ok=True)
@@ -101,20 +103,26 @@ def run_to_completion(
     stream-stream join 8.0s -> 2.7s at 8 partitions, identical rows; simple
     window aggs are another ~8% faster at 4 — measured r4 on
     stream_tumbling).
+
+    The checkpoint is deleted once the query has terminated: the memory
+    sink holds the result, and nothing resumes a drained availableNow run.
     """
     spark = stream_df.sparkSession
     name = f"upflow_stream_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix="upflow_ckpt_")
-    with small_shuffles(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    try:
+        with small_shuffles(spark, state_partitions):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
