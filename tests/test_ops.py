@@ -1295,22 +1295,20 @@ def _bpe_case(spark, case: str):
 
     if case == "fixed":
         merges, state = MERGES, _bpe_final_state(spark, SF)
+    elif case == "learned":
+        merges = [
+            (r["lft"], r["rgt"])
+            for r in QUERIES["tokenize_bpe_train"](spark, SF)
+            .orderBy("merge_rank")
+            .collect()
+        ]
+        pts = load(spark, SF, "documents").select(
+            F.explode(F.regexp_extract_all("text", F.lit(BPE_PRETOK_RE), 0)).alias("pt")
+        ).distinct()
+        state = _encode(pts, merges)
     else:
-        if case == "learned":
-            merges = [
-                (r["lft"], r["rgt"])
-                for r in QUERIES["tokenize_bpe_train"](spark, SF)
-                .orderBy("merge_rank")
-                .collect()
-            ]
-            pts = load(spark, SF, "documents").select(
-                F.explode(
-                    F.regexp_extract_all("text", F.lit(BPE_PRETOK_RE), 0)
-                ).alias("pt")
-            ).distinct()
-        else:
-            merges = [("e", "e"), ("r", "r"), ("er", "er")] + MERGES
-            pts = spark.createDataFrame([(p,) for p in _BPE_EDGE_PTS], "pt string")
+        merges = [("e", "e"), ("r", "r"), ("er", "er")] + MERGES
+        pts = spark.createDataFrame([(p,) for p in _BPE_EDGE_PTS], "pt string")
         state = _encode(pts, merges)
     got: dict = {}
     for r in state.collect():
