@@ -11,6 +11,10 @@ depends on (verified runtime-settable on PySpark 4.1.2):
 - ``spark.sql.session.timeZone=UTC`` — keeps tz-aware expressions (window(),
   date_trunc on instant timestamps) aligned with DuckDB's naive timestamps.
 
+The local factory :func:`get_spark` also sets the driver JVM's flags: C1-only
+JIT and a class-data archive (see :func:`class_archive`). Both only change how
+fast the JVM starts and compiles, never what a query returns.
+
 Scale note (100 TB): AQE is left ON (default in 4.x) for skew-join splitting
 and post-shuffle coalescing; shuffle partitions are sized via env so the same
 code runs on a laptop's local[*] and 1000-executor clusters unchanged. Work
@@ -20,10 +24,18 @@ with :func:`small_shuffles`.
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import os
+import shutil
+import subprocess
+import sys
+import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 RUNTIME_CONFS: dict[str, str] = {
@@ -72,8 +84,18 @@ def _default_driver_mem() -> str:
     return f"{min(ram_mb // 2, 24 << 10)}m"
 
 
-def get_spark(app_name: str = "upflow-spark") -> SparkSession:
-    """Local session factory for tests/bench (the driver brings its own)."""
+# C1 only: at local scale about half of a pass's CPU went to C2 compiler
+# threads, whose code a short job never lives long enough to repay. JVM
+# log warnings (a class-data archive the JVM declines, say) go to stderr,
+# so a tool that prints one result line on stdout keeps its contract.
+JVM_OPTIONS = "-XX:TieredStopAtLevel=1 -Xlog:disable -Xlog:all=warning:stderr"
+
+# Per-user, outside any checkout: every checkout on a box shares one build.
+CDS_DIR = os.path.join(os.path.expanduser("~"), ".cache", "upflow-spark", "cds")
+CDS_BUILD_TIMEOUT_S = 600
+
+
+def _builder(app_name: str, java_options: str) -> SparkSession.Builder:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = os.environ.get("UPFLOW_SHUFFLE_PARTITIONS", "32")
     builder = (
@@ -92,7 +114,142 @@ def get_spark(app_name: str = "upflow-spark") -> SparkSession:
             os.environ.get("UPFLOW_DRIVER_MEM", _default_driver_mem()),
         )
         .config("spark.ui.enabled", "false")
+        # the default options, not the extra ones: --driver-java-options
+        # fills spark.driver.extraJavaOptions, and the JVM gets both
+        .config("spark.driver.defaultJavaOptions", java_options)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    return ensure_conf(builder.getOrCreate())
+    return builder
+
+
+def get_spark(app_name: str = "upflow-spark") -> SparkSession:
+    """Local session factory for tests/bench (the driver brings its own)."""
+    options = JVM_OPTIONS
+    archive = class_archive()
+    if archive:
+        options += f" -XX:SharedArchiveFile={archive}"
+    return ensure_conf(_builder(app_name, options).getOrCreate())
+
+
+def _empty_conf_dir() -> str | None:
+    """An empty dir to stand in for Spark's conf dir, or None.
+
+    JDK 17 dumps no archive while a non-empty dir is on the classpath, and
+    the conf dir is on the driver's. The stand-in changes no setting only
+    when the conf dir is the default one and holds nothing but templates.
+    """
+    empty = os.path.join(CDS_DIR, "conf")
+    if os.environ.get("SPARK_CONF_DIR", empty) != empty:
+        return None
+    conf = os.path.join(_find_spark_home(), "conf")
+    if not all(f.endswith(".template") for f in os.listdir(conf)):
+        return None
+    os.makedirs(empty, exist_ok=True)
+    return empty
+
+
+def _digest(conf_dir: str) -> str:
+    """Names the JDK and the driver classpath an archive was dumped for."""
+    java = os.environ.get("JAVA_HOME") or os.path.dirname(os.path.dirname(os.path.realpath(shutil.which("java"))))
+    h = hashlib.sha256(os.path.realpath(java).encode())
+    with open(os.path.join(java, "release"), "rb") as f:
+        h.update(f.read())
+    jars = os.path.join(_find_spark_home(), "jars")
+    for name in sorted(os.listdir(jars)):
+        st = os.stat(os.path.join(jars, name))
+        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    for var in ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+        h.update(f"{var}={os.environ.get(var, '')}\0".encode())
+    h.update(conf_dir.encode())
+    return h.hexdigest()[:16]
+
+
+def class_archive() -> str | None:
+    """Path of a validated class-data archive for the driver JVM that
+    :func:`get_spark` is about to start, or None to start without one.
+
+    The first call per JDK and classpath dumps the archive in a child
+    process (~15-30 s, once), under a lock; later calls only look it up.
+    A dump that fails leaves a ``.failed`` marker, so a box that cannot
+    dump does not try again (``rm -rf`` :data:`CDS_DIR` to reset). An
+    archive is promoted only after a JVM started on it exits cleanly: a
+    truncated one crashes the JVM at start. Every failure means None.
+    """
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None  # the JVM is up already and its flags are fixed
+    try:
+        conf_dir = _empty_conf_dir()
+        if conf_dir is None:
+            return None
+        base = os.path.join(CDS_DIR, _digest(conf_dir))
+        archive = base + ".jsa"
+        if not os.path.exists(archive) and not os.path.exists(base + ".failed"):
+            with open(base + ".lock", "w") as lock:
+                # another process is dumping: start without the archive
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                if not os.path.exists(archive) and not os.path.exists(base + ".failed"):
+                    _dump(base, conf_dir)
+        if not os.path.exists(archive):
+            return None
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+        return archive
+    except Exception:
+        return None
+
+
+def _dump(base: str, conf_dir: str) -> None:
+    """Dump and validate ``base.jsa`` in a child process; on any failure
+    write ``base.failed`` instead."""
+    tmp = base + ".jsa.tmp"
+    if os.path.exists(tmp):
+        os.remove(tmp)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_CONF_DIR=conf_dir)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    code = "import sys; from upflow_spark.session import _dump_child; _dump_child(sys.argv[1])"
+    try:
+        with open(base + ".log", "w") as log, tempfile.TemporaryDirectory() as cwd:
+            rc = subprocess.run(
+                [sys.executable, "-c", code, tmp],
+                env=env,
+                cwd=cwd,
+                stdin=subprocess.DEVNULL,
+                stdout=log,
+                stderr=log,
+                timeout=CDS_BUILD_TIMEOUT_S,
+            ).returncode
+    except subprocess.TimeoutExpired:
+        rc = -1
+    if rc == 0:
+        os.replace(tmp, base + ".jsa")
+        os.remove(base + ".log")
+    else:
+        open(base + ".failed", "w").close()
+
+
+def _dump_child(tmp: str) -> None:
+    """Run a small parquet round trip, an aggregate, a join and a window in
+    a session whose JVM dumps its loaded classes to ``tmp`` at exit; then
+    check that a JVM on the same classpath starts on the dump."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    spark = _builder("upflow-cds", f"{JVM_OPTIONS} -XX:ArchiveClassesAtExit={tmp}").getOrCreate()
+    jvm = spark.sparkContext._jvm
+    java_home = jvm.System.getProperty("java.home")
+    class_path = jvm.System.getProperty("java.class.path")
+    path = os.path.join(os.getcwd(), "t.parquet")
+    spark.range(1000).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s").write.parquet(path)
+    df = spark.read.parquet(path)
+    agg = df.groupBy("k").agg(F.count("*").alias("n"), F.sum("id").alias("t"))
+    w = Window.partitionBy("k").orderBy("id")
+    df.join(agg, "k").withColumn("r", F.row_number().over(w)).orderBy("id").collect()
+    spark.stop()
+    gateway = SparkContext._gateway
+    gateway.shutdown()
+    gateway.proc.stdin.close()  # the JVM exits at EOF on its stdin, dumping
+    if gateway.proc.wait(timeout=CDS_BUILD_TIMEOUT_S) != 0:
+        sys.exit(1)
+    check = [os.path.join(java_home, "bin", "java"), "-Xshare:on", f"-XX:SharedArchiveFile={tmp}"]
+    sys.exit(subprocess.run([*check, "-cp", class_path, "-version"]).returncode)
