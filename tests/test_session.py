@@ -74,7 +74,8 @@ def _archive_flag(args: list[str]) -> str | None:
 def test_jvm_flags_reach_driver_beside_submit_args_and_logs_stay_off_stdout(tmp_path):
     """--driver-java-options and the session's own flags both reach the
     JVM; a declined archive's warning goes to stderr, not stdout."""
-    out, stdout, stderr = _run(tmp_path, "foreign", "--driver-java-options '-Dupflow.probe=1' pyspark-shell")
+    submit_args = "--driver-java-options '-Dupflow.probe=1' pyspark-shell"
+    out, stdout, stderr = _run(tmp_path, "foreign", submit_args)
     assert out["rows"] == 5
     assert "-Dupflow.probe=1" in out["args"]
     assert "-XX:TieredStopAtLevel=1" in out["args"]

@@ -151,7 +151,9 @@ def _empty_conf_dir() -> str | None:
 
 def _digest(conf_dir: str) -> str:
     """Names the JDK and the driver classpath an archive was dumped for."""
-    java = os.environ.get("JAVA_HOME") or os.path.dirname(os.path.dirname(os.path.realpath(shutil.which("java"))))
+    java = os.environ.get("JAVA_HOME") or os.path.dirname(
+        os.path.dirname(os.path.realpath(shutil.which("java")))
+    )
     h = hashlib.sha256(os.path.realpath(java).encode())
     with open(os.path.join(java, "release"), "rb") as f:
         h.update(f.read())
