@@ -36,6 +36,7 @@ elif sys.argv[2] == "foreign":
 spark = session.get_spark("upflow-session-test")
 jvm = spark.sparkContext._jvm
 print(json.dumps({
+    "options": session.JVM_OPTIONS.split(),
     "args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
     "vm_info": jvm.System.getProperty("java.vm.info"),
     "rows": spark.range(5).count(),
@@ -78,7 +79,8 @@ def test_jvm_flags_reach_driver_beside_submit_args_and_logs_stay_off_stdout(tmp_
     out, stdout, stderr = _run(tmp_path, "foreign", submit_args)
     assert out["rows"] == 5
     assert "-Dupflow.probe=1" in out["args"]
-    assert "-XX:TieredStopAtLevel=1" in out["args"]
+    assert "-XX:Tier4InvocationThreshold=50000" in out["args"]
+    assert set(out["options"]) <= set(out["args"])
     assert _archive_flag(out["args"])
     assert "Unable to use shared archive" in stderr
     assert "[warning]" not in stdout
@@ -87,7 +89,7 @@ def test_jvm_flags_reach_driver_beside_submit_args_and_logs_stay_off_stdout(tmp_
 def test_failed_marker_starts_without_archive(tmp_path):
     out, _, _ = _run(tmp_path, "failed")
     assert out["rows"] == 5
-    assert "-XX:TieredStopAtLevel=1" in out["args"]
+    assert set(out["options"]) <= set(out["args"])
     assert _archive_flag(out["args"]) is None
     assert not glob.glob(str(tmp_path / "cds" / "*.jsa"))
 
