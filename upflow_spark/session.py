@@ -12,8 +12,8 @@ depends on (verified runtime-settable on PySpark 4.1.2):
   date_trunc on instant timestamps) aligned with DuckDB's naive timestamps.
 
 The local factory :func:`get_spark` also sets the driver JVM's flags: raised
-C2 JIT thresholds and a class-data archive (see :func:`class_archive`). Both only change how
-fast the JVM starts and compiles, never what a query returns.
+C2 JIT thresholds and a class-data archive (see :func:`class_archive`). Both
+change only how fast the JVM starts and compiles, never what a query returns.
 
 Scale note (100 TB): AQE is left ON (default in 4.x) for skew-join splitting
 and post-shuffle coalescing; shuffle partitions are sized via env so the same
