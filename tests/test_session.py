@@ -40,6 +40,7 @@ print(json.dumps({
     "args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
     "vm_info": jvm.System.getProperty("java.vm.info"),
     "rows": spark.range(5).count(),
+    "conf_dir_env": os.environ.get("SPARK_CONF_DIR"),
 }))
 spark.stop()
 """
@@ -68,8 +69,9 @@ def _run(tmp_path, mode: str, submit_args: str = "pyspark-shell") -> tuple[dict,
     return json.loads(p.stdout.strip().splitlines()[-1]), p.stdout, p.stderr
 
 
-def _archive_flag(args: list[str]) -> str | None:
-    return next((a for a in args if a.startswith("-XX:SharedArchiveFile=")), None)
+def _flag(args: list[str], name: str) -> str | None:
+    """The value of JVM flag ``-XX:<name>=`` in ``args``, or None."""
+    return next((a.split("=", 1)[1] for a in args if a.startswith(f"-XX:{name}=")), None)
 
 
 def test_jvm_flags_reach_driver_beside_submit_args_and_logs_stay_off_stdout(tmp_path):
@@ -79,28 +81,55 @@ def test_jvm_flags_reach_driver_beside_submit_args_and_logs_stay_off_stdout(tmp_
     out, stdout, stderr = _run(tmp_path, "foreign", submit_args)
     assert out["rows"] == 5
     assert "-Dupflow.probe=1" in out["args"]
-    assert "-XX:Tier4InvocationThreshold=50000" in out["args"]
+    assert "-XX:CICompilerCount=2" in out["args"]
     assert set(out["options"]) <= set(out["args"])
-    assert _archive_flag(out["args"])
+    assert _flag(out["args"], "SharedArchiveFile")
     assert "Unable to use shared archive" in stderr
     assert "[warning]" not in stdout
+    # the stand-in conf dir is set only while the JVM starts
+    assert out["conf_dir_env"] is None
 
 
 def test_failed_marker_starts_without_archive(tmp_path):
     out, _, _ = _run(tmp_path, "failed")
     assert out["rows"] == 5
     assert set(out["options"]) <= set(out["args"])
-    assert _archive_flag(out["args"]) is None
+    assert _flag(out["args"], "SharedArchiveFile") is None
+    assert _flag(out["args"], "ArchiveClassesAtExit") is None
     assert not glob.glob(str(tmp_path / "cds" / "*.jsa"))
 
 
-def test_truncated_leftover_dump_is_rebuilt_and_used(tmp_path):
+def test_first_session_dumps_at_exit_and_next_starts_on_archive(tmp_path):
     """A temp file a killed dump left behind is never handed to the JVM:
-    the next session dumps, validates and promotes a fresh archive."""
-    out, _, _ = _run(tmp_path, "truncated_tmp")
-    assert out["rows"] == 5
-    archive = _archive_flag(out["args"]).split("=", 1)[1]
+    the session dumps afresh at exit, the dump is validated and promoted,
+    and the next session starts on it."""
+    first, _, _ = _run(tmp_path, "truncated_tmp")
+    assert first["rows"] == 5
+    assert _flag(first["args"], "SharedArchiveFile") is None
+    assert _flag(first["args"], "ArchiveClassesAtExit").endswith(".jsa.tmp")
+    cds = tmp_path / "cds"
+    assert not glob.glob(str(cds / "*.tmp")) and not glob.glob(str(cds / "*.failed"))
+    second, _, _ = _run(tmp_path, "as_is")
+    archive = _flag(second["args"], "SharedArchiveFile")
+    assert glob.glob(str(cds / "*.jsa")) == [archive]
     assert os.path.getsize(archive) > 1 << 20
-    assert "sharing" in out["vm_info"]
-    assert not glob.glob(str(tmp_path / "cds" / "*.tmp"))
-    assert not glob.glob(str(tmp_path / "cds" / "*.failed"))
+    assert "sharing" in second["vm_info"]
+    assert _flag(second["args"], "ArchiveClassesAtExit") is None
+
+
+def test_invalid_dump_is_removed_and_marked_failed(tmp_path):
+    """A dump no JVM starts on is deleted, never promoted, and its digest
+    stays marked failed; nothing raises."""
+    from upflow_spark import session
+
+    base = str(tmp_path / "digest")
+    with open(base + ".jsa.tmp", "wb") as f:
+        f.write(b"\0" * 4096)
+    open(base + ".failed", "w").close()
+    lock = open(base + ".lock", "w")
+    jvm = subprocess.Popen(["cat"], stdin=subprocess.PIPE, stdout=subprocess.DEVNULL)
+    java = shutil.which("java") or os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    session._promote_at_exit(base, lock, jvm, java, str(tmp_path))
+    assert jvm.returncode == 0
+    assert lock.closed
+    assert sorted(os.listdir(tmp_path)) == ["digest.failed", "digest.lock"]

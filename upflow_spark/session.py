@@ -11,8 +11,8 @@ depends on (verified runtime-settable on PySpark 4.1.2):
 - ``spark.sql.session.timeZone=UTC`` — keeps tz-aware expressions (window(),
   date_trunc on instant timestamps) aligned with DuckDB's naive timestamps.
 
-The local factory :func:`get_spark` also sets the driver JVM's flags: raised
-C2 JIT thresholds and a class-data archive (see :func:`class_archive`). Both
+The local factory :func:`get_spark` also sets the driver JVM's flags: one C2
+compiler thread and a class-data archive (see :func:`_class_archive`). Both
 change only how fast the JVM starts and compiles, never what a query returns.
 
 Scale note (100 TB): AQE is left ON (default in 4.x) for skew-join splitting
@@ -24,15 +24,15 @@ with :func:`small_shuffles`.
 
 from __future__ import annotations
 
+import atexit
 import fcntl
 import hashlib
 import os
 import shutil
 import subprocess
-import sys
-import tempfile
 from collections.abc import Iterator
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
+from typing import IO
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -84,24 +84,22 @@ def _default_driver_mem() -> str:
     return f"{min(ram_mb // 2, 24 << 10)}m"
 
 
-# Raised C2 thresholds: at local scale about half of a pass's CPU went to
-# C2 compiler threads, whose code a short job never lives long enough to
-# repay. C1-only cut that too, but ran a forced-fallback sweep 13% slower
-# in one of two pairs; here a method that stays hot still reaches C2. JVM
+# One C2 compiler thread, not the two a 4-core JVM starts: at local scale
+# about half of a pass's CPU went to C2 threads compiling code that a short
+# job never runs long enough to repay. Every method still reaches C2 at the
+# default thresholds, only later in a busy start. C1-only and raised C2
+# thresholds cut more CPU, but made the iterative sf0.1 keys slower. JVM
 # log warnings (a class-data archive the JVM declines, say) go to stderr,
 # so a tool that prints one result line on stdout keeps its contract.
-JVM_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
-    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
-    " -Xlog:disable -Xlog:all=warning:stderr"
-)
+JVM_OPTIONS = "-XX:CICompilerCount=2 -Xlog:disable -Xlog:all=warning:stderr"
 
-# Per-user, outside any checkout: every checkout on a box shares one build.
+# Per-user, outside any checkout: every checkout on a box shares one archive.
 CDS_DIR = os.path.join(os.path.expanduser("~"), ".cache", "upflow-spark", "cds")
-CDS_BUILD_TIMEOUT_S = 600
+CDS_EXIT_TIMEOUT_S = 300
 
 
-def _builder(app_name: str, java_options: str) -> SparkSession.Builder:
+def get_spark(app_name: str = "upflow-spark") -> SparkSession:
+    """Local session factory for tests/bench (the driver brings its own)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = os.environ.get("UPFLOW_SHUFFLE_PARTITIONS", "32")
     builder = (
@@ -120,22 +118,32 @@ def _builder(app_name: str, java_options: str) -> SparkSession.Builder:
             os.environ.get("UPFLOW_DRIVER_MEM", _default_driver_mem()),
         )
         .config("spark.ui.enabled", "false")
-        # the default options, not the extra ones: --driver-java-options
-        # fills spark.driver.extraJavaOptions, and the JVM gets both
-        .config("spark.driver.defaultJavaOptions", java_options)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    return builder
-
-
-def get_spark(app_name: str = "upflow-spark") -> SparkSession:
-    """Local session factory for tests/bench (the driver brings its own)."""
-    options = JVM_OPTIONS
-    archive = class_archive()
-    if archive:
-        options += f" -XX:SharedArchiveFile={archive}"
-    return ensure_conf(_builder(app_name, options).getOrCreate())
+    archive = _class_archive()
+    # the default options, not the extra ones: --driver-java-options fills
+    # spark.driver.extraJavaOptions, and the JVM gets both
+    options = f"{JVM_OPTIONS} {archive[1]}" if archive else JVM_OPTIONS
+    builder = builder.config("spark.driver.defaultJavaOptions", options)
+    if archive is None:
+        return ensure_conf(builder.getOrCreate())
+    conf_dir, _, dump = archive
+    before = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir  # read once, as the JVM starts
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if before is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = before
+    if dump is not None:
+        jvm = spark.sparkContext._jvm
+        java = os.path.join(jvm.System.getProperty("java.home"), "bin", "java")
+        class_path = jvm.System.getProperty("java.class.path")
+        atexit.register(_promote_at_exit, *dump, SparkContext._gateway.proc, java, class_path)
+    return ensure_conf(spark)
 
 
 def _empty_conf_dir() -> str | None:
@@ -143,14 +151,14 @@ def _empty_conf_dir() -> str | None:
 
     JDK 17 dumps no archive while a non-empty dir is on the classpath, and
     the conf dir is on the driver's. The stand-in changes no setting only
-    when the conf dir is the default one and holds nothing but templates.
+    when no conf dir is set and the default one holds nothing but templates.
     """
-    empty = os.path.join(CDS_DIR, "conf")
-    if os.environ.get("SPARK_CONF_DIR", empty) != empty:
+    if "SPARK_CONF_DIR" in os.environ:
         return None
     conf = os.path.join(_find_spark_home(), "conf")
     if not all(f.endswith(".template") for f in os.listdir(conf)):
         return None
+    empty = os.path.join(CDS_DIR, "conf")
     os.makedirs(empty, exist_ok=True)
     return empty
 
@@ -173,16 +181,16 @@ def _digest(conf_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
-def class_archive() -> str | None:
-    """Path of a validated class-data archive for the driver JVM that
-    :func:`get_spark` is about to start, or None to start without one.
+def _class_archive() -> tuple[str, str, tuple[str, IO[str]] | None] | None:
+    """``(conf dir, JVM flag, dump)`` for the driver JVM that :func:`get_spark`
+    is about to start, or None to start it without a class-data archive.
 
-    The first call per JDK and classpath dumps the archive in a child
-    process (~15-30 s, once), under a lock; later calls only look it up.
-    A dump that fails leaves a ``.failed`` marker, so a box that cannot
-    dump does not try again (``rm -rf`` :data:`CDS_DIR` to reset). An
-    archive is promoted only after a JVM started on it exits cleanly: a
-    truncated one crashes the JVM at start. Every failure means None.
+    The flag names the archive of this JDK and classpath. If there is none
+    yet, it has this session's JVM dump one at exit instead, and ``dump``
+    is ``(base path, held lock)`` for :func:`_promote_at_exit`. The attempt
+    counts as failed (``base.failed``) until the archive is promoted, so a
+    box that cannot dump, or a process killed mid-dump, does not try again
+    (``rm -rf`` :data:`CDS_DIR` to reset). Every failure means None.
     """
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None  # the JVM is up already and its flags are fixed
@@ -191,73 +199,46 @@ def class_archive() -> str | None:
         if conf_dir is None:
             return None
         base = os.path.join(CDS_DIR, _digest(conf_dir))
-        archive = base + ".jsa"
-        if not os.path.exists(archive) and not os.path.exists(base + ".failed"):
-            with open(base + ".lock", "w") as lock:
-                # another process is dumping: start without the archive
-                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                if not os.path.exists(archive) and not os.path.exists(base + ".failed"):
-                    _dump(base, conf_dir)
-        if not os.path.exists(archive):
+        if os.path.exists(base + ".jsa"):
+            return conf_dir, f"-XX:SharedArchiveFile={base}.jsa", None
+        if os.path.exists(base + ".failed"):
             return None
-        os.environ["SPARK_CONF_DIR"] = conf_dir
-        return archive
+        lock = open(base + ".lock", "w")
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError:
+            lock.close()
+            return None  # another session's JVM is dumping
+        if os.path.exists(base + ".jsa") or os.path.exists(base + ".failed"):
+            lock.close()
+            return None  # that session is done
+        open(base + ".failed", "w").close()
+        with suppress(FileNotFoundError):
+            os.remove(base + ".jsa.tmp")
+        return conf_dir, f"-XX:ArchiveClassesAtExit={base}.jsa.tmp", (base, lock)
     except Exception:
         return None
 
 
-def _dump(base: str, conf_dir: str) -> None:
-    """Dump and validate ``base.jsa`` in a child process; on any failure
-    write ``base.failed`` instead."""
+def _promote_at_exit(
+    base: str, lock: IO[str], proc: subprocess.Popen, java: str, class_path: str
+) -> None:
+    """Let the driver JVM exit, which dumps ``base.jsa.tmp``, and promote the
+    dump only if a JVM on the same classpath starts on it: a truncated
+    archive crashes the JVM at start."""
     tmp = base + ".jsa.tmp"
-    if os.path.exists(tmp):
-        os.remove(tmp)
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_CONF_DIR=conf_dir)
-    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
-    code = "import sys; from upflow_spark.session import _dump_child; _dump_child(sys.argv[1])"
     try:
-        with open(base + ".log", "w") as log, tempfile.TemporaryDirectory() as cwd:
-            rc = subprocess.run(
-                [sys.executable, "-c", code, tmp],
-                env=env,
-                cwd=cwd,
-                stdin=subprocess.DEVNULL,
-                stdout=log,
-                stderr=log,
-                timeout=CDS_BUILD_TIMEOUT_S,
-            ).returncode
-    except subprocess.TimeoutExpired:
-        rc = -1
-    if rc == 0:
-        os.replace(tmp, base + ".jsa")
-        os.remove(base + ".log")
-    else:
-        open(base + ".failed", "w").close()
-
-
-def _dump_child(tmp: str) -> None:
-    """Run a small parquet round trip, an aggregate, a join and a window in
-    a session whose JVM dumps its loaded classes to ``tmp`` at exit; then
-    check that a JVM on the same classpath starts on the dump."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    spark = _builder("upflow-cds", f"{JVM_OPTIONS} -XX:ArchiveClassesAtExit={tmp}").getOrCreate()
-    jvm = spark.sparkContext._jvm
-    java_home = jvm.System.getProperty("java.home")
-    class_path = jvm.System.getProperty("java.class.path")
-    path = os.path.join(os.getcwd(), "t.parquet")
-    spark.range(1000).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s").write.parquet(path)
-    df = spark.read.parquet(path)
-    agg = df.groupBy("k").agg(F.count("*").alias("n"), F.sum("id").alias("t"))
-    w = Window.partitionBy("k").orderBy("id")
-    df.join(agg, "k").withColumn("r", F.row_number().over(w)).orderBy("id").collect()
-    spark.stop()
-    gateway = SparkContext._gateway
-    gateway.shutdown()
-    gateway.proc.stdin.close()  # the JVM exits at EOF on its stdin, dumping
-    if gateway.proc.wait(timeout=CDS_BUILD_TIMEOUT_S) != 0:
-        sys.exit(1)
-    check = [os.path.join(java_home, "bin", "java"), "-Xshare:on", f"-XX:SharedArchiveFile={tmp}"]
-    sys.exit(subprocess.run([*check, "-cp", class_path, "-version"]).returncode)
+        proc.stdin.close()  # the JVM exits at EOF on its stdin
+        check = [java, "-Xshare:on", f"-XX:SharedArchiveFile={tmp}", "-cp", class_path, "-version"]
+        if (
+            proc.wait(timeout=CDS_EXIT_TIMEOUT_S) == 0
+            and subprocess.run(check, capture_output=True, timeout=60).returncode == 0
+        ):
+            os.replace(tmp, base + ".jsa")
+            os.remove(base + ".failed")
+    except Exception:
+        pass
+    finally:
+        with suppress(OSError):
+            os.remove(tmp)
+        lock.close()
