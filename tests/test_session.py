@@ -129,7 +129,7 @@ def test_invalid_dump_is_removed_and_marked_failed(tmp_path):
     lock = open(base + ".lock", "w")
     jvm = subprocess.Popen(["cat"], stdin=subprocess.PIPE, stdout=subprocess.DEVNULL)
     java = shutil.which("java") or os.path.join(os.environ["JAVA_HOME"], "bin", "java")
-    session._promote_at_exit(base, lock, jvm, java, str(tmp_path))
+    session._promote_at_exit(base, lock, jvm, java, str(tmp_path), os.getpid())
     assert jvm.returncode == 0
     assert lock.closed
     assert sorted(os.listdir(tmp_path)) == ["digest.failed", "digest.lock"]

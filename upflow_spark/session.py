@@ -142,7 +142,8 @@ def get_spark(app_name: str = "upflow-spark") -> SparkSession:
         jvm = spark.sparkContext._jvm
         java = os.path.join(jvm.System.getProperty("java.home"), "bin", "java")
         class_path = jvm.System.getProperty("java.class.path")
-        atexit.register(_promote_at_exit, *dump, SparkContext._gateway.proc, java, class_path)
+        proc = SparkContext._gateway.proc
+        atexit.register(_promote_at_exit, *dump, proc, java, class_path, os.getpid())
     return ensure_conf(spark)
 
 
@@ -221,11 +222,14 @@ def _class_archive() -> tuple[str, str, tuple[str, IO[str]] | None] | None:
 
 
 def _promote_at_exit(
-    base: str, lock: IO[str], proc: subprocess.Popen, java: str, class_path: str
+    base: str, lock: IO[str], proc: subprocess.Popen, java: str, class_path: str, pid: int
 ) -> None:
     """Let the driver JVM exit, which dumps ``base.jsa.tmp``, and promote the
     dump only if a JVM on the same classpath starts on it: a truncated
-    archive crashes the JVM at start."""
+    archive crashes the JVM at start. A forked child of process ``pid``
+    inherits this hook, and leaves the dump to its parent."""
+    if os.getpid() != pid:
+        return
     tmp = base + ".jsa.tmp"
     try:
         proc.stdin.close()  # the JVM exits at EOF on its stdin
