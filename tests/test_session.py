@@ -95,41 +95,50 @@ def test_failed_marker_starts_without_archive(tmp_path):
     assert out["rows"] == 5
     assert set(out["options"]) <= set(out["args"])
     assert _flag(out["args"], "SharedArchiveFile") is None
-    assert _flag(out["args"], "ArchiveClassesAtExit") is None
+    assert _flag(out["args"], "DumpLoadedClassList") is None
     assert not glob.glob(str(tmp_path / "cds" / "*.jsa"))
 
 
 def test_first_session_dumps_at_exit_and_next_starts_on_archive(tmp_path):
     """A temp file a killed dump left behind is never handed to the JVM:
-    the session dumps afresh at exit, the dump is validated and promoted,
-    and the next session starts on it."""
+    the first session lists the classes it loads, they are dumped once its
+    JVM has exited, the dump is validated and promoted, and the next
+    session starts on it."""
     first, _, _ = _run(tmp_path, "truncated_tmp")
     assert first["rows"] == 5
     assert _flag(first["args"], "SharedArchiveFile") is None
-    assert _flag(first["args"], "ArchiveClassesAtExit").endswith(".jsa.tmp")
+    assert _flag(first["args"], "DumpLoadedClassList").endswith(".classlist")
     cds = tmp_path / "cds"
-    assert not glob.glob(str(cds / "*.tmp")) and not glob.glob(str(cds / "*.failed"))
+    assert sorted(p.suffix for p in cds.iterdir()) == ["", ".jsa", ".lock"]  # "": conf/
     second, _, _ = _run(tmp_path, "as_is")
     archive = _flag(second["args"], "SharedArchiveFile")
     assert glob.glob(str(cds / "*.jsa")) == [archive]
     assert os.path.getsize(archive) > 1 << 20
     assert "sharing" in second["vm_info"]
-    assert _flag(second["args"], "ArchiveClassesAtExit") is None
+    assert _flag(second["args"], "DumpLoadedClassList") is None
 
 
 def test_invalid_dump_is_removed_and_marked_failed(tmp_path):
     """A dump no JVM starts on is deleted, never promoted, and its digest
-    stays marked failed; nothing raises."""
+    stays marked failed; nothing raises. The stand-in ``java`` dumps a
+    truncated archive and runs the real one for the check."""
     from upflow_spark import session
 
+    real = shutil.which("java") or os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    java = tmp_path / "java"
+    java.write_text(
+        "#!/bin/sh\n"
+        '[ "$1" = -Xshare:dump ] || exec "%s" "$@"\n'
+        'for a; do case "$a" in -XX:SharedArchiveFile=*) head -c 4096 /dev/zero > "${a#*=}";; esac; done\n'
+        % real
+    )
+    java.chmod(0o755)
     base = str(tmp_path / "digest")
-    with open(base + ".jsa.tmp", "wb") as f:
-        f.write(b"\0" * 4096)
+    open(base + ".classlist", "w").close()
     open(base + ".failed", "w").close()
     lock = open(base + ".lock", "w")
     jvm = subprocess.Popen(["cat"], stdin=subprocess.PIPE, stdout=subprocess.DEVNULL)
-    java = shutil.which("java") or os.path.join(os.environ["JAVA_HOME"], "bin", "java")
-    session._promote_at_exit(base, lock, jvm, java, str(tmp_path), os.getpid())
+    session._promote_at_exit(base, lock, jvm, str(java), str(tmp_path), os.getpid())
     assert jvm.returncode == 0
     assert lock.closed
-    assert sorted(os.listdir(tmp_path)) == ["digest.failed", "digest.lock"]
+    assert sorted(os.listdir(tmp_path)) == ["digest.failed", "digest.lock", "java"]

@@ -95,7 +95,8 @@ JVM_OPTIONS = "-XX:CICompilerCount=2 -Xlog:disable -Xlog:all=warning:stderr"
 
 # Per-user, outside any checkout: every checkout on a box shares one archive.
 CDS_DIR = os.path.join(os.path.expanduser("~"), ".cache", "upflow-spark", "cds")
-CDS_EXIT_TIMEOUT_S = 300
+# Bounds each step of the dump at exit: the first session's exit takes ~40 s.
+CDS_EXIT_TIMEOUT_S = 60
 
 
 def get_spark(app_name: str = "upflow-spark") -> SparkSession:
@@ -187,11 +188,12 @@ def _class_archive() -> tuple[str, str, tuple[str, IO[str]] | None] | None:
     is about to start, or None to start it without a class-data archive.
 
     The flag names the archive of this JDK and classpath. If there is none
-    yet, it has this session's JVM dump one at exit instead, and ``dump``
-    is ``(base path, held lock)`` for :func:`_promote_at_exit`. The attempt
-    counts as failed (``base.failed``) until the archive is promoted, so a
-    box that cannot dump, or a process killed mid-dump, does not try again
-    (``rm -rf`` :data:`CDS_DIR` to reset). Every failure means None.
+    yet, it has this session's JVM list the classes it loads instead, and
+    ``dump`` is ``(base path, held lock)`` for :func:`_promote_at_exit`,
+    which dumps them once the JVM has exited. The attempt counts as failed
+    (``base.failed``) until the archive is promoted, so a box that cannot
+    dump, or a process killed before its exit, does not try again (``rm
+    -rf`` :data:`CDS_DIR` to reset). Every failure means None.
     """
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None  # the JVM is up already and its flags are fixed
@@ -214,9 +216,7 @@ def _class_archive() -> tuple[str, str, tuple[str, IO[str]] | None] | None:
             lock.close()
             return None  # that session is done
         open(base + ".failed", "w").close()
-        with suppress(FileNotFoundError):
-            os.remove(base + ".jsa.tmp")
-        return conf_dir, f"-XX:ArchiveClassesAtExit={base}.jsa.tmp", (base, lock)
+        return conf_dir, f"-XX:DumpLoadedClassList={base}.classlist", (base, lock)
     except Exception:
         return None
 
@@ -224,25 +224,28 @@ def _class_archive() -> tuple[str, str, tuple[str, IO[str]] | None] | None:
 def _promote_at_exit(
     base: str, lock: IO[str], proc: subprocess.Popen, java: str, class_path: str, pid: int
 ) -> None:
-    """Let the driver JVM exit, which dumps ``base.jsa.tmp``, and promote the
-    dump only if a JVM on the same classpath starts on it: a truncated
-    archive crashes the JVM at start. A forked child of process ``pid``
-    inherits this hook, and leaves the dump to its parent."""
+    """Let the driver JVM exit, dump the classes it loaded into an archive,
+    and promote the archive only if a JVM on the same classpath starts on
+    it: a truncated archive crashes the JVM at start. A forked child of
+    process ``pid`` inherits this hook, and leaves the dump to its parent."""
     if os.getpid() != pid:
         return
     tmp = base + ".jsa.tmp"
+    archive = [f"-XX:SharedArchiveFile={tmp}", "-cp", class_path]
+    dump = [java, "-Xshare:dump", f"-XX:SharedClassListFile={base}.classlist", *archive]
+    check = [java, "-Xshare:on", *archive, "-version"]
     try:
         proc.stdin.close()  # the JVM exits at EOF on its stdin
-        check = [java, "-Xshare:on", f"-XX:SharedArchiveFile={tmp}", "-cp", class_path, "-version"]
-        if (
-            proc.wait(timeout=CDS_EXIT_TIMEOUT_S) == 0
-            and subprocess.run(check, capture_output=True, timeout=60).returncode == 0
+        if proc.wait(timeout=CDS_EXIT_TIMEOUT_S) == 0 and all(
+            subprocess.run(cmd, capture_output=True, timeout=CDS_EXIT_TIMEOUT_S).returncode == 0
+            for cmd in (dump, check)
         ):
             os.replace(tmp, base + ".jsa")
             os.remove(base + ".failed")
     except Exception:
         pass
     finally:
-        with suppress(OSError):
-            os.remove(tmp)
+        for leftover in (tmp, base + ".classlist"):
+            with suppress(OSError):
+                os.remove(leftover)
         lock.close()
