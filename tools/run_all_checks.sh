@@ -1,10 +1,11 @@
 #!/usr/bin/env bash
 # One-command verification runbook (r12 VERDICT item 8): everything
 # needed to re-verify the repo, in the order the verify skill prescribes.
-# Measured on a 4-vCPU, 15 GiB VM: pytest ~26 min, forced sweep ~7 min,
-# perfbench smoke ~2 min; the driver sim took ~12 min at sf0.01 (this
+# Measured on a 4-vCPU, 15 GiB VM: pytest ~24 min, forced sweep ~6 min,
+# perfbench smoke ~2 min; the driver sim took ~11 min at sf0.01 (this
 # runbook runs it at sf0.001). The other steps are untimed. The first
-# session on a box also dumps the JVM class-data archive (~30 s, once).
+# session on a box also dumps the JVM class-data archive at its exit
+# (~40 s, once).
 #
 #   bash tools/run_all_checks.sh            # full run
 #   UPFLOW_ROUND=13 bash tools/run_all_checks.sh
