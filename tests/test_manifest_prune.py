@@ -6,6 +6,8 @@ patch-collect guard, applied to sources/manifest.py)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import DataFrame
 
@@ -70,13 +72,13 @@ def test_compaction_plan_is_one_scan_one_exchange(spark, sf_dir):
     by the DuckDB oracle; this pins the job shape."""
     import re
 
+    from upflow_spark import memo
     from upflow_spark.registry import QUERIES
-    from upflow_spark.sources.manifest import _work_dir
 
     got = QUERIES["sink_compaction_binpack"](spark, sf_dir).toPandas()
     assert int(got["n_rows_before"][0]) == int(got["n_rows_after"][0])
     assert int(got["n_files_after"][0]) < int(got["n_files_before"][0])
-    frag_dir = _work_dir(spark, sf_dir, "compaction") + "/fragmented"
+    frag_dir = os.path.join(memo._ROOT[1], "sink_compaction_binpack", "fragmented")
     job = spark.read.parquet(frag_dir).repartition(3)
     plan = job._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Scan parquet", plan)) == 1

@@ -747,29 +747,42 @@ def test_pq_encode_matches_numpy_reference(spark):
     assert np.mean(mses) < x.var(axis=0).mean()
 
 
-def test_stream_tumbling_leaves_no_scratch(spark):
-    """Repeated streaming runs must not pile up scratch dirs: the
-    file-stream source dir is named by the fixture's identity (the same
-    name in every process), and run_to_completion deletes its checkpoint
-    once the availableNow query has drained — the returned memory-sink
-    table still reads after that."""
+def test_stream_tumbling_leaves_no_scratch(spark, con):
+    """Repeated streaming runs must pile up neither dirs nor memory-sink
+    tables: the file-stream source dir is named by the fixture's identity
+    (the same name in every process), the checkpoint is the
+    ``run_to_completion`` scratch dir that each run replaces, and the
+    memory sink's temp view is dropped once the result is analyzed. Every
+    returned DataFrame still reads the oracle's rows after later runs."""
     import glob
     import os
     import tempfile
 
+    from tests.harness import compare
+    from upflow_spark import ORACLE, memo
     from upflow_spark.memo import fixture_dir
     from upflow_spark.streaming.streams import _stream_dir
 
-    def dirs(prefix: str) -> set:
-        return set(glob.glob(os.path.join(tempfile.gettempdir(), prefix + "_*")))
+    def upflow_dirs() -> set:
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "upflow_*")))
 
-    ckpt0, src0 = dirs("upflow_ckpt"), dirs("upflow_stream_src")
-    for _ in range(2):
-        assert QUERIES["stream_tumbling"](spark, SF).count() > 0
-    assert dirs("upflow_ckpt") - ckpt0 == set()
+    def tree(root: str) -> list:
+        return sorted(os.path.relpath(d, root) for d, _, _ in os.walk(root))
+
+    before, n_tables = upflow_dirs(), len(spark.catalog.listTables())
+    results, trees = [], []
+    for _ in range(3):
+        results.append(QUERIES["stream_tumbling"](spark, SF))
+        trees.append(tree(memo._ROOT[1]))
+        assert len(spark.catalog.listTables()) == n_tables
+    want = con.execute(ORACLE["stream_tumbling"]).df()
+    for df in results:
+        compare(df, want, "stream_tumbling")
+    # one checkpoint, replaced in place: the root's tree does not grow
+    assert "run_to_completion" in trees[0] and trees[0] == trees[1] == trees[2]
     src = fixture_dir(SF, "events", "upflow_stream_src")
     assert _stream_dir(SF) == src and os.path.isdir(src)
-    assert dirs("upflow_stream_src") - src0 <= {src}
+    assert upflow_dirs() - before <= {memo._ROOT[1], src}
 
 
 def test_update_mode_emits_incremental_updates(spark):

@@ -6,6 +6,8 @@ The dup_id_checksum row pins per-vector identity, not just counts."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from upflow_spark.registry import QUERIES
@@ -95,6 +97,7 @@ def test_pq_index_append_incremental_equals_batch(spark):
     import numpy as np
 
     from upflow_spark.io import load
+    from upflow_spark import memo
     from upflow_spark.pipeline.pca import _pq_encode_df, _pq_train_on
     from upflow_spark.streaming import streams as S
 
@@ -105,7 +108,9 @@ def test_pq_index_append_incremental_equals_batch(spark):
     assert sorted(report) == [0, 1, 2, 3]
 
     # read the persisted index back: per-wave codes
-    idx = spark.read.parquet(S._last_pq_index_dir)
+    idx = spark.read.parquet(
+        os.path.join(memo._ROOT[1], "stream_pq_index_append", "pq_codes")
+    )
     got = {
         (r["wave"], r["vec_id"]): list(r["codes"])
         for r in idx.filter(F.col("wave") >= 0).collect()

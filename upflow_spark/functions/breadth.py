@@ -12,12 +12,11 @@ under the same conventions (identical aliases both sides, r4 float rounding).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import scratch
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 
@@ -324,7 +323,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-parallel, not a driver collect.
     """
     s = load(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="upflow_orc_") + "/supplier"
+    out = scratch(spark, "source_orc_roundtrip") + "/supplier"
     s.write.mode("overwrite").orc(out)
     back = spark.read.schema(s.schema).orc(out)
     return back.groupBy("s_nationkey").agg(

@@ -18,6 +18,10 @@ artifact, not one per fixture.
 A fixture whose identity cannot be read (a ``file://`` URI, a
 directory-style parquet) builds uncached; its on-disk artifacts go to a
 fresh directory removed at exit (:func:`fixture_dir`).
+
+Scratch directories follow the same rule (:func:`scratch`): one live
+directory per name under one root per application, replaced when the name
+is requested again and removed with the root.
 """
 
 from __future__ import annotations
@@ -37,6 +41,9 @@ T = TypeVar("T")
 
 # name -> ((applicationId, sf_dir, fixture identity), value)
 _STORE: dict[str, tuple[tuple, object]] = {}
+
+# (applicationId, scratch root, pid of the process that made the root)
+_ROOT: tuple[str, str, int] | None = None
 
 
 def path_of(sf_dir: str, name: str) -> str:
@@ -68,6 +75,36 @@ def fixture_dir(sf_dir: str, table: str | tuple[str, ...], prefix: str) -> str:
     tag = "_".join(f"{mtime}_{size}" for mtime, size in ident)
     base = os.path.basename(sf_dir.rstrip("/"))
     return os.path.join(tempfile.gettempdir(), f"{prefix}_{base}_{tag}")
+
+
+def scratch(spark: SparkSession, name: str) -> str:
+    """An existing, empty directory ``<tmp>/upflow_<applicationId>/<name>``.
+
+    Each name has one live directory: requesting a name again deletes the
+    previous directory first. A DataFrame an op returns over its directory
+    therefore reads it only until the same name is requested again; a call
+    inside a memo builder runs only on a miss, so the directory is replaced
+    exactly when its memo entry is rebuilt. The root is removed at exit by
+    the process that made it, and when another application of the same
+    process asks for scratch (the memo's eviction rule)."""
+    global _ROOT
+    app = spark.sparkContext.applicationId
+    if _ROOT is None or _ROOT[0] != app:
+        if _ROOT is not None:
+            _drop_root(*_ROOT[1:])
+        _ROOT = (app, os.path.join(tempfile.gettempdir(), f"upflow_{app}"), os.getpid())
+        atexit.register(_drop_root, *_ROOT[1:])
+    path = os.path.join(_ROOT[1], name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
+
+
+def _drop_root(root: str, pid: int) -> None:
+    """Remove a scratch root, but only in the process that made it: a
+    forked child inherits the parent's atexit hooks."""
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def memo(

@@ -10,12 +10,11 @@ the parser surface.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import scratch
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 
@@ -228,7 +227,7 @@ def sql_ddl_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     off at scale — this key certifies the DDL path works end-to-end.
     """
     _views(spark, sf_dir, "orders")
-    loc = tempfile.mkdtemp(prefix="upflow_ddl_") + "/t"
+    loc = scratch(spark, "sql_ddl_insert") + "/t"
     spark.sql("DROP TABLE IF EXISTS upflow_ddl_orders")
     spark.sql(
         f"""

@@ -1163,7 +1163,7 @@ def curation_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 CCI_PMOD = 16  # node universe: l_partkey % CCI_PMOD = 0
 CCI_BASE = 0  # base graph: co-order edges from l_orderkey % 7 = CCI_BASE
 CCI_DELTA = 1  # delta wave: edges from l_orderkey % 7 = CCI_DELTA
-# stats the invariant test reads (the _last_pq_index_dir pattern)
+# stats the invariant test reads
 _cc_inc_stats: dict = {}
 
 

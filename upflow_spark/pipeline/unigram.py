@@ -24,14 +24,12 @@ that is 2 shuffles per round over vocabulary-sized relations.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark import ceilings
 from upflow_spark.io import load
-from upflow_spark.memo import fixture_dir, memo
+from upflow_spark.memo import fixture_dir, memo, scratch
 from upflow_spark.pipeline.textstats import BPE_PRETOK_RE
 from upflow_spark.registry import query
 
@@ -527,7 +525,6 @@ def stream_tokenizer_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from upflow_spark.session import ensure_conf
-    from upflow_spark.sources.manifest import _work_dir
     from upflow_spark.streaming.streams import _pin_wave_order
 
     ensure_conf(spark)
@@ -592,9 +589,9 @@ def stream_tokenizer_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc_member = spark.sparkContext.broadcast(member)
     bc_ntok = spark.sparkContext.broadcast(ntok)
 
-    work = _work_dir(spark, sf_dir, "oovmon")
+    work = scratch(spark, "stream_tokenizer_oov_monitor")
     out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "ckpt_" + uuid.uuid4().hex)
+    ckpt = os.path.join(work, "ckpt")
 
     from pyspark.sql.types import (
         IntegerType, LongType, StringType, StructField, StructType,

@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import scratch
 from upflow_spark.registry import query
-from upflow_spark.sources.manifest import _work_dir
 
 BLOOM_NF = 16  # files in the layout
 BLOOM_M = 4096  # bits per file filter
@@ -123,7 +123,7 @@ def scan_bloom_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    base = _work_dir(spark, sf_dir, "bloomidx") + "/orders"
+    base = scratch(spark, "scan_bloom_index_prune") + "/orders"
     o.write.mode("overwrite").partitionBy("f").parquet(base)
     written = spark.read.parquet(base).select("f", "ck", "cents")
 

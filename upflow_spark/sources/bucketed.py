@@ -11,13 +11,11 @@ every join and paying the shuffle once at write time.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
-from upflow_spark.memo import memo
+from upflow_spark.memo import memo, scratch
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 from upflow_spark.session import ensure_conf
@@ -37,7 +35,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def _write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     o_name, l_name = "upflow_orders_bkt", "upflow_lineitem_bkt"
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    loc = tempfile.mkdtemp(prefix="upflow_bkt_")
+    loc = scratch(spark, "bucketed_tables")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"

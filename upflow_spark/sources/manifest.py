@@ -14,40 +14,17 @@ manifest-pruned read → aggregate, with the pruning decision itself
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
-from upflow_spark.memo import fixture_dir, memo
+from upflow_spark.memo import memo, scratch
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 
 N_BUCKETS = 8
-
-
-def _work_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Deterministic per-(session, fixture) scratch directory, cleaned at
-    process exit. The r8 shape mkdtemp'd a FRESH data-sized directory per
-    invocation and never removed it (ADVICE r8) — repeated bench/test
-    sweeps leaked one copy of orders/lineitem each. Keyed on applicationId
-    (no cross-session write race) + fixture identity (regeneration gets a
-    fresh dir); every write below uses mode("overwrite"), so re-invocations
-    reuse the same path instead of multiplying it."""
-    app = spark.sparkContext.applicationId
-    path = fixture_dir(sf_dir, "orders", f"upflow_{kind}_{app}")
-    if path not in _WORK_DIRS:
-        _WORK_DIRS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
-_WORK_DIRS: set[str] = set()
-
 
 
 @query(
@@ -102,7 +79,7 @@ def _orders_manifest_layout(spark: SparkSession, sf_dir: str):
     mx = o.agg(F.max("o_orderkey")).collect()[0][0]
     step = int((mx + N_BUCKETS) // N_BUCKETS)
     hi = int(mx // 5)
-    base = _work_dir(spark, sf_dir, "manifest") + "/orders"
+    base = scratch(spark, "manifest_layout") + "/orders"
     o.withColumn("bucket", F.floor(F.col("o_orderkey") / F.lit(step))).write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(base)
@@ -271,7 +248,7 @@ def _zorder_layout(spark: SparkSession, sf_dir: str):
         f"(l_suppkey * {1 << ZBITS} DIV {int(mxs) + 1})",
         "DIV",
     )
-    base = _work_dir(spark, sf_dir, "zorder") + "/lineitem"
+    base = scratch(spark, "zorder_layout") + "/lineitem"
     li.withColumn("zfile", F.expr(f"({z}) DIV 32")).write.mode(
         "overwrite"
     ).partitionBy("zfile").parquet(base)
@@ -354,7 +331,7 @@ def sink_compaction_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    base = _work_dir(spark, sf_dir, "compaction")
+    base = scratch(spark, "sink_compaction_binpack")
     frag_dir = base + "/fragmented"
     comp_dir = base + "/compacted"
     # coalesce(1) BEFORE the round-robin: with multiple input splits each
@@ -563,7 +540,7 @@ def _build_snapshot_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     bucket_of = lambda c: F.floor(c / F.lit(step)).cast("int")  # noqa: E731
     dec = F.col("o_totalprice").cast("decimal(18,2)").cast("decimal(20,3)")
 
-    base = _work_dir(spark, sf_dir, "snapshot")
+    base = scratch(spark, "snapshot_layout")
     data_dir = base + "/data"
     v1 = o.select(
         "o_orderkey",
@@ -892,7 +869,7 @@ def _mor_deletes(spark: SparkSession, sf_dir: str) -> str:
 
 def _build_mor_deletes(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+fixture) the two position-delete commits as
-    commit-partitioned parquet beside the snapshot layout's gen-1 data."""
+    commit-partitioned parquet."""
     o = load(spark, sf_dir, "orders").select("o_orderkey")
     mx = int(o.agg(F.max("o_orderkey")).collect()[0][0])
     step = (mx + N_BUCKETS) // N_BUCKETS
@@ -907,7 +884,7 @@ def _build_mor_deletes(spark: SparkSession, sf_dir: str) -> str:
         & (F.col("o_orderkey") % 13 == 0)
         & (F.col("o_orderkey") % 11 != 0)
     ).select("o_orderkey", bucket, F.lit(2).alias("cmt"))
-    path = _work_dir(spark, sf_dir, "snapshot") + "/deletes"
+    path = scratch(spark, "mor_deletes") + "/deletes"
     d1.unionByName(d2).write.mode("overwrite").partitionBy("cmt").parquet(path)
     return path
 
@@ -990,7 +967,7 @@ def sink_rewrite_purge_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten = base.join(F.broadcast(db), "bucket", "semi").join(
         F.broadcast(dv.select("o_orderkey")), "o_orderkey", "anti"
     )
-    purge_dir = _work_dir(spark, sf_dir, "morpurge") + "/gen=2"
+    purge_dir = scratch(spark, "sink_rewrite_purge_deletes") + "/gen=2"
     rewritten.select("o_orderkey", "price", "bucket").write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(purge_dir)
@@ -1172,7 +1149,7 @@ def _build_pe_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         F.month("o_orderdate").alias("mo"),
     )
     mid = int(o.agg(F.max("o_orderkey")).collect()[0][0]) // 2
-    base = _work_dir(spark, sf_dir, "partevo")
+    base = scratch(spark, "partition_evolution_layout")
     d1, d2 = base + "/spec1", base + "/spec2"
     o.filter(F.col("o_orderkey") <= mid).repartition("y").write.mode(
         "overwrite"
@@ -1401,7 +1378,7 @@ def _build_rollback_manifest(
     """Append-only rollback: write (once per session+fixture) a manifest
     file carrying v1's entries re-stamped as version 3."""
     man = spark.read.parquet(man_path)
-    path = _work_dir(spark, sf_dir, "snapshot") + "/manifest_rollback"
+    path = scratch(spark, "rollback_manifest") + "/manifest_rollback"
     (
         man.unionByName(
             man.filter(F.col("version") == 1).select(
@@ -1433,7 +1410,7 @@ def _build_multisnap_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     rewrites only the touched buckets of each relation into gen-2 files and
     lands both relations' manifest entries in ONE write, so no reader can
     observe the order gone while its lineitems survive."""
-    base = _work_dir(spark, sf_dir, "multisnap")
+    base = scratch(spark, "multisnap_layout")
     data_dir = base + "/data"
     man_path = base + "/manifest"
 
@@ -1712,11 +1689,9 @@ def scan_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     data_dir, man_path = _snapshot_layout(spark, sf_dir)
-    work = _work_dir(spark, sf_dir, "expire")
+    work = scratch(spark, "scan_snapshot_expire")
     tgt_data = os.path.join(work, "data")
     tgt_man = os.path.join(work, "manifest_pre")
-    shutil.rmtree(tgt_data, ignore_errors=True)
-    shutil.rmtree(tgt_man, ignore_errors=True)
     shutil.copytree(data_dir, tgt_data)
     shutil.copytree(man_path, tgt_man)
 
@@ -1881,7 +1856,7 @@ def scan_snapshot_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_of = lambda c: F.floor(c / F.lit(step)).cast("int")  # noqa: E731
     dec = F.col("o_totalprice").cast("decimal(18,2)").cast("decimal(20,3)")
 
-    base = _work_dir(spark, sf_dir, "branchmerge")
+    base = scratch(spark, "scan_snapshot_branch_merge")
     data_dir = base + "/data"
     v1 = o.select(
         "o_orderkey", dec.alias("price"), bucket_of(F.col("o_orderkey")).alias("bucket")
@@ -2112,7 +2087,7 @@ def scan_agg_pushdown_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents.alias("cents"),
         F.floor(F.col("o_orderkey") / F.lit(step)).cast("int").alias("bucket"),
     )
-    base = _work_dir(spark, sf_dir, "aggpush")
+    base = scratch(spark, "scan_agg_pushdown_stats")
     b.write.mode("overwrite").partitionBy("bucket").parquet(base + "/data")
     written = spark.read.parquet(base + "/data")
     written.groupBy("bucket").agg(

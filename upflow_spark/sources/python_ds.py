@@ -12,7 +12,6 @@ shard its scan.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +19,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import LongType, StructField, StructType
 
 from upflow_spark.io import load
+from upflow_spark.memo import scratch
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 
@@ -113,7 +113,7 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 64)
         .select("doc_id", F.concat_ws(":", F.md5("text"), F.col("doc_id")).alias("payload"))
     )
-    out = tempfile.mkdtemp(prefix="upflow_bin_")
+    out = scratch(spark, "source_binaryfile")
     rows = d.collect()  # 64 tiny payloads — driver write is fine for the fixture
     for r in rows:
         with open(os.path.join(out, f"doc_{r['doc_id']:05d}.bin"), "wb") as fh:

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
-from upflow_spark.memo import memo
+from upflow_spark.memo import memo, scratch
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 
@@ -97,8 +97,6 @@ def scan_nested_struct_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fin leaves and NOT meta; the graded values prove the pruned read
     is lossless against the flat source-of-truth.
     """
-    from upflow_spark.sources.manifest import _work_dir
-
     path = _nested_layout(spark, sf_dir)
     n = spark.read.parquet(path)
     return (
@@ -121,10 +119,8 @@ def _nested_layout(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _write_nested(spark: SparkSession, sf_dir: str) -> str:
-    from upflow_spark.sources.manifest import _work_dir
-
     o = load(spark, sf_dir, "orders")
-    path = _work_dir(spark, sf_dir, "nested") + "/orders_nested"
+    path = scratch(spark, "nested_layout") + "/orders_nested"
     o.select(
         "o_orderkey",
         F.struct(

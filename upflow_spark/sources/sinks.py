@@ -1,9 +1,10 @@
 """§2-A sink operators (SURVEY.md) — rows-only keys.
 
-Both sinks write under a fresh tempdir per invocation (the fixtures are
-read-only). Rows-only because the interesting property — written data reads
-back identically / partition pruning works — is asserted by re-reading and
-returning verifiable counts, not by SQL-expressible values.
+Each key writes under its own scratch dir (``memo.scratch``), which the
+key's next invocation replaces (the fixtures are read-only). Rows-only
+because the interesting property — written data reads back identically /
+partition pruning works — is asserted by re-reading and returning
+verifiable counts, not by SQL-expressible values.
 
 Scale notes: parquet is the only sane sink format at 100 TB (columnar,
 splittable, stats for pruning). partitionBy on a low-cardinality column
@@ -13,12 +14,11 @@ high-cardinality key (file-per-value explosion) — bucket instead.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from upflow_spark.io import load
+from upflow_spark.memo import scratch
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 
@@ -41,7 +41,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the whole write→read cycle preserved the rows exactly (any
     lost/duplicated/corrupted row moves count or key range)."""
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
-    out = tempfile.mkdtemp(prefix="upflow_sink_rt_") + "/orders"
+    out = scratch(spark, "sink_parquet_roundtrip") + "/orders"
     o.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     n_written = o.count()
@@ -72,7 +72,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin verifies the partitioned write+pruned read preserved the slice.
     """
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
-    out = tempfile.mkdtemp(prefix="upflow_sink_part_") + "/events"
+    out = scratch(spark, "sink_partitioned") + "/events"
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
     return back.groupBy("event_type").agg(
@@ -101,7 +101,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     and scanning all of them.
     """
     p = load(spark, sf_dir, "part")
-    out = tempfile.mkdtemp(prefix="upflow_dpp_") + "/part"
+    out = scratch(spark, "join_dpp") + "/part"
     p.write.mode("overwrite").partitionBy("p_brand").parquet(out)
     fact = spark.read.parquet(out)
     hot = (
@@ -142,7 +142,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     to zero). The null-fill semantics exercised here are identical.
     """
     o = load(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="upflow_evo_") + "/orders"
+    out = scratch(spark, "scan_schema_evolution") + "/orders"
     old = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -187,7 +187,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     o = load(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="upflow_compact_")
+    base = scratch(spark, "sink_compaction")
     small_dir = base + "/small"
     compact_dir = base + "/compacted"
     o.repartition(64).write.mode("overwrite").parquet(small_dir)
@@ -240,7 +240,7 @@ def sink_overwrite_dynamic_partition(spark: SparkSession, sf_dir: str) -> DataFr
     """
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
-    out = tempfile.mkdtemp(prefix="upflow_dynpart_") + "/orders"
+    out = scratch(spark, "sink_overwrite_dynamic_partition") + "/orders"
     o = load(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
@@ -284,26 +284,17 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified stats alongside two column NDVs (computed live — catalog NDVs
     are HLL estimates and wouldn't hash-match).
     """
-    import os
-    import shutil
-    import tempfile
-
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
-    # suffix path AND table name per sf_dir + pid: a global name/path lets
-    # two concurrent sessions (driver sim + pytest) drop/overwrite each
-    # other's table mid-read (ADVICE r5); the catalog drop below still
-    # keeps this session's catalog tidy across repeated calls
-    suffix = f"{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}"
-    name = f"upflow_stats_customer_{suffix}"
-    # external table at an explicit /tmp path: a managed saveAsTable leaves
-    # its warehouse dir behind across sessions and a NEW session then fails
-    # with LOCATION_ALREADY_EXISTS on overwrite — drop + clear first
-    path = os.path.join(tempfile.gettempdir(), f"upflow_stats_customer_tbl_{suffix}")
+    # external table in this application's scratch dir: a managed
+    # saveAsTable leaves its warehouse dir behind across sessions and a NEW
+    # session then fails with LOCATION_ALREADY_EXISTS on overwrite, and a
+    # path shared across processes lets two sessions (driver sim + pytest)
+    # overwrite each other's table mid-read (ADVICE r5)
+    name = "upflow_stats_customer"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
+    path = scratch(spark, "catalog_analyze_stats") + "/customer"
     c.write.mode("overwrite").option("path", path).saveAsTable(name)
     spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
     # row count from the catalog statistics line

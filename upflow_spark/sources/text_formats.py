@@ -12,8 +12,6 @@ parquet once → query parquet forever.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -25,6 +23,7 @@ from pyspark.sql.types import (
 )
 
 from upflow_spark.io import load
+from upflow_spark.memo import scratch
 from upflow_spark.parity import r4
 from upflow_spark.registry import query
 
@@ -61,7 +60,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip via repr (Spark writes shortest-precise decimal).
     """
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000)
-    out = tempfile.mkdtemp(prefix="upflow_csv_") + "/orders"
+    out = scratch(spark, "source_csv_roundtrip") + "/orders"
     (
         o.withColumn("o_orderdate_s", F.date_format("o_orderdate", TS_FMT))
         .select(
@@ -104,7 +103,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-µs longs (lossless, no format negotiation).
     """
     ev = load(spark, sf_dir, "events").filter(F.col("value") > 10)
-    out = tempfile.mkdtemp(prefix="upflow_json_") + "/events"
+    out = scratch(spark, "source_json_roundtrip") + "/events"
     (
         ev.select(
             "event_id",
@@ -156,7 +155,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") > 300000.0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    out = tempfile.mkdtemp(prefix="upflow_xml_") + "/orders"
+    out = scratch(spark, "source_xml_roundtrip") + "/orders"
     o.write.format("xml").option("rootTag", "orders").option("rowTag", "order").save(out)
     back = (
         spark.read.format("xml")
@@ -191,13 +190,8 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint, stated). Scale: text write/read is splittable and
     compression-codec-aware; one narrow column, no schema machinery.
     """
-    import os
-    import tempfile
-
     d = load(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(), f"upflow_text_lines_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch(spark, "source_text_lines") + "/lines"
     d.select("text").coalesce(4).write.mode("overwrite").text(path)
     lines = spark.read.text(path)
     return lines.agg(

@@ -11,13 +11,12 @@ batch-equivalent answer.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import LongType, StructField, StructType
 
+from upflow_spark.memo import scratch
 from upflow_spark.registry import query
 from upflow_spark.session import small_shuffles
 
@@ -84,7 +83,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_readings"),
         F.sum("raw").alias("raw_sum"),
     )
-    ckpt = tempfile.mkdtemp(prefix="upflow_pystream_ckpt_")
+    ckpt = scratch(spark, "stream_python_datasource")
     # 50 device keys across 4 micro-batches: a small state store
     with small_shuffles(spark):
         q = (

@@ -15,8 +15,6 @@ backlog with the same plan and state semantics as the live query.
 from __future__ import annotations
 
 import pathlib
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from upflow_spark.io import load, path_of
-from upflow_spark.memo import fixture_dir
+from upflow_spark.memo import fixture_dir, scratch
 from upflow_spark.parity import R4, r4
 from upflow_spark.registry import query
 from upflow_spark.session import ensure_conf, small_shuffles
@@ -104,26 +102,27 @@ def run_to_completion(
     window aggs are another ~8% faster at 4 — measured r4 on
     stream_tumbling).
 
-    The checkpoint is deleted once the query has terminated: the memory
-    sink holds the result, and nothing resumes a drained availableNow run.
+    The checkpoint is a scratch dir the next run replaces: the memory sink
+    holds the result, and nothing resumes a drained availableNow run. The
+    sink's temp view is dropped once the returned DataFrame is analyzed,
+    so the catalog does not grow by one table per run; the DataFrame keeps
+    the sink's rows.
     """
     spark = stream_df.sparkSession
     name = f"upflow_stream_{uuid.uuid4().hex[:10]}"
-    ckpt = tempfile.mkdtemp(prefix="upflow_ckpt_")
-    try:
-        with small_shuffles(spark, state_partitions):
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    with small_shuffles(spark, state_partitions):
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", scratch(spark, "run_to_completion"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 @query(
@@ -388,8 +387,8 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event exactly once; batch_id bookkeeping stays in the sink files
     but out of the graded columns (micro-batch count is engine-internal)."""
     ensure_conf(spark)
-    out = tempfile.mkdtemp(prefix="upflow_feb_") + "/batches"
-    ckpt = tempfile.mkdtemp(prefix="upflow_feb_ckpt_")
+    work = scratch(spark, "stream_foreachbatch_sink")
+    out, ckpt = work + "/batches", work + "/ckpt"
     ev = read_events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -614,7 +613,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     _pin_wave_order(dst)
 
-    work = tempfile.mkdtemp(prefix="upflow_incdedup_")
+    work = scratch(spark, "stream_dedup_incremental")
     idx_dir = os.path.join(work, "digest_index")
     out_dir = os.path.join(work, "classified")
     ckpt = os.path.join(work, "ckpt")
@@ -907,7 +906,7 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_conf(spark)
     dst = _ensure_emb_wave_replica(spark, sf_dir)
 
-    work = tempfile.mkdtemp(prefix="upflow_embingest_")
+    work = scratch(spark, "stream_emb_index_ingest")
     idx_dir = os.path.join(work, "sig_index")
     out_dir = os.path.join(work, "classified")
     ckpt = os.path.join(work, "ckpt")
@@ -1040,7 +1039,6 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DRIFT_SIGMA_MAX = 2.0  # wave-centroid monitor gate, in sampling std errors
-_last_pq_index_dir: str | None = None  # set by stream_pq_index_append (tests)
 ADC_BP_SCALE = 100_000_000  # LUT distances as integer 1e-8 units: the ADC
 # sum is then an EXACT int64 fold (order-free across partitions AND
 # engines) — the "integer basis points for per-row scores that later
@@ -1214,10 +1212,8 @@ def stream_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_conf(spark)
     dst = _ensure_emb_wave_replica(spark, sf_dir)
 
-    work = tempfile.mkdtemp(prefix="upflow_pqingest_")
+    work = scratch(spark, "stream_pq_index_append")
     idx_dir = os.path.join(work, "pq_codes")
-    global _last_pq_index_dir  # test hook: the invariant test reads the
-    _last_pq_index_dir = idx_dir  # persisted codes back (never the report)
     rep_dir = os.path.join(work, "reports")
     ckpt = os.path.join(work, "ckpt")
 
@@ -1541,18 +1537,12 @@ def stream_snapshot_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin replay order to wave order (see stream_dedup_incremental)
     _pin_wave_order(dst)
 
-    # reuse one per-(session, fixture) dir with atexit cleanup instead of a
-    # fresh data-sized mkdtemp per invocation (ADVICE r11 — bench sweeps
-    # re-time this key; every write below is mode("overwrite") so the same
-    # path is safe to reuse). The checkpoint must stay fresh per run: a
-    # drained availableNow checkpoint would skip the whole replay while the
-    # manifest has just been reset to v1.
-    from upflow_spark.sources.manifest import _work_dir
-
-    work = _work_dir(spark, sf_dir, "snapcdc")
+    # the scratch dir is emptied per run, so the checkpoint is fresh: a
+    # drained availableNow checkpoint would skip the whole replay
+    work = scratch(spark, "stream_snapshot_cdc_apply")
     data_dir = os.path.join(work, "data")
     man_dir = os.path.join(work, "manifest")
-    ckpt = os.path.join(work, "ckpt_" + uuid.uuid4().hex)
+    ckpt = os.path.join(work, "ckpt")
 
     # snapshot v1: bucket-partitioned base + read-back manifest
     o = load(spark, sf_dir, "orders")
@@ -1728,11 +1718,9 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin replay order to wave order (FileStreamSource mtime tie-break)
     _pin_wave_order(dst)
 
-    from upflow_spark.sources.manifest import _work_dir
-
-    work = _work_dir(spark, sf_dir, "restartx")
+    work = scratch(spark, "stream_restart_exactly_once")
     out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "ckpt_" + uuid.uuid4().hex)
+    ckpt = os.path.join(work, "ckpt")
 
     _restart_log.clear()
     crashed = {"done": False}
