@@ -124,7 +124,7 @@ def test_ported_keys_leave_one_dir_per_name(tmp_path):
     read), the application root holds one dir per scratch name and does
     not grow on the second round, no
     other dir is left in the temp dir but the fixture replicas, and the
-    root is gone once the process has exited (~3 min at sf0.001)."""
+    root is gone once the process has exited (3-4 min at sf0.001 on 4 vCPUs)."""
     env = dict(os.environ, TMPDIR=str(tmp_path), UPFLOW_DRIVER_MEM="2g")
     env["PYTHONPATH"] = os.pathsep.join(p for p in (str(REPO), env.get("PYTHONPATH")) if p)
     p = subprocess.run(
