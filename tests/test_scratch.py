@@ -12,10 +12,11 @@ import re
 import subprocess
 import sys
 
+from tests.conftest import SF_DIR
 from upflow_spark import memo
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
-SF = "/root/testdata/sf0.001"
+SF = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 # every key that writes scratch -> the scratch names it requests
 PORTED = {
@@ -139,7 +140,7 @@ def test_ported_keys_leave_one_dir_per_name(tmp_path):
     assert not got["first_root_after_switch"]
     assert not os.path.exists(got["root"]) and not os.path.exists(got["root2"])
     # what may stay: fixture replicas, named by the fixture's identity
-    replica = re.compile(r"_sf0\.001(_\d+_\d+)+$")
+    replica = re.compile(re.escape("_" + os.path.basename(SF)) + r"(_\d+_\d+)+$")
     left = sorted(
         n for n in os.listdir(tmp_path) if n.startswith("upflow_") and not replica.search(n)
     )
