@@ -9,12 +9,16 @@ flag on upflow_spark/pipeline/similarity.py's full-matrix broadcast)."""
 
 from __future__ import annotations
 
+import re
+from contextlib import nullcontext
+
 import pandas as pd
 import pytest
 
 from tests.conftest import forced
 from tests.harness import normalize
-from upflow_spark.pipeline import similarity
+from upflow_spark.pipeline import dedup, similarity
+from upflow_spark.pipeline.packed import NOT_CLOSED, Packed
 from upflow_spark.registry import QUERIES
 
 ANN_KEYS = ["sim_ann_lsh", "emb_dedup_ann_verified", "pipeline_semantic_funnel_ann"]
@@ -43,9 +47,10 @@ def test_gather_path_matches_broadcast(gather_vs_broadcast, key):
 
 
 def test_gather_path_was_actually_selected(spark, sf_dir):
-    """With the ceiling forced low the pack must return the join marker,
-    not a broadcast — guards against a refactor quietly routing everything
-    to the broadcast path and vacuously passing the equality test above."""
+    """With the ceiling forced low the pack must return the checkpointed
+    block relation the gather joins read, not a broadcast — guards against
+    a refactor quietly routing everything to the broadcast path and
+    vacuously passing the equality test above."""
     from pyspark.sql import functions as F
 
     from upflow_spark.io import load
@@ -55,8 +60,8 @@ def test_gather_path_was_actually_selected(spark, sf_dir):
         e = load(spark, sf_dir, "embeddings").select(
             "vec_id", _dbl("embedding").alias("emb")
         )
-        bc = similarity.packed_embeddings(spark, e)
-    assert isinstance(bc, tuple) and bc[0] == "join"
+        op = similarity.packed_embeddings(spark, e)
+    assert isinstance(op, Packed) and op.bc is None and op.blocks is not None
 
 
 def test_gather_raises_on_non_closed_candidates(spark, sf_dir):
@@ -67,7 +72,8 @@ def test_gather_raises_on_non_closed_candidates(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from upflow_spark.io import load
-    from upflow_spark.pipeline.similarity import _dbl, gather_pair_vectors
+    from upflow_spark.pipeline.packed import gather_pair_vectors
+    from upflow_spark.pipeline.similarity import _dbl
 
     e = (
         load(spark, sf_dir, "embeddings")
@@ -80,6 +86,25 @@ def test_gather_raises_on_non_closed_candidates(spark, sf_dir):
     j = gather_pair_vectors(cand, e)
     row = j.collect()[0]
     assert row["emb_b"] is None  # the null the kernel turns into the error
+
+
+@pytest.mark.parametrize("path", ["broadcast", "gather"])
+@pytest.mark.parametrize("consumer", ["ann_lsh_pairs", "ann_scored_pairs"])
+def test_non_closed_candidate_raises(spark, sf_dir, monkeypatch, consumer, path):
+    """Both verify consumers, on both sides of the ceiling, raise the
+    id-closure error for a candidate whose id is absent from the pack —
+    never a silent wrong-row gather or a dropped pair."""
+    fn = {
+        "ann_lsh_pairs": similarity.ann_lsh_pairs,
+        "ann_scored_pairs": dedup.ann_scored_pairs,
+    }[consumer]
+    cand = spark.createDataFrame(
+        [(1, 999_999_999)], "vec_a long, vec_b long"
+    )  # vec_b absent
+    monkeypatch.setattr(similarity, "lsh_candidates", lambda spark, sf_dir: cand)
+    ceiling = forced("BROADCAST_MAX_BYTES") if path == "gather" else nullcontext()
+    with ceiling, pytest.raises(Exception, match=re.escape(NOT_CLOSED)):
+        fn(spark, sf_dir).collect()
 
 
 def test_ivf_pq_recall_vs_exact_ivf(spark, sf_dir):

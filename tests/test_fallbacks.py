@@ -10,6 +10,7 @@ The sweep takes ~5 min on 4 vCPUs, so it runs only when selected:
 
 from __future__ import annotations
 
+import ast
 import os
 import sys
 
@@ -52,6 +53,31 @@ def con_forced():
 
 def test_sweep_covers_every_ceiling_module():
     assert {QUERIES[k].__module__.rsplit(".", 1)[1] for k in KEYS} == CEILING_MODULES
+
+
+def test_one_function_reads_the_broadcast_byte_ceiling():
+    """Every packed pair-kernel operand goes through one gate, so both
+    sides of BROADCAST_MAX_BYTES run the same kernel math: exactly one
+    function in upflow_spark/ reads the ceiling (by attribute or getattr)."""
+    root = os.path.dirname(os.path.abspath(ceilings.__file__))
+    readers = set()
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py") or f == "ceilings.py":
+                continue
+            path = os.path.join(dirpath, f)
+            tree = ast.parse(open(path).read())
+            parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute) and node.attr == "BROADCAST_MAX_BYTES"
+                ) or (isinstance(node, ast.Constant) and node.value == "BROADCAST_MAX_BYTES"):
+                    fn = node
+                    while fn in parent and not isinstance(fn, ast.FunctionDef):
+                        fn = parent[fn]
+                    name = fn.name if isinstance(fn, ast.FunctionDef) else "<module>"
+                    readers.add((os.path.relpath(path, root), name))
+    assert readers == {("pipeline/packed.py", "pack")}, readers
 
 
 # No key diverges today. A divergence found later is fixed, or listed

@@ -12,6 +12,7 @@ import pytest
 from tests.conftest import forced
 from tests.harness import normalize
 from upflow_spark.pipeline import dedup
+from upflow_spark.pipeline.packed import Packed
 from upflow_spark.registry import QUERIES
 
 GEMM_KEYS = ["dedup_ngram_jaccard", "dedup_containment", "text_knn_jaccard_docs"]
@@ -39,9 +40,10 @@ def test_grid_path_matches_broadcast(grid_vs_broadcast, key):
 
 
 def test_grid_path_was_actually_selected(spark, sf_dir):
-    """With the ceiling forced low the pack must return the grid marker,
-    not a broadcast — guards against a future refactor quietly routing
-    everything to the broadcast path and vacuously passing the test above."""
+    """With the ceiling forced low the pack must return the checkpointed
+    block relation, not a broadcast — guards against a future refactor
+    quietly routing everything to the broadcast path and vacuously passing
+    the test above."""
     from pyspark.sql import functions as F
 
     from upflow_spark.io import load
@@ -51,8 +53,8 @@ def test_grid_path_was_actually_selected(spark, sf_dir):
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", F.array_distinct(tokens_col()).alias("terms")
         )
-        _, _, bc = dedup._packed_corpus(spark, docs)
-    assert isinstance(bc, tuple) and bc[0] == "grid"
+        _, _, op = dedup._packed_corpus(spark, docs)
+    assert isinstance(op, Packed) and op.bc is None and op.blocks is not None
 
 
 def test_large_vocab_pack_never_collects(spark):
@@ -94,11 +96,11 @@ def test_large_vocab_pack_never_collects(spark):
     with forced("BROADCAST_MAX_BYTES"):
         DataFrame.collect = no_collect
         try:
-            docs_ids, vocab_ids, bc = dedup._packed_corpus(spark, docs)
+            docs_ids, vocab_ids, op = dedup._packed_corpus(spark, docs)
         finally:
             DataFrame.collect = orig_collect
-    assert isinstance(bc, tuple) and bc[0] == "grid"
-    n_vocab = bc[2]
+    assert isinstance(op, Packed) and op.bc is None and op.blocks is not None
+    n_vocab = op.width
     assert n_vocab == 2000 * 10 + 1
     # and the packed relation is consistent: every doc has its 11 ids
     row = docs_ids.filter(F.col("doc_id") == 7).head()

@@ -3,7 +3,8 @@
 Complements bench.py (the driver's one-line headline bench) with full
 coverage: every registry key, warm timing (2nd run), row count, sorted
 slowest-first so regressions and scale embarrassments surface immediately.
-Run: python tools/bench_all.py
+Run: python tools/bench_all.py   (resumes from its partial file;
+     python tools/bench_all.py --partial prints that file's path)
 """
 
 from __future__ import annotations
@@ -14,10 +15,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.driver_sim import partial_path  # noqa: E402
+
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-PARTIAL = "/tmp/upflow_bench_detail_partial.jsonl"
+PARTIAL = partial_path("bench_detail", SF)
 
 
 def _prior_timings(path: str) -> dict[str, float]:
@@ -168,4 +169,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:] == ["--partial"]:
+        print(PARTIAL)
+    else:
+        main()

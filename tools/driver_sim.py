@@ -6,8 +6,10 @@ upflow_spark.session.ensure_conf fixes up foreign sessions; every
 `queries()` key runs at sf0.01 and is compared against `oracle_sql()` in
 DuckDB on row count + order-insensitive value hash.
 
-Resumable: partial results at /tmp/upflow_driver_sim_partial.jsonl.
-Run: python tools/driver_sim.py        (delete the partial to start fresh)
+Resumable: partial results go to partial_path("driver_sim", SF_DIR), one
+file per checkout and fixture dir under the temp dir.
+Run: python tools/driver_sim.py        (delete the partial to start fresh;
+     python tools/driver_sim.py --partial prints its path)
 """
 
 from __future__ import annotations
@@ -16,11 +18,23 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-PARTIAL = "/tmp/upflow_driver_sim_partial.jsonl"
+
+
+def partial_path(tool: str, sf_dir: str) -> str:
+    """A sweep's resume file, named from the checkout root and the fixture
+    dir: a second copy of the code, or a sweep at another sf, never
+    resumes from this one's results."""
+    tag = hashlib.sha256(f"{ROOT}\0{os.path.abspath(sf_dir)}".encode()).hexdigest()
+    return os.path.join(tempfile.gettempdir(), f"upflow_{tool}_partial_{tag[:16]}.jsonl")
+
+
+PARTIAL = partial_path("driver_sim", SF_DIR)
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -125,10 +139,7 @@ def main() -> None:
     # durable per-key artifact (VERDICT r4 item 5): the driver has only ever
     # sampled ~50 keys; this file is the committed proof for the rest
     rnd = os.environ.get("UPFLOW_ROUND", "r5")
-    art = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        f"CORRECTNESS_local_{rnd}.json",
-    )
+    art = os.path.join(ROOT, f"CORRECTNESS_local_{rnd}.json")
     import time as _time
 
     with open(art, "w") as fh:
@@ -160,4 +171,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:] == ["--partial"]:
+        print(PARTIAL)
+    else:
+        main()

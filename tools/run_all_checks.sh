@@ -23,8 +23,11 @@ cd "$(dirname "$0")/.."
 echo "=== 0/7 fixture drift check (roundcheck) ==="
 python tools/roundcheck.py
 
+SIM_SF=/root/testdata/sf0.001
+
 echo "=== 1/7 clear stale sweep partials ==="
-rm -f /tmp/upflow_driver_sim_partial.jsonl /tmp/upflow_bench_detail_partial.jsonl
+rm -f "$(SPARK_GRAFT_SF_DIR=$SIM_SF python tools/driver_sim.py --partial)" \
+  "$(python tools/bench_all.py --partial)"
 
 echo "=== 2/7 pytest (chunked) ==="
 python -m pytest tests/test_oracle.py -x -q
@@ -35,7 +38,7 @@ python -m pytest tests/ -x -q --ignore=tests/test_oracle.py \
 python -m pytest tests/test_fallbacks.py -m forced_sweep -x -q
 
 echo "=== 3/7 driver sim (vanilla session, full registry, sf0.001) ==="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python tools/driver_sim.py
+SPARK_GRAFT_SF_DIR=$SIM_SF python tools/driver_sim.py
 
 echo "=== 4/7 leak sweep ==="
 python tools/leakcheck.py

@@ -35,7 +35,8 @@ CC_LOCAL_MAX_EDGES = 1 << 22
 CORENESS_BCAST_NODES = 1 << 22
 
 # Broadcast budget for a packed matrix: the GEMM keys' bit-packed B operand
-# (n_docs × |V|/8 bytes) and the embedding index (n × d × 8 bytes). Under
+# (n_docs × |V|/8 bytes) and the embedding index (n × d × 8 bytes), read
+# only by pipeline/packed.py's pack, the one gate every pair kernel uses. Under
 # it the whole matrix broadcasts and the other side streams against it.
 # Past it the GEMM keys run over the A×B block grid and the embedding
 # verifies shuffle-gather candidate vectors by two equi-joins — memory per

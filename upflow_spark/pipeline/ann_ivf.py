@@ -1091,6 +1091,113 @@ NPROBE_POST = NPROBE + 1  # post-split routing probes one extra (sub)cell:
 # constant is the standard nprobe adjustment after a split cycle
 
 
+def _d2(a, b):  # noqa: ANN001, ANN202 — exact int64 squared distance
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda s, v: s + v,
+    )
+
+
+def _centroid_arr():  # noqa: ANN202 — grouped (…, pos, c) -> centroid array
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("pos", "c"))),
+        lambda s: s.getField("c"),
+    )
+
+
+def _lattice_cells(spark: SparkSession, sf_dir: str):
+    """The starting state both cell-maintenance keys act on: the persisted
+    (vec_id, label, unit emb, lattice ei) relation e, the per-label integer
+    centroids cent0 (cell, centroid), the checkpointed nearest-centroid
+    assignment asg (vec_id, cell), and the probe pv (p_ei, p) of vec_id 0.
+    The caller unpersists e."""
+    from upflow_spark.pipeline.similarity import _unit
+
+    e = (
+        load(spark, sf_dir, "embeddings")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(
+            "vec_id", "label", _unit("embedding").alias("emb"),
+            _lat("embedding").alias("ei"),
+        )
+        .persist()
+    )
+    cent0 = (
+        e.select("label", F.posexplode("ei").alias("pos", "v"))
+        .groupBy("label", "pos")
+        .agg(F.expr("sum(v) div count(1)").alias("c"))
+        .groupBy("label")
+        .agg(_centroid_arr().alias("centroid"))
+        .select(F.col("label").alias("cell"), "centroid")
+    )
+    wv = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
+    asg = (
+        e.crossJoin(F.broadcast(cent0))
+        .select("vec_id", "cell", _d2(F.col("ei"), F.col("centroid")).alias("d2"))
+        .withColumn("rn", F.row_number().over(wv))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cell")
+    ).localCheckpoint()  # read by sizes, membership, and both probes
+    pv = e.filter(F.col("vec_id") == 0).select(
+        F.col("ei").alias("p_ei"), F.col("emb").alias("p")
+    )
+    return e, cent0, asg, pv
+
+
+def _probe_cells(pv: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """The nprobe cells nearest the probe on the integer lattice."""
+    return (
+        cents.crossJoin(F.broadcast(pv.select("p_ei")))
+        .select("cell", _d2(F.col("centroid"), F.col("p_ei")).alias("d2"))
+        .orderBy(F.col("d2").asc(), F.col("cell").asc())
+        .limit(nprobe)
+        .select("cell")
+    )
+
+
+def _maintenance_report(
+    e: DataFrame, pv: DataFrame, state: str, membership: DataFrame,
+    cells: DataFrame, n_moved: DataFrame, n_cells: DataFrame,
+) -> DataFrame:
+    """One graded row: the probe's candidate bill over ``cells`` under
+    ``membership`` and its recall@10 hits against the exact top-10."""
+    cos = F.aggregate(
+        F.zip_with(F.col("emb"), F.col("p"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda s, v: s + v,
+    )
+
+    def top10(vecs: DataFrame) -> DataFrame:
+        return (
+            vecs.crossJoin(F.broadcast(pv.select("p")))
+            .select("vec_id", cos.alias("cos_raw"))
+            .orderBy(F.col("cos_raw").desc(), F.col("vec_id").asc())
+            .limit(TOP_K)
+            .select("vec_id")
+        )
+
+    exact10 = top10(e.filter(F.col("vec_id") != 0))
+    cand = membership.join(F.broadcast(cells), "cell", "semi").filter(
+        F.col("vec_id") != 0
+    )
+    top = top10(e.join(F.broadcast(cand.select("vec_id")), "vec_id", "semi"))
+    return (
+        cand.agg(F.count(F.lit(1)).alias("n_candidates"))
+        .crossJoin(
+            F.broadcast(
+                top.join(F.broadcast(exact10), "vec_id", "semi").agg(
+                    F.count(F.lit(1)).alias("n_hits10")
+                )
+            )
+        )
+        .crossJoin(F.broadcast(n_moved))
+        .crossJoin(F.broadcast(n_cells))
+        .withColumn("state", F.lit(state))
+        .select("state", "n_cells", "n_moved", "n_candidates", "n_hits10")
+    )
+
+
 def _cell_split_oracle() -> str:
     d2 = "sum((x.e - c.c) * (x.e - c.c))"
     cosp = _sql_cos("e.embedding", "pr.p")
@@ -1247,50 +1354,7 @@ def emb_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, and the recall gate is the same cheap fixed-probe canary
     the PQ ingest key keeps.
     """
-    from upflow_spark.pipeline.similarity import _unit
-
-    def d2(a, b):  # noqa: ANN001, ANN202 — exact int64 squared distance
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
-
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "vec_id", "label", _unit("embedding").alias("emb"),
-            _lat("embedding").alias("ei"),
-        )
-        .persist()
-    )
-
-    def to_arr(grouped):  # noqa: ANN001, ANN202 — (…, pos, c) -> centroid arr
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda s: s.getField("c"),
-        )
-
-    ex = e.select("label", F.posexplode("ei").alias("pos", "v"))
-    cent0 = (
-        ex.groupBy("label", "pos")
-        .agg(F.expr("sum(v) div count(1)").alias("c"))
-        .groupBy("label")
-        .agg(to_arr(None).alias("centroid"))
-        .select(F.col("label").alias("cell"), "centroid")
-    )
-    wv = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
-    asg = (
-        e.crossJoin(F.broadcast(cent0))
-        .select(
-            "vec_id", "cell", d2(F.col("ei"), F.col("centroid")).alias("d2")
-        )
-        .withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    )
-    asg = asg.localCheckpoint()  # read by sizes, membership, and both probes
+    e, cent0, asg, pv = _lattice_cells(spark, sf_dir)
     split_cells = (
         asg.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1311,7 +1375,7 @@ def emb_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     da = (
         mem.join(ev, "vec_id")
         .join(F.broadcast(seed_a.select("cell", "a_ei")), "cell")
-        .select("cell", "vec_id", "ei", d2(F.col("ei"), F.col("a_ei")).alias("d2a"))
+        .select("cell", "vec_id", "ei", _d2(F.col("ei"), F.col("a_ei")).alias("d2a"))
     )
     wc = Window.partitionBy("cell").orderBy(F.col("d2a").desc(), F.col("vec_id").asc())
     seed_b = (
@@ -1326,7 +1390,7 @@ def emb_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "ei",
             F.when(
-                F.col("d2a") <= d2(F.col("ei"), F.col("b_ei")), 0
+                F.col("d2a") <= _d2(F.col("ei"), F.col("b_ei")), 0
             ).otherwise(1).alias("side"),
         )
     ).localCheckpoint()  # read by subcent, asg1, and n_moved
@@ -1335,7 +1399,7 @@ def emb_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell", "side", "pos")
         .agg(F.expr("sum(v) div count(1)").alias("c"))
         .groupBy("cell", "side")
-        .agg(to_arr(None).alias("centroid"))
+        .agg(_centroid_arr().alias("centroid"))
         .select(
             F.when(F.col("side") == 0, F.col("cell"))
             .otherwise(F.col("cell") + SPLIT_OFF)
@@ -1355,58 +1419,6 @@ def emb_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("cell", "vec_id")
     )
 
-    pv = e.filter(F.col("vec_id") == 0).select(
-        F.col("ei").alias("p_ei"), F.col("emb").alias("p")
-    )
-
-    def probe_cells(cents, nprobe):  # noqa: ANN001, ANN202
-        return (
-            cents.crossJoin(F.broadcast(pv.select("p_ei")))
-            .select("cell", d2(F.col("centroid"), F.col("p_ei")).alias("d2"))
-            .orderBy(F.col("d2").asc(), F.col("cell").asc())
-            .limit(nprobe)
-            .select("cell")
-        )
-
-    cos = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("p"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    exact10 = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(pv.select("p")))
-        .select("vec_id", cos.alias("cos_raw"))
-        .orderBy(F.col("cos_raw").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-        .select("vec_id")
-    )
-
-    def report(state, membership, cells, n_moved_df):  # noqa: ANN001, ANN202
-        cand = membership.join(F.broadcast(cells), "cell", "semi").filter(
-            F.col("vec_id") != 0
-        )
-        top = (
-            e.join(F.broadcast(cand.select("vec_id")), "vec_id", "semi")
-            .crossJoin(F.broadcast(pv.select("p")))
-            .select("vec_id", cos.alias("cos_raw"))
-            .orderBy(F.col("cos_raw").desc(), F.col("vec_id").asc())
-            .limit(TOP_K)
-            .select("vec_id")
-        )
-        return (
-            cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-            .crossJoin(
-                F.broadcast(
-                    top.join(F.broadcast(exact10), "vec_id", "semi").agg(
-                        F.count(F.lit(1)).alias("n_hits10")
-                    )
-                )
-            )
-            .crossJoin(F.broadcast(n_moved_df))
-            .withColumn("state", F.lit(state))
-        )
-
     zero_moved = spark.range(1).select(
         F.lit(0).cast("long").alias("n_moved")
     )
@@ -1415,16 +1427,14 @@ def emb_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nc0 = cent0.agg(F.countDistinct("cell").alias("n_cells"))
     nc1 = cent1.agg(F.countDistinct("cell").alias("n_cells"))
-    pre = (
-        report("pre_split", asg, probe_cells(cent0, NPROBE), zero_moved)
-        .crossJoin(F.broadcast(nc0))
+    res = _maintenance_report(
+        e, pv, "pre_split", asg, _probe_cells(pv, cent0, NPROBE), zero_moved, nc0
+    ).unionByName(
+        _maintenance_report(
+            e, pv, "post_split", asg1, _probe_cells(pv, cent1, NPROBE_POST),
+            moved, nc1,
+        )
     )
-    post = (
-        report("post_split", asg1, probe_cells(cent1, NPROBE_POST), moved)
-        .crossJoin(F.broadcast(nc1))
-    )
-    cols = ["state", "n_cells", "n_moved", "n_candidates", "n_hits10"]
-    res = pre.select(*cols).unionByName(post.select(*cols))
     e.unpersist()
     return res
 
@@ -1546,51 +1556,7 @@ def emb_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     production IVF index runs on schedule, both semi-join scoped to the
     affected cells' members.
     """
-    from upflow_spark.pipeline.similarity import _unit
-
-    def d2(a, b):  # noqa: ANN001, ANN202
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
-
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "vec_id", "label", _unit("embedding").alias("emb"),
-            _lat("embedding").alias("ei"),
-        )
-        .persist()
-    )
-
-    def to_arr():  # noqa: ANN202
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda s: s.getField("c"),
-        )
-
-    ex = e.select("label", F.posexplode("ei").alias("pos", "v"))
-    cent0 = (
-        ex.groupBy("label", "pos")
-        .agg(F.expr("sum(v) div count(1)").alias("c"))
-        .groupBy("label")
-        .agg(to_arr().alias("centroid"))
-        .select(F.col("label").alias("cell"), "centroid")
-    )
-    wv = Window.partitionBy("vec_id").orderBy(
-        F.col("d2").asc(), F.col("cell").asc()
-    )
-    asg = (
-        e.crossJoin(F.broadcast(cent0))
-        .select(
-            "vec_id", "cell", d2(F.col("ei"), F.col("centroid")).alias("d2")
-        )
-        .withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    ).localCheckpoint()
+    e, cent0, asg, pv = _lattice_cells(spark, sf_dir)
     mc = (
         asg.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1606,7 +1572,7 @@ def emb_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("pos")
         .agg(F.expr("sum(v) div count(1)").alias("c"))
         .groupBy()
-        .agg(to_arr().alias("centroid"))
+        .agg(_centroid_arr().alias("centroid"))
         .crossJoin(F.broadcast(new_id))
         .select("cell", "centroid")
     )
@@ -1616,58 +1582,6 @@ def emb_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(new_id.select(F.col("cell").alias("nc"))))
         .select(F.col("nc").alias("cell"), "vec_id")
     )
-    pv = e.filter(F.col("vec_id") == 0).select(
-        F.col("ei").alias("p_ei"), F.col("emb").alias("p")
-    )
-
-    def probe_cells(cents):  # noqa: ANN001, ANN202
-        return (
-            cents.crossJoin(F.broadcast(pv.select("p_ei")))
-            .select("cell", d2(F.col("centroid"), F.col("p_ei")).alias("d2"))
-            .orderBy(F.col("d2").asc(), F.col("cell").asc())
-            .limit(NPROBE)
-            .select("cell")
-        )
-
-    cos = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("p"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    exact10 = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(pv.select("p")))
-        .select("vec_id", cos.alias("cos_raw"))
-        .orderBy(F.col("cos_raw").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-        .select("vec_id")
-    )
-
-    def report(state, membership, cells, n_moved_df, nc_df):  # noqa: ANN001, ANN202
-        cand = membership.join(F.broadcast(cells), "cell", "semi").filter(
-            F.col("vec_id") != 0
-        )
-        top = (
-            e.join(F.broadcast(cand.select("vec_id")), "vec_id", "semi")
-            .crossJoin(F.broadcast(pv.select("p")))
-            .select("vec_id", cos.alias("cos_raw"))
-            .orderBy(F.col("cos_raw").desc(), F.col("vec_id").asc())
-            .limit(TOP_K)
-            .select("vec_id")
-        )
-        return (
-            cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-            .crossJoin(
-                F.broadcast(
-                    top.join(F.broadcast(exact10), "vec_id", "semi").agg(
-                        F.count(F.lit(1)).alias("n_hits10")
-                    )
-                )
-            )
-            .crossJoin(F.broadcast(n_moved_df))
-            .crossJoin(F.broadcast(nc_df))
-            .withColumn("state", F.lit(state))
-        )
 
     zero_moved = spark.range(1).select(F.lit(0).cast("long").alias("n_moved"))
     moved = (
@@ -1677,14 +1591,11 @@ def emb_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nc0 = cent0.agg(F.countDistinct("cell").alias("n_cells"))
     nc1 = cent1.agg(F.countDistinct("cell").alias("n_cells"))
-    cols = ["state", "n_cells", "n_moved", "n_candidates", "n_hits10"]
-    res = (
-        report("pre_merge", asg, probe_cells(cent0), zero_moved, nc0)
-        .select(*cols)
-        .unionByName(
-            report("post_merge", asg1, probe_cells(cent1), moved, nc1).select(
-                *cols
-            )
+    res = _maintenance_report(
+        e, pv, "pre_merge", asg, _probe_cells(pv, cent0, NPROBE), zero_moved, nc0
+    ).unionByName(
+        _maintenance_report(
+            e, pv, "post_merge", asg1, _probe_cells(pv, cent1, NPROBE), moved, nc1
         )
     )
     e.unpersist()

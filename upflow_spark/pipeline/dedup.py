@@ -24,6 +24,7 @@ from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import memo
 from upflow_spark.parity import r4
+from upflow_spark.pipeline.packed import gather_pairs, pack, pair_cells
 from upflow_spark.pipeline.similarity import _cos, _sql_cos, _unit
 from upflow_spark.pipeline.text import SQL_TOKENS, bigram_struct_col, tokens_col
 from upflow_spark.registry import query
@@ -276,23 +277,6 @@ def _doc_bitmasks(spark, items: DataFrame):
     return masks, n_words
 
 
-def _pack_id_rows(ids_seq, width):
-    """Dense 0/1 bool matrix (len(ids_seq) × width) from term-ID arrays.
-
-    Consumes `term_ids` (array<long>, each id in [0, width)) produced by
-    _packed_corpus's distributed vocab join — the workers never see a
-    term→id dict at all, so there is no id-closure failure mode left: any
-    A stream is derived from the packed corpus DataFrame itself.
-    """
-    import numpy as np
-
-    m = np.zeros((len(ids_seq), width), dtype=bool)
-    for i, ids in enumerate(ids_seq):
-        if ids is not None and len(ids):
-            m[i, np.asarray(ids, dtype=np.int64)] = True
-    return m
-
-
 def _packed_corpus_cached(spark, sf_dir: str, kind: str, docs_builder):
     """_packed_corpus as a session memo, one entry per term kind.
     dedup_ngram_jaccard and dedup_containment build the IDENTICAL bigram
@@ -303,45 +287,6 @@ def _packed_corpus_cached(spark, sf_dir: str, kind: str, docs_builder):
         spark, sf_dir, "documents", f"corpus/{kind}",
         lambda: _packed_corpus(spark, docs_builder()),
     )
-
-
-def _pack_block_rows(docs_ids: DataFrame, n_vocab: int) -> DataFrame:
-    """Bit-pack (doc_id, term_ids) partitions into ONE ROW PER ARROW BATCH:
-    (ids int64-bytes, packed uint8-bytes, counts float64-bytes). The
-    block-row form is what both the broadcast assembly and the grid join
-    consume — a few-MB binary cell instead of per-doc rows."""
-    import numpy as np
-    import pandas as pd
-
-    n_bytes = (n_vocab + 7) // 8
-
-    def pack(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = _pack_id_rows(pdf["term_ids"], n_vocab)
-            yield pd.DataFrame(
-                {
-                    "ids": [pdf["doc_id"].to_numpy(np.int64).tobytes()],
-                    "packed": [np.packbits(m, axis=1)[:, :n_bytes].tobytes()],
-                    "counts": [m.sum(axis=1).astype(np.float64).tobytes()],
-                }
-            )
-
-    return docs_ids.mapInPandas(pack, "ids binary, packed binary, counts binary")
-
-
-def _unpack_block_row(ids_bin, packed_bin, counts_bin, n_vocab: int):
-    """Inverse of _pack_block_rows for one grid cell operand."""
-    import numpy as np
-
-    ids = np.frombuffer(ids_bin, dtype=np.int64)
-    n_bytes = (n_vocab + 7) // 8
-    mat = np.unpackbits(
-        np.frombuffer(packed_bin, dtype=np.uint8).reshape(len(ids), n_bytes), axis=1
-    )[:, :n_vocab].astype(np.float32)
-    counts = np.frombuffer(counts_bin, dtype=np.float64)
-    return ids, mat, counts
 
 
 def _dense_ids(spark, terms: DataFrame):
@@ -369,13 +314,12 @@ def _dense_vocab_ids(spark, docs: DataFrame):
 def _packed_corpus(spark, docs: DataFrame):
     """Distributed build of the bit-packed corpus matrix.
 
-    Returns (docs_ids, vocab_ids, B-operand): docs_ids is the checkpointed
+    Returns (docs_ids, vocab_ids, B operand): docs_ids is the checkpointed
     (doc_id, term_ids array<long>) relation both the A stream and the B
     pack consume; vocab_ids the distributed (t, tid) dense-id table; and
-    B-operand a broadcast of (ids, packed uint8 matrix, n_vocab, counts)
-    when the packed estimate fits ceilings.BROADCAST_MAX_BYTES, the grid
-    marker ("grid", block-row DataFrame, n_vocab) when it does not, or
-    None for an empty corpus.
+    the B operand the "bits" :class:`~upflow_spark.pipeline.packed.Packed`
+    of docs_ids, width n_vocab — broadcast or checkpointed block rows, as
+    packed.pack's one ceilings.BROADCAST_MAX_BYTES gate decides.
 
     Driver footprint is bounded, not constant. Under the vocab ceiling the
     driver collects the distinct terms — at most ceilings.VOCAB_BROADCAST_MAX_TERMS
@@ -385,10 +329,10 @@ def _packed_corpus(spark, docs: DataFrame):
     broadcast block (~100+ bytes per short term, so a few hundred MB at
     the 4M-term ceiling); that worst case is what the ceiling bounds. Past
     the ceiling, ids come from a distributed zipWithIndex joined by
-    shuffle and the driver holds n_vocab only. On the broadcast path the
-    driver also holds the packed BYTES the workers produce (n × |V|/8,
-    gated by ceilings.BROADCAST_MAX_BYTES BEFORE any byte ships); on the grid
-    path the matrix never converges anywhere at all.
+    shuffle and the driver holds n_vocab only. The pack itself collects
+    no rows: under the broadcast ceiling the driver holds the packed block
+    BYTES (one binary cell per worker batch, n × |V|/8 in all); past it
+    the matrix never converges anywhere at all.
     """
     import numpy as np
     import pandas as pd
@@ -463,40 +407,7 @@ def _packed_corpus(spark, docs: DataFrame):
             )
             .localCheckpoint()
         )
-    n_bytes = (n_vocab + 7) // 8
-
-    # size gate BEFORE any bytes head driver-ward: count on the
-    # checkpointed relation is a metadata-cheap job
-    n_docs = docs_ids.count()
-    if n_docs == 0:
-        return docs_ids, vocab_ids, None
-    if n_docs * n_bytes > ceilings.BROADCAST_MAX_BYTES:
-        b_blocks = _pack_block_rows(docs_ids, n_vocab).localCheckpoint()
-        return docs_ids, vocab_ids, ("grid", b_blocks, n_vocab)
-
-    # distributed B pack: workers bit-pack their own partitions; only the
-    # packed bytes travel to the driver
-    def pack(batches):
-        for pdf in batches:
-            m = _pack_id_rows(pdf["term_ids"], n_vocab)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(np.int64),
-                    "packed": [row.tobytes() for row in np.packbits(m, axis=1)],
-                    "n_items": m.sum(axis=1).astype(np.int64),
-                }
-            )
-
-    packed_rows = docs_ids.mapInPandas(
-        pack, "doc_id long, packed binary, n_items long"
-    ).collect()
-    ids = np.array([r["doc_id"] for r in packed_rows], dtype=np.int64)
-    packed = np.frombuffer(
-        b"".join(r["packed"] for r in packed_rows), dtype=np.uint8
-    ).reshape(len(packed_rows), n_bytes)
-    counts = np.array([r["n_items"] for r in packed_rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((ids, packed, n_vocab, counts))
-    return docs_ids, vocab_ids, bc
+    return docs_ids, vocab_ids, pack(spark, docs_ids, "bits", n_vocab)
 
 
 def _jaccard_pairs_gemm(
@@ -524,34 +435,30 @@ def _jaccard_pairs_gemm(
     Rows, assigned in sorted order and broadcast to a map-only id kernel
     (_packed_corpus has the driver-memory accounting); past it, from a
     DISTRIBUTED zipWithIndex joined by shuffle onto the exploded token
-    stream, with only n_vocab on the driver. The B-side bit matrix is packed
-    DISTRIBUTIVELY: an Arrow-batched mapInPandas turns each partition's
-    docs into bit-packed uint8 rows, and the driver assembles those bytes
-    (n × |V|/8 ≈ 0.6 MB at sf0.1) into the sc.broadcast operand — the
-    driver never materializes token arrays or Row objects, so its memory is
-    ∝ packed-matrix size, not corpus text. The A side STREAMS from the
-    parquet scan through the same mapInPandas kernel ((doc_id, terms)
-    batches → pack → one BLAS GEMM per block against broadcast B) — no
-    driver round-trip on the A path at all. At 100 TB this is the standard
-    block-distributed similarity matmul: broadcast the smaller packed
-    operand, stream the big side, grid-block both when neither fits.
+    stream, with only n_vocab on the driver. The B-side bit matrix is the
+    packed.pack operand of the id relation: workers bit-pack their
+    partitions into block rows and the driver assembles only those bytes
+    (n × |V|/8 ≈ 0.6 MB at sf0.1) — never token arrays or Row objects, so
+    its memory is ∝ packed-matrix size, not corpus text. The A side
+    STREAMS from the id relation through packed.pair_cells (one BLAS GEMM
+    per block against broadcast B) — no driver round-trip on the A path at
+    all. At 100 TB this is the standard block-distributed similarity
+    matmul: broadcast the smaller packed operand, stream the big side,
+    grid-block both when neither fits.
     """
     import numpy as np
     import pandas as pd
 
-    docs_ids, _vocab_ids, bc = (
+    docs_ids, _vocab_ids, op = (
         packed if packed is not None else _packed_corpus(spark, docs)
     )
-    if bc is None:
-        return spark.createDataFrame([], "doc_a long, doc_b long, jac_raw double")
     thr = float(threshold)
     directed = measure == "containment"
     blk = 512  # GEMM block rows: bounds the (blk × n_b_block) score slab
 
-    def score_block(a_ids_full, amat_full, b_ids, b_mat, b_counts):
+    def cell(a_ids_full, amat_full, b_ids, b_mat):
         """Yield pair frames for one A operand vs one B operand, in
-        512-row sub-blocks. Shared by the broadcast and grid kernels —
-        identical math, so path selection can never change results.
+        512-row sub-blocks — the one kernel both sides of the ceiling run.
 
         Memory discipline (r8): the pair grid is scored in FLOAT32 with a
         slightly-permissive prefilter (thr − 1e-4), and exact float64
@@ -563,7 +470,7 @@ def _jaccard_pairs_gemm(
         per-block temporaries drop ~3x (no float64 slabs over the full
         blk × n_b grid) and float64 work becomes ∝ emitted pairs — the
         allocation churn, not BLAS, dominated the sf1 kernel wall-time."""
-        b_counts32 = b_counts.astype(np.float32)
+        b_counts32 = b_mat.sum(axis=1, dtype=np.float32)
         for s in range(0, len(a_ids_full), blk):
             amat = amat_full[s : s + blk]
             a_ids = a_ids_full[s : s + blk]
@@ -593,51 +500,9 @@ def _jaccard_pairs_gemm(
                 }
             )
 
-    par = spark.sparkContext.defaultParallelism
-
-    if isinstance(bc, tuple) and bc[0] == "grid":
-        # grid fallback: B would not fit a broadcast — join packed A block
-        # rows against packed B block rows (cartesian over block ROWS, a
-        # few MB each, never over doc rows) and GEMM per grid cell. Data
-        # replication is A×n_b_blocks — the unavoidable cost of a
-        # similarity matmul whose operand exceeds single-process memory.
-        _, b_blocks, n_vocab = bc
-        a_blocks = _pack_block_rows(docs_ids.repartition(par), n_vocab)
-        grid = a_blocks.crossJoin(
-            b_blocks.select(
-                F.col("ids").alias("b_ids"),
-                F.col("packed").alias("b_packed"),
-                F.col("counts").alias("b_counts"),
-            )
-        )
-
-        def grid_kernel(batches):
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    a_ids, a_mat, _ = _unpack_block_row(
-                        row.ids, row.packed, row.counts, n_vocab
-                    )
-                    b_ids, b_mat, b_counts = _unpack_block_row(
-                        row.b_ids, row.b_packed, row.b_counts, n_vocab
-                    )
-                    yield from score_block(a_ids, a_mat, b_ids, b_mat, b_counts)
-
-        return grid.mapInPandas(grid_kernel, "doc_a long, doc_b long, jac_raw double")
-
-    def kernel(batches):
-        b_ids, b_packed, width, b_counts = bc.value
-        b_mat = np.unpackbits(b_packed, axis=1)[:, :width].astype(np.float32)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            amat_full = _pack_id_rows(pdf["term_ids"], width).astype(np.float32)
-            ids_full = pdf["doc_id"].to_numpy(np.int64)
-            yield from score_block(ids_full, amat_full, b_ids, b_mat, b_counts)
-
     # A side = the packed id relation itself, repartitioned for parallelism
-    return docs_ids.repartition(par).mapInPandas(
-        kernel, "doc_a long, doc_b long, jac_raw double"
-    )
+    a_rows = docs_ids.repartition(spark.sparkContext.defaultParallelism)
+    return pair_cells(op, a_rows, cell, "doc_a long, doc_b long, jac_raw double")
 
 
 def _jaccard_pairs_bitmask(spark, items: DataFrame, threshold: float) -> DataFrame:
@@ -828,32 +693,26 @@ def _cosine_pairs_gemm(spark, e: DataFrame, threshold: float) -> DataFrame:
     fold, so every cos_raw is bit-identical; no BLAS matmul is used
     precisely because its pairwise-blocked summation would reassociate.
 
-    Topology (the _packed_corpus rules): the B operand is packed
-    DISTRIBUTIVELY (mapInPandas → per-partition float64 blocks), and only
-    when n·d·8 fits ceilings.BROADCAST_MAX_BYTES do the packed bytes converge
-    on the driver for the sc.broadcast; past the ceiling the kernel runs
-    over the block-row grid instead and the matrix never converges
-    anywhere (test-forced; hash-identical output either way).
+    Topology: the raw vectors are the float64 packed.pack operand and the
+    A stream; each cell normalizes its two operands (O(n·d), against the
+    O(blk·n·d) scoring) so no normalized copy is materialized. Past
+    ceilings.BROADCAST_MAX_BYTES the same cell runs over the block-row
+    grid instead and the matrix never converges anywhere (test-forced;
+    hash-identical output either way).
     """
     import numpy as np
     import pandas as pd
 
-    par = spark.sparkContext.defaultParallelism
     thr = float(threshold)
-    n_vecs = e.count()
-    if n_vecs == 0:
-        return spark.createDataFrame([], "vec_a long, vec_b long, cos_raw double")
-    dim = len(e.limit(1).collect()[0]["embedding"])  # bounded: one row
 
-    def _norm_rows(pdf):
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        acc = np.zeros(len(ids), dtype=np.float64)
+    def unit(v):
+        acc = np.zeros(len(v), dtype=np.float64)
         for k in range(v.shape[1]):  # _unit's exact fold order
             acc = acc + v[:, k] * v[:, k]
-        return ids, v / np.sqrt(acc)[:, None]
+        return v / np.sqrt(acc)[:, None]
 
-    def _score(a_ids_full, amat_full, b_ids, bmat):
+    def cell(a_ids_full, a_raw, b_ids, b_raw):
+        amat_full, bmat = unit(a_raw), unit(b_raw)
         blk = 512  # bounds the (blk × n_b) float64 score slab
         for s in range(0, len(a_ids_full), blk):
             aid = a_ids_full[s : s + blk]
@@ -867,51 +726,8 @@ def _cosine_pairs_gemm(spark, e: DataFrame, threshold: float) -> DataFrame:
                 {"vec_a": aid[ai], "vec_b": b_ids[bi], "cos_raw": acc[ai, bi]}
             )
 
-    def pack_kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, v = _norm_rows(pdf)
-            yield pd.DataFrame({"ids": [ids.tobytes()], "mat": [v.tobytes()]})
-
-    src = e.repartition(par)
-    # the gate prices the MATRIX; assembly holds ~3x that transiently
-    # (see ceilings.BROADCAST_MAX_BYTES)
-    if n_vecs * dim * 8 <= ceilings.BROADCAST_MAX_BYTES:
-        rows = src.mapInPandas(pack_kernel, "ids binary, mat binary").collect()
-        b_ids = np.concatenate([np.frombuffer(r["ids"], np.int64) for r in rows])
-        bmat = np.concatenate(
-            [np.frombuffer(r["mat"], np.float64).reshape(-1, dim) for r in rows]
-        )
-        bc = spark.sparkContext.broadcast((b_ids, bmat))
-
-        def kernel(batches):
-            bi_ids, bimat = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, amat = _norm_rows(pdf)
-                yield from _score(ids, amat, bi_ids, bimat)
-
-        return src.mapInPandas(kernel, "vec_a long, vec_b long, cos_raw double")
-
-    # grid fallback: B would not fit a broadcast — all block-row pairs,
-    # each cell scored with the SAME kernel (a<b mask emits each pair once)
-    blocks = src.mapInPandas(pack_kernel, "ids binary, mat binary").localCheckpoint()
-    grid = blocks.crossJoin(
-        blocks.select(F.col("ids").alias("b_ids"), F.col("mat").alias("b_mat"))
-    )
-
-    def grid_kernel(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                a_ids = np.frombuffer(row.ids, np.int64)
-                amat = np.frombuffer(row.mat, np.float64).reshape(-1, dim)
-                g_ids = np.frombuffer(row.b_ids, np.int64)
-                gmat = np.frombuffer(row.b_mat, np.float64).reshape(-1, dim)
-                yield from _score(a_ids, amat, g_ids, gmat)
-
-    return grid.mapInPandas(grid_kernel, "vec_a long, vec_b long, cos_raw double")
+    v = e.repartition(spark.sparkContext.defaultParallelism)
+    return pair_cells(pack(spark, v, "f64"), v, cell, "vec_a long, vec_b long, cos_raw double")
 
 
 @query(
@@ -1178,9 +994,8 @@ def text_knn_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the "more like this" lookup, where the pair keys answer "what
     duplicates exist".
 
-    Same blocked-GEMM engine as the pair keys (r6: B matrix built
-    DISTRIBUTIVELY via _packed_corpus — the driver assembles packed bytes,
-    never token arrays) with the A side restricted to the probe rows,
+    Same blocked-GEMM engine as the pair keys (the _packed_corpus operand
+    — the driver assembles packed block bytes, never rows) with the A side restricted to the probe rows,
     STREAMED from the scan through the kernel: one (probe_block × n_docs)
     score slab per batch, top-3 inside the kernel — the full candidate row
     never leaves the worker. Only neighbors with jaccard > 0 qualify (the
@@ -1196,126 +1011,63 @@ def text_knn_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     docs = d.select("doc_id", F.array_distinct(tokens_col()).alias("terms"))
-    docs_ids, _vocab_ids, bc = _packed_corpus_cached(
+    docs_ids, _vocab_ids, op = _packed_corpus_cached(
         spark, sf_dir, "unigram", lambda: docs
     )
-    if bc is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rn long, jaccard double"
+
+    def cell(a_ids, amat, b_ids, b_mat):
+        a_counts = amat.sum(axis=1, dtype=np.float64)
+        b_counts = b_mat.sum(axis=1, dtype=np.float64)
+        inter = (amat @ b_mat.T).astype(np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            jac = inter / (a_counts[:, None] + b_counts[None, :] - inter)
+        jac[np.isnan(jac)] = -1.0
+        # exclude self; deterministic top-3 by (jaccard desc, id asc);
+        # only true-overlap neighbors (jaccard > 0) are candidates
+        out = {"query_id": [], "neighbor_id": [], "rn": [], "jaccard": []}
+        for qi in range(len(a_ids)):
+            row = jac[qi].copy()
+            row[b_ids == a_ids[qi]] = -1.0
+            order = np.lexsort((b_ids, -row))
+            rank = 0
+            for bi in order[:3]:
+                if row[bi] <= 0.0:
+                    break
+                rank += 1
+                out["query_id"].append(a_ids[qi])
+                out["neighbor_id"].append(b_ids[bi])
+                out["rn"].append(rank)
+                out["jaccard"].append(row[bi])
+        # explicit dtypes: an all-probes-filtered batch yields an empty
+        # frame whose object columns Arrow can't coerce to long
+        yield pd.DataFrame(
+            {
+                "query_id": np.asarray(out["query_id"], dtype=np.int64),
+                "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
+                "rn": np.asarray(out["rn"], dtype=np.int64),
+                "jaccard": np.asarray(out["jaccard"], dtype=np.float64),
+            }
         )
 
-    if isinstance(bc, tuple) and bc[0] == "grid":
-        # grid fallback (B beyond broadcast reach): the probe blocks meet
-        # every B block; each grid cell emits its LOCAL top-3 (>0 jaccard,
-        # non-self) — global top-3 ⊆ union of per-cell top-3 — and a tiny
-        # window over probes re-ranks the ≤ 3×n_blocks candidates/probe.
-        _, b_blocks, n_vocab = bc
-        probes = docs_ids.filter(F.col("doc_id") % 100 == 0).repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        a_blocks = _pack_block_rows(probes, n_vocab)
-        grid = a_blocks.crossJoin(
-            b_blocks.select(
-                F.col("ids").alias("b_ids"),
-                F.col("packed").alias("b_packed"),
-                F.col("counts").alias("b_counts"),
-            )
-        )
-
-        def cell_kernel(batches):
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    a_ids, a_mat, a_counts = _unpack_block_row(
-                        row.ids, row.packed, row.counts, n_vocab
-                    )
-                    b_ids, b_mat, b_counts = _unpack_block_row(
-                        row.b_ids, row.b_packed, row.b_counts, n_vocab
-                    )
-                    inter = (a_mat @ b_mat.T).astype(np.float64)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        jac = inter / (a_counts[:, None] + b_counts[None, :] - inter)
-                    jac[np.isnan(jac)] = -1.0
-                    out = {"query_id": [], "neighbor_id": [], "jaccard": []}
-                    for qi in range(len(a_ids)):
-                        r = jac[qi].copy()
-                        r[b_ids == a_ids[qi]] = -1.0
-                        order = np.lexsort((b_ids, -r))
-                        for bi in order[:3]:
-                            if r[bi] <= 0.0:
-                                break
-                            out["query_id"].append(a_ids[qi])
-                            out["neighbor_id"].append(b_ids[bi])
-                            out["jaccard"].append(r[bi])
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                            "neighbor_id": np.asarray(
-                                out["neighbor_id"], dtype=np.int64
-                            ),
-                            "jaccard": np.asarray(out["jaccard"], dtype=np.float64),
-                        }
-                    )
-
+    probes = docs_ids.filter(F.col("doc_id") % 100 == 0).repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    res = pair_cells(
+        op, probes, cell, "query_id long, neighbor_id long, rn long, jaccard double"
+    )
+    if op.bc is None:
+        # each grid cell ranked one B block: the global top-3 is inside the
+        # union of the per-block top-3s, so a window over those (≤ 3 ×
+        # n_blocks per probe) re-ranks them. Against the broadcast the
+        # cell saw all of B and its rank is already the global one.
         from pyspark.sql import Window
 
-        cand = grid.mapInPandas(
-            cell_kernel, "query_id long, neighbor_id long, jaccard double"
-        )
         w = Window.partitionBy("query_id").orderBy(
             F.col("jaccard").desc(), F.col("neighbor_id").asc()
         )
-        return (
-            cand.withColumn("rn", F.row_number().over(w).cast("long"))
-            .filter(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id", "rn", r4("jaccard").alias("jaccard"))
+        res = res.withColumn("rn", F.row_number().over(w).cast("long")).filter(
+            F.col("rn") <= 3
         )
-
-    def kernel(batches):
-        b_ids, b_packed, width, b_counts = bc.value
-        b_mat = np.unpackbits(b_packed, axis=1)[:, :width].astype(np.float32)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            amat = _pack_id_rows(pdf["term_ids"], width).astype(np.float32)
-            a_ids = pdf["doc_id"].to_numpy(np.int64)
-            a_counts = amat.sum(axis=1).astype(np.float64)
-            inter = (amat @ b_mat.T).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                jac = inter / (a_counts[:, None] + b_counts[None, :] - inter)
-            jac[np.isnan(jac)] = -1.0
-            # exclude self; deterministic top-3 by (jaccard desc, id asc);
-            # only true-overlap neighbors (jaccard > 0) are candidates
-            out = {"query_id": [], "neighbor_id": [], "rn": [], "jaccard": []}
-            for qi in range(len(a_ids)):
-                row = jac[qi].copy()
-                row[b_ids == a_ids[qi]] = -1.0
-                order = np.lexsort((b_ids, -row))
-                rank = 0
-                for bi in order[:3]:
-                    if row[bi] <= 0.0:
-                        break
-                    rank += 1
-                    out["query_id"].append(a_ids[qi])
-                    out["neighbor_id"].append(b_ids[bi])
-                    out["rn"].append(rank)
-                    out["jaccard"].append(row[bi])
-            # explicit dtypes: an all-probes-filtered batch yields an empty
-            # frame whose object columns Arrow can't coerce to long
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                    "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                    "rn": np.asarray(out["rn"], dtype=np.int64),
-                    "jaccard": np.asarray(out["jaccard"], dtype=np.float64),
-                }
-            )
-
-    par = spark.sparkContext.defaultParallelism
-    res = (
-        docs_ids.filter(F.col("doc_id") % 100 == 0)
-        .repartition(par)
-        .mapInPandas(kernel, "query_id long, neighbor_id long, rn long, jaccard double")
-    )
     return res.select("query_id", "neighbor_id", "rn", r4("jaccard").alias("jaccard"))
 
 
@@ -1329,16 +1081,11 @@ def ann_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from upflow_spark.pipeline.similarity import (
-        _unit,
-        gather_pair_vectors,
-        lsh_candidates,
-        packed_embeddings_cached,
-    )
+    from upflow_spark.pipeline.similarity import lsh_candidates, packed_embeddings_cached
 
     par = spark.sparkContext.defaultParallelism
     cand = lsh_candidates(spark, sf_dir).select("vec_a", "vec_b")
-    bc_unit = packed_embeddings_cached(
+    op = packed_embeddings_cached(
         spark,
         sf_dir,
         "unit",
@@ -1346,37 +1093,6 @@ def ann_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(par)
         .select("vec_id", _unit("embedding").alias("emb")),
     )
-    cos_gate_j = 1.0 - 1.35 * 1.35 / 2.0
-    if isinstance(bc_unit, tuple) and bc_unit[0] == "join":
-        # past-ceiling path (r10): shuffle-gather both unit vectors onto
-        # each candidate row. The float32 prefilter exists only to halve
-        # broadcast-matrix gather traffic, and it is a superset gate with
-        # a margin far wider than its error — skipping it here leaves the
-        # exact-float64 keep set, and hence the output, byte-identical.
-        def verify_g(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                if pdf["emb_a"].isna().any() or pdf["emb_b"].isna().any():
-                    raise ValueError(
-                        "candidate vec_id absent from embedding relation - "
-                        "candidate source is not id-closed over the pack"
-                    )
-                A = np.stack(pdf["emb_a"].to_numpy())
-                B = np.stack(pdf["emb_b"].to_numpy())
-                cos = np.einsum("ij,ij->i", A, B)
-                keep = cos > cos_gate_j
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vec_a"].to_numpy(np.int64)[keep],
-                        "vec_b": pdf["vec_b"].to_numpy(np.int64)[keep],
-                        "cos_raw": cos[keep],
-                    }
-                )
-
-        return gather_pair_vectors(cand, bc_unit[1], bc_unit[2]).mapInPandas(
-            verify_g, "vec_a long, vec_b long, cos_raw double"
-        )
     # ann_lsh_pairs' raw-L2 gate, in cosine form: the fixture embeddings
     # are unit-norm to float32 precision (measured max |.v.-1| = 1.2e-7),
     # so dist < 1.35 <=> cos > 1 - 1.35^2/2 up to that band - ONE matrix
@@ -1386,57 +1102,30 @@ def ann_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # above the gate, so the VERIFIED set is unaffected either way.
     cos_gate = 1.0 - 1.35 * 1.35 / 2.0
 
-    def verify(batches):
-        u_ids, u_mat = bc_unit.value
-        # float32 prefilter pack (the dedup_containment pattern): the 1.39M
-        # candidate gathers dominate kernel time; scoring them in float32
-        # halves the memory traffic, and only the gate-superset survivors
-        # (+-1e-4 margin >> the ~1e-6 accumulated float32 error over 64
-        # dims) are re-scored exactly in float64 - output bit-identical.
-        u32 = u_mat.astype(np.float32)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            want_a = pdf["vec_a"].to_numpy(np.int64)
-            want_b = pdf["vec_b"].to_numpy(np.int64)
-            # empty pack + non-empty candidates: clip(max=-1) would gather
-            # with index -1 and raise an opaque IndexError before the
-            # closure ValueError below - short-circuit with the same error
-            if len(u_ids) == 0:
-                raise ValueError(
-                    "candidate vec_id absent from packed embedding matrix - "
-                    "candidate source is not id-closed over the pack"
-                )
-            a = np.searchsorted(u_ids, want_a).clip(max=len(u_ids) - 1)
-            b = np.searchsorted(u_ids, want_b).clip(max=len(u_ids) - 1)
-            # id-closure check: a candidate id absent from the packed
-            # matrix would otherwise silently score against the wrong row
-            if not (
-                np.array_equal(u_ids[a], want_a) and np.array_equal(u_ids[b], want_b)
-            ):
-                raise ValueError(
-                    "candidate vec_id absent from packed embedding matrix - "
-                    "candidate source is not id-closed over the pack"
-                )
-            # one unit-cosine pass serves BOTH stages: the L2 candidate
-            # gate (cosine form, see cos_gate above) and the 0.40 dedup
-            # verify downstream (the brute-force math)
-            pre = (
-                np.einsum("ij,ij->i", u32[a], u32[b]).astype(np.float64)
-                > cos_gate - 1e-4
-            )
-            pa, pb = a[pre], b[pre]
-            cos = np.einsum("ij,ij->i", u_mat[pa], u_mat[pb]).astype(np.float64)
-            keep = cos > cos_gate
-            yield pd.DataFrame(
-                {
-                    "vec_a": want_a[pre][keep],
-                    "vec_b": want_b[pre][keep],
-                    "cos_raw": cos[keep],
-                }
-            )
+    def verify(pdf, take):
+        # float32 prefilter (the dedup_containment pattern): the 1.39M
+        # candidate gathers dominate kernel time; gathering them from the
+        # task's float32 copy of the broadcast halves the memory traffic,
+        # and only the gate-superset survivors (+-1e-4 margin >> the ~1e-6
+        # accumulated float32 error over 64 dims) are re-scored exactly in
+        # float64 - output bit-identical. One unit-cosine pass serves BOTH
+        # stages: the L2 candidate gate (cosine form, see cos_gate above)
+        # and the 0.40 dedup verify downstream (the brute-force math).
+        pre = (
+            np.einsum("ij,ij->i", *take(dtype=np.float32)).astype(np.float64)
+            > cos_gate - 1e-4
+        )
+        cos = np.einsum("ij,ij->i", *take(pre)).astype(np.float64)
+        keep = cos > cos_gate
+        return pd.DataFrame(
+            {
+                "vec_a": pdf["vec_a"].to_numpy(np.int64)[pre][keep],
+                "vec_b": pdf["vec_b"].to_numpy(np.int64)[pre][keep],
+                "cos_raw": cos[keep],
+            }
+        )
 
-    return cand.mapInPandas(verify, "vec_a long, vec_b long, cos_raw double")
+    return gather_pairs(op, cand, verify, "vec_a long, vec_b long, cos_raw double")
 
 
 @query("emb_dedup_ann_verified")  # rows-only: candidates come from LSH buckets
@@ -1458,9 +1147,10 @@ def emb_dedup_ann_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (checkpoint write + extra Arrow round-trip per query, and a re-fit of
     the LSH model per call — measured 3.4-5.3 s clean-session at sf0.1);
     fused + signature-index-cached it is one candidate stream, no
-    intermediate relation anywhere. The packed matrix is built
-    distributively (mapInPandas packs rows per partition; the driver
-    assembles bytes only — the _packed_corpus contract).
+    intermediate relation anywhere. The packed matrix is the float64
+    packed.pack operand (workers pack block rows; the driver assembles
+    block bytes only), and packed.gather_pairs runs the one verify
+    against it on either side of the broadcast ceiling.
 
     Summary-row output (candidate count, verified count, order-insensitive
     checksum, mean cosine); tests/test_ops.py floors the recall of the

@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from upflow_spark import ceilings
 from upflow_spark.io import load
 from upflow_spark.memo import memo
 from upflow_spark.parity import R4, r4
+from upflow_spark.pipeline.packed import gather_pairs, pack
 from upflow_spark.registry import query
 
 # cosine similarity between two double arrays, Spark side.
@@ -246,24 +246,6 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def gather_pair_vectors(cand: DataFrame, e: DataFrame, emb_col: str = "emb") -> DataFrame:
-    """Distributed gather for candidate pairs: attach both endpoint vectors
-    to each (vec_a, vec_b) row via two equi-joins against the (vec_id, emb)
-    relation — the scale path when the packed matrix exceeds
-    ceilings.BROADCAST_MAX_BYTES. LEFT joins so an id absent from the relation
-    surfaces as a NULL the kernel can turn into the id-closure error the
-    broadcast path raises (an inner join would silently drop the pair)."""
-    return cand.join(
-        e.select(F.col("vec_id").alias("vec_a"), F.col(emb_col).alias("emb_a")),
-        "vec_a",
-        "left",
-    ).join(
-        e.select(F.col("vec_id").alias("vec_b"), F.col(emb_col).alias("emb_b")),
-        "vec_b",
-        "left",
-    )
-
-
 def packed_embeddings_cached(
     spark: SparkSession, sf_dir: str, kind: str, e_builder, emb_col: str = "emb"
 ):
@@ -278,64 +260,20 @@ def packed_embeddings_cached(
 
 
 def packed_embeddings(spark: SparkSession, e: DataFrame, emb_col: str = "emb"):
-    """Distributed build of a broadcast (sorted vec_ids, float64 matrix),
-    CEILING-GATED (r10 — closes the r9 verdict's last driver-OOM flag).
+    """The float64 packed.pack operand of a (vec_id, emb_col) relation.
 
-    Workers pack their partitions' vectors to raw float64 rows in
-    mapInPandas; the driver assembles BYTES only (n × d × 8 ≈ 51 MB at the
-    10× probe) — never Row objects — the same bounded-build-side contract
-    as a broadcast hash join (and as _packed_corpus in pipeline/dedup.py).
-
-    The size gate runs BEFORE any bytes head driver-ward (count + one-row
-    dim probe on the checkpointed relation): past ceilings.BROADCAST_MAX_BYTES
-    the function returns the ("join", relation) marker and callers
-    shuffle-gather candidate vectors with gather_pair_vectors instead —
-    at 100 TB the matrix never converges anywhere.
+    Workers pack their partitions' vectors into float64 block rows; the
+    driver collects only those block bytes (n × d × 8 ≈ 51 MB at the 10×
+    probe), never one Row per vector — the same bounded-build-side
+    contract as a broadcast hash join. packed.pack's one
+    ceilings.BROADCAST_MAX_BYTES gate prices the matrix BEFORE any byte
+    heads driver-ward; past it the checkpointed block relation stays
+    distributed and packed.gather_pairs shuffle-gathers each candidate's
+    vectors from it instead — at 100 TB the matrix never converges
+    anywhere.
     """
-    import numpy as np
-    import pandas as pd
-
-    # checkpoint: the relation is read up to three times (count, dim
-    # probe, pack/joins) and, on the join path, by both gather joins
-    e = e.localCheckpoint()
-    n = e.count()
-    if n:
-        # dim via an aggregate (not head()[0]): robust to a null embedding
-        # in the first row and to ragged corpora — the gate must see the
-        # WIDEST row, whichever partition it lives in
-        d = e.select(F.max(F.size(F.col(emb_col))).alias("d")).head()["d"] or 0
-        if n * d * 8 > ceilings.BROADCAST_MAX_BYTES:
-            return ("join", e, emb_col)
-
-    def pack(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "row": [r.tobytes() for r in m],
-                }
-            )
-
-    packed = e.select("vec_id", emb_col).mapInPandas(
-        pack, "vec_id long, row binary"
-    ).collect()
-    if not packed:
-        # empty relation: reshape(0, -1) would raise (ambiguous dim);
-        # broadcast an explicit empty index so callers emit zero pairs
-        return spark.sparkContext.broadcast(
-            (np.empty(0, dtype=np.int64), np.empty((0, 0), dtype=np.float64))
-        )
-    ids = np.array([r["vec_id"] for r in packed], dtype=np.int64)
-    mat = np.frombuffer(b"".join(r["row"] for r in packed), dtype=np.float64).reshape(
-        len(packed), -1
-    )
-    order = np.argsort(ids)
-    return spark.sparkContext.broadcast(
-        (ids[order], np.ascontiguousarray(mat[order]))
-    )
+    # checkpoint: the gate reads the relation twice (count, pack)
+    return pack(spark, e.select("vec_id", emb_col).localCheckpoint(), "f64")
 
 
 def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,8 +358,8 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost on a replica-degenerate corpus — measured 300 s for 35.5M
     candidates at the 10× probe. Candidates come from lsh_candidates
     (bucket self-joins, session-cached signature index); the L2 verify is
-    a numpy gather+einsum over the broadcast packed matrix — exact same
-    math, BLAS-speed, candidates never converge.
+    a numpy gather+einsum over the packed matrix (packed.gather_pairs) —
+    exact same math, BLAS-speed, candidates never converge.
 
     The 1.35 threshold: embeddings are unit-norm (max pairwise L2 = 2.0),
     so a loose threshold would admit EVERY pair — an O(n²) join in
@@ -434,7 +372,7 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = lsh_candidates(spark, sf_dir)
     par = spark.sparkContext.defaultParallelism
-    bc = packed_embeddings_cached(
+    op = packed_embeddings_cached(
         spark,
         sf_dir,
         "raw",
@@ -444,74 +382,20 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", _dbl("embedding").alias("emb")),
     )
 
-    if isinstance(bc, tuple) and bc[0] == "join":
-        # past-ceiling path: shuffle-gather both endpoint vectors onto each
-        # candidate row; the kernel is per-pair independent float64 einsum,
-        # so values are byte-identical to the broadcast gather
-        def verify_g(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                if pdf["emb_a"].isna().any() or pdf["emb_b"].isna().any():
-                    raise ValueError(
-                        "candidate vec_id absent from embedding relation — "
-                        "candidate source is not id-closed over the pack"
-                    )
-                A = np.stack(pdf["emb_a"].to_numpy())
-                B = np.stack(pdf["emb_b"].to_numpy())
-                diff = A - B
-                dist = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-                keep = dist < 1.35
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vec_a"].to_numpy(np.int64)[keep],
-                        "vec_b": pdf["vec_b"].to_numpy(np.int64)[keep],
-                        "l2_dist": dist[keep],
-                    }
-                )
-
-        pairs = gather_pair_vectors(cand, bc[1], bc[2]).mapInPandas(
-            verify_g, "vec_a long, vec_b long, l2_dist double"
+    def verify(pdf, take):
+        A, B = take()
+        diff = A - B
+        dist = np.sqrt(np.einsum("ij,ij->i", diff, diff))
+        keep = dist < 1.35  # approxSimilarityJoin's strict threshold
+        return pd.DataFrame(
+            {
+                "vec_a": pdf["vec_a"].to_numpy(np.int64)[keep],
+                "vec_b": pdf["vec_b"].to_numpy(np.int64)[keep],
+                "l2_dist": dist[keep],
+            }
         )
-        return pairs.select("vec_a", "vec_b", r4(F.col("l2_dist")).alias("l2_dist"))
 
-    def verify(batches):
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            want_a = pdf["vec_a"].to_numpy(np.int64)
-            want_b = pdf["vec_b"].to_numpy(np.int64)
-            # empty pack + non-empty candidates: clip(max=-1) would raise
-            # an opaque IndexError — short-circuit with the closure error
-            if len(b_ids) == 0:
-                raise ValueError(
-                    "candidate vec_id absent from packed embedding matrix — "
-                    "candidate source is not id-closed over the pack"
-                )
-            ai = np.searchsorted(b_ids, want_a).clip(max=len(b_ids) - 1)
-            bi = np.searchsorted(b_ids, want_b).clip(max=len(b_ids) - 1)
-            # id-closure check (see emb_dedup_ann_verified): absent ids
-            # would silently gather the wrong rows
-            if not (
-                np.array_equal(b_ids[ai], want_a) and np.array_equal(b_ids[bi], want_b)
-            ):
-                raise ValueError(
-                    "candidate vec_id absent from packed embedding matrix — "
-                    "candidate source is not id-closed over the pack"
-                )
-            diff = b_mat[ai] - b_mat[bi]
-            dist = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-            keep = dist < 1.35  # approxSimilarityJoin's strict threshold
-            yield pd.DataFrame(
-                {
-                    "vec_a": pdf["vec_a"].to_numpy(np.int64)[keep],
-                    "vec_b": pdf["vec_b"].to_numpy(np.int64)[keep],
-                    "l2_dist": dist[keep],
-                }
-            )
-
-    pairs = cand.mapInPandas(verify, "vec_a long, vec_b long, l2_dist double")
+    pairs = gather_pairs(op, cand, verify, "vec_a long, vec_b long, l2_dist double")
     return pairs.select("vec_a", "vec_b", r4(F.col("l2_dist")).alias("l2_dist"))
 
 
